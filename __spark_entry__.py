@@ -243,14 +243,12 @@ def q_media_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal feature extraction as a verified operator: decode ->
+    """Image feature extraction as a verified operator: decode ->
     dims + mean luminance + ink ratio, matched against atlas-popcount
     arithmetic (even pixel statistics are formula-checkable)."""
-    from easyocr_spark.sources import multimodal
-
     refs = _distinct_media(spark, sf_dir)
     return refs.mapInPandas(
-        multimodal.image_features, schema=multimodal.IMAGE_META_SCHEMA
+        udfs.image_features, schema=udfs.IMAGE_META_SCHEMA
     ).select("media_ref", "width", "height", "mean_luma", "ink_ratio_milli")
 
 

@@ -1,7 +1,8 @@
 """Pluggable OCR backends.
 
 The engine ships two interchangeable backends behind the Reader plug
-points (ocr/reader.py detect strategy, ocr/udfs.py executor singleton):
+points (ocr/reader.py detect strategy, the ocr/udfs.get_reader executor
+singleton):
 
 - ``standin`` (default): the deterministic numpy detector/recognizer —
   the only executable path in this sandbox (no torch) and the one the
@@ -13,8 +14,8 @@ points (ocr/reader.py detect strategy, ocr/udfs.py executor singleton):
   torch`` succeeds AND the md5-pinned weight files are present
   (reference easyocr/config.py:11-27 pins them). On a cluster the .pth
   files ship via ``spark-submit --files`` and land in the working dir
-  of every executor; the singleton pattern in ocr/udfs.py then loads
-  them once per Python worker process.
+  of every executor; ocr/udfs.get_reader then loads them once per
+  (decoder, allowlist, lang) config in each Python worker process.
 
 Selection: ``EASYOCR_SPARK_BACKEND=torch`` env var (read once per
 worker) or an explicit ``backend=`` argument. Missing torch or missing

@@ -1,7 +1,8 @@
 """Torch-backed Reader facade — same interface as StandInReader.
 
 detect/recognize/readtext/readtext_text mirror ocr/reader.py so
-ocr/udfs.py kernels work with either backend unchanged: the ONLY
+the ocr/udfs.py kernels (every one built on image_kernel, every reader
+fetched through get_reader) work with either backend unchanged: the ONLY
 differences are the score-map producer (real CRAFT) and the [T, C]
 probability producer (real CRNN). Grouping, min-size filtering,
 four-point warping, paragraph assembly, CTC decoding, and RTL routing

@@ -1451,8 +1451,8 @@ def winnowing_fingerprints(
     from the explode and pushes it below every staged projection,
     re-inlining the whole fold chain into the filter (observed as a
     hard hang at 500 docs; the same query with that rule excluded ran
-    in 9.5 s). Per-doc numpy is the same Arrow-batch pattern as the OCR
-    and multimodal kernels: code points via one utf-32 decode, k-gram
+    in 9.5 s). Per-doc numpy is the same Arrow-batch pattern as the image
+    kernels in ocr/udfs.py: code points via one utf-32 decode, k-gram
     hashes as k vectorized fused-multiply-mod passes (bit-identical to
     the left fold ``(acc*131 + c) % (2^31-1)`` the SQL oracle runs),
     sliding-window min via a stride-tricks view.

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ocr.udfs import OCR_RESULT_SCHEMA, make_ocr_batches, ocr_batches
+from ..ocr.udfs import OCR_RESULT_SCHEMA, make_ocr_batches
 
 SPAN_COLS = ["doc_id", "offset", "kind", "text", "media_ref"]
 
@@ -89,12 +89,8 @@ def ocr_media_refs(
         .distinct()
     )
     with_bytes = refs.join(media, "media_ref", "inner")
-    if decoder == "greedy" and allowlist is None:
-        kernel = ocr_batches
-    else:
-        kernel = make_ocr_batches(decoder, allowlist)
     return with_bytes.repartition(n, "media_ref").mapInPandas(
-        kernel, schema=OCR_RESULT_SCHEMA
+        make_ocr_batches(decoder, allowlist), schema=OCR_RESULT_SCHEMA
     )
 
 

@@ -81,7 +81,7 @@ def get_spark(
         # pathology does not reproduce on Spark 4.1 — likely fixed by
         # the same-round OMP single-thread pinning below). Reused
         # workers keep imports AND the module-level reader singleton
-        # (ocr/udfs._READERS) across tasks, which is the intended
+        # (ocr/udfs.get_reader -> _READERS) across tasks, the intended
         # executor-resident-model design; fresh workers paid the
         # import + atlas tax once per task.
         .config("spark.python.worker.reuse", "true")

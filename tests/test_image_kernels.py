@@ -1,0 +1,73 @@
+"""The image-kernel harness in ocr/udfs.py, driven without Spark: every
+kernel's output frame matches its schema string, and a decode failure
+names the media_ref that caused it."""
+
+import pandas as pd
+import pytest
+
+from easyocr_spark.fixtures import corpus
+from easyocr_spark.ocr import udfs
+
+# one plain latin, one slanted latin and one arabic (RTL) image
+REFS = ["m_3_0", "m_0_3", "m_2_0"]
+
+KERNELS = {
+    "ocr": (udfs.ocr_batches, udfs.OCR_RESULT_SCHEMA),
+    "ocr_beamsearch": (udfs.make_ocr_batches("beamsearch"), udfs.OCR_RESULT_SCHEMA),
+    "detect": (udfs.detect_batches, udfs.DETECT_RESULT_SCHEMA),
+    "detect_free": (udfs.detect_free_batches, udfs.DETECT_FREE_SCHEMA),
+    "detect_smooth": (udfs.detect_smooth_batches, udfs.DETECT_SMOOTH_SCHEMA),
+    "detect_poly": (udfs.detect_poly_batches, udfs.DETECT_POLY_SCHEMA),
+    "detect_smooth_poly": (
+        udfs.detect_smooth_poly_batches, udfs.DETECT_SMOOTH_POLY_SCHEMA
+    ),
+    "paragraph": (udfs.paragraph_batches, udfs.PARAGRAPH_RESULT_SCHEMA),
+    "dims": (udfs.dims_batches, udfs.DIMS_RESULT_SCHEMA),
+    "channels": (udfs.channels_batches, udfs.CHANNELS_RESULT_SCHEMA),
+    "image_features": (udfs.image_features, udfs.IMAGE_META_SCHEMA),
+    "resize": (udfs.make_image_resizer(64), udfs.RESIZE_SCHEMA),
+}
+
+
+def _batch(refs: list[str]) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "media_ref": refs,
+            "content": [corpus.render_media(r) for r in refs],
+            "lang": [corpus.media_spec(r)["lang"] for r in refs],
+        }
+    )
+
+
+def test_cases_cover_image_classes_and_schemas():
+    specs = [corpus.media_spec(r) for r in REFS]
+    assert [s["slant_dy"] > 0 for s in specs] == [False, True, False]
+    assert [s["lang"] for s in specs] == ["latin", "latin", "arabic"]
+    schemas = {v for k, v in vars(udfs).items() if k.endswith("_SCHEMA")}
+    assert schemas == {schema for _, schema in KERNELS.values()}
+
+
+@pytest.mark.parametrize("name", sorted(KERNELS))
+def test_kernel_output_matches_schema(name):
+    kernel, schema = KERNELS[name]
+    fields = [f.split()[0] for f in schema.split(",")]
+    out = pd.concat(list(kernel(iter([_batch(REFS)]))))
+    assert list(out.columns) == fields
+    assert set(out["media_ref"]) <= set(REFS)
+    empty = list(kernel(iter([_batch([])])))
+    assert len(empty) == 1 and empty[0].empty
+    assert list(empty[0].columns) == fields
+
+
+def test_decode_failure_names_its_media_ref():
+    good = corpus.render_media("m_3_0")
+    batch = pd.DataFrame(
+        {
+            "media_ref": ["m_3_0", "m_empty", "m_truncated"],
+            "content": [good, b"", good[: len(good) // 2]],
+        }
+    )
+    with pytest.raises(ValueError, match="media_ref 'm_empty'"):
+        list(udfs.dims_batches(iter([batch])))
+    with pytest.raises(ValueError, match="media_ref 'm_truncated'"):
+        list(udfs.dims_batches(iter([batch.drop(index=1)])))
