@@ -1,10 +1,11 @@
 """Extra benchmarks for optimization work (guide §1.4): per-query
-isolated timing with the same checksum action as bench.py, runnable on
-a subset of queries, plus optional .explain('formatted') capture.
+isolated timing of bench.py's query set with the same checksum action,
+runnable on a subset of queries, plus optional .explain('formatted')
+capture.
 
 Usage:
     python bench_extra.py q1 q2 ...          # time those queries
-    python bench_extra.py --plans q1 ...     # also dump plans to plans/r06
+    python bench_extra.py --plans q1 ...     # also dump plans to .plans/
     python bench_extra.py --runs 3 q1 ...
 
 This file is NOT the driver's frozen bench.py; it exists so optimization
@@ -19,117 +20,14 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
-
-def build_queries(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from easyocr_spark.operators import bpe as bpe_mod
-    from easyocr_spark.operators import (
-        cleaning,
-        clustering,
-        dedup,
-        events,
-        mixing,
-        pii,
-        pipeline,
-        retrieval,
-        sharding,
-        similarity,
-        sketches,
-        web_extract,
-    )
-    from easyocr_spark.operators import text_analysis as ta
-    from easyocr_spark.sources import tables
-
-    docs = tables.interleaved_documents(spark, sf_dir)
-    media = tables.media_table(spark, sf_dir)
-    flat_docs = tables.read_table(spark, sf_dir, "documents")
-    emb = tables.read_table(spark, sf_dir, "embeddings")
-    ev = tables.read_table(spark, sf_dir, "events")
-
-    return {
-        "extract": lambda: pipeline.extract_documents(docs, media),
-        "detect_recognize_refs": lambda: pipeline.ocr_media_refs(
-            pipeline.explode_spans(docs), media
-        ),
-        "span_algebra": lambda: pipeline.reassemble(
-            pipeline.explode_spans(docs).select(
-                "doc_id", "offset", "kind", "text", "media_ref"
-            )
-        ),
-        "dedup_minhash_lsh": lambda: dedup.minhash_lsh_pairs(
-            dedup.with_mutants(flat_docs)
-        ),
-        "dedup_simhash": lambda: dedup.simhash_pairs(
-            dedup.with_mutants(flat_docs)
-        ),
-        "dedup_simhash128": lambda: dedup.simhash128_pairs(
-            dedup.with_mutants(flat_docs)
-        ),
-        "knn_brute": lambda: similarity.brute_force_topk(emb),
-        "knn_lsh": lambda: similarity.lsh_topk(emb),
-        "knn_ivf": lambda: similarity.ivf_topk(emb),
-        "knn_pq": lambda: similarity.pq_topk(emb),
-        "quality_tokens": lambda: ta.quality_score(flat_docs).join(
-            ta.token_stats(flat_docs).withColumnRenamed(
-                "n_tokens", "n_tokens_ws"
-            ),
-            "doc_id",
-        ),
-        "dedup_substring_spans": lambda: dedup.duplicate_spans(
-            dedup.with_mutants(flat_docs)
-        ),
-        "lm_cross_entropy": lambda: ta.lm_cross_entropy(flat_docs),
-        "sequence_pack": lambda: ta.sequence_pack(flat_docs),
-        "decontaminate": lambda: dedup.decontaminate(flat_docs),
-        "decontaminate_spans": lambda: dedup.decontaminate_spans(
-            dedup.contamination_augment(flat_docs)
-        ),
-        "neardup_pagerank": lambda: dedup.neardup_pagerank(flat_docs),
-        "shard_leakage": lambda: sharding.shard_leakage(
-            dedup.contamination_augment(flat_docs)
-        ),
-        "snapshot_dedup": lambda: dedup.snapshot_dedup(
-            flat_docs, dedup.snapshot_new(flat_docs)
-        ),
-        "strip_boilerplate": lambda: pipeline.strip_boilerplate(docs),
-        "events_sessionize": lambda: events.sessionize(ev),
-        "events_distinct_hll": lambda: events.distinct_users_hll(ev),
-        "pii_scan": lambda: pii.pii_scan(flat_docs),
-        "corpus_mix": lambda: mixing.corpus_mix(flat_docs),
-        "countmin": lambda: sketches.countmin_heavy_hitters(flat_docs),
-        "bloom": lambda: sketches.bloom_membership(flat_docs),
-        "kmeans": lambda: clustering.kmeans_clusters(emb),
-        "winnowing": lambda: dedup.winnowing_fingerprints(
-            dedup.with_mutants(flat_docs)
-        ),
-        "dsir": lambda: mixing.dsir_importance(flat_docs),
-        "embedding_outliers": lambda: clustering.embedding_outliers(emb),
-        "bm25_topk": lambda: retrieval.bm25_topk(flat_docs),
-        "ccnet_buckets": lambda: ta.ccnet_buckets(flat_docs),
-        "c4_clean": lambda: cleaning.c4_clean(flat_docs),
-        "gopher_rules": lambda: cleaning.gopher_rules(flat_docs),
-        "cdc_chunks": lambda: dedup.cdc_chunks(flat_docs),
-        "hard_negatives": lambda: similarity.hard_negatives(emb),
-        "unimax_mix": lambda: mixing.unimax_mix(flat_docs),
-        "ngram_novelty": lambda: dedup.ngram_novelty(
-            dedup.with_mutants(flat_docs)
-        ),
-        "html_extract": lambda: web_extract.html_extract(flat_docs),
-        "layout_reading_order": lambda: web_extract.layout_reading_order(
-            flat_docs
-        ),
-        "normalize_text": lambda: cleaning.normalize_text(flat_docs),
-        "char_coverage": lambda: bpe_mod.char_coverage(flat_docs),
-        "length_quantiles_hist": lambda: ta.length_quantiles_hist(flat_docs),
-    }
+PLANS_DIR = os.path.join(HERE, ".plans")
 
 
 def main() -> None:
-    from pyspark.sql import functions as F
-
+    from bench import bench_queries, checksum, warm_up
     from easyocr_spark.session import get_spark
 
     args = sys.argv[1:]
@@ -151,23 +49,10 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(app_name=f"bench_extra_{cpus}", cpus=cpus)
-    qs = build_queries(spark, sf_dir)
+    qs = bench_queries(spark, sf_dir)
     if not names:
         names = list(qs)
-
-    def checksum(df) -> int:
-        row = df.select(
-            F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns])).alias("h")
-        ).collect()
-        return row[0]["h"] or 0
-
-    # warm-up identical in spirit to bench.py
-    from easyocr_spark.operators import pipeline as pl
-    from easyocr_spark.sources import tables as tb
-
-    docs = tb.interleaved_documents(spark, sf_dir)
-    media = tb.media_table(spark, sf_dir)
-    pl.ocr_media_refs(pl.explode_spans(docs.limit(64)), media).count()
+    warm_up(spark, sf_dir)
 
     out = {}
     sums = {}
@@ -181,13 +66,13 @@ def main() -> None:
             walls.append(round(time.time() - t0, 3))
         out[name] = walls
         if dump_plans:
-            os.makedirs("plans/r06", exist_ok=True)
+            os.makedirs(PLANS_DIR, exist_ok=True)
             plan = fn()._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                     "formatted"
                 )
             )
-            with open(f"plans/r06/{name}.txt", "w") as f:
+            with open(os.path.join(PLANS_DIR, f"{name}.txt"), "w") as f:
                 f.write(plan)
         spark.sparkContext.setJobDescription(None)
     print(json.dumps({"walls": out, "checksums": {k: str(v) for k, v in sums.items()}}))

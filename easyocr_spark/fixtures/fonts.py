@@ -116,11 +116,3 @@ MODEL_ATLASES: dict[str, dict[str, np.ndarray]] = {
     "latin": ATLAS,
     "cjk": ATLAS_CJK,
 }
-
-
-def char_to_label(ch: str) -> int:
-    return CHARSET.index(ch) + 1
-
-
-def label_to_char(i: int) -> str:
-    return CHARSET[i - 1]

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .kernels import HASH_MOD, token_hashes
+
 SHINGLE_N = 3
 JACCARD_MILLI = 800  # threshold 0.8 as integer rational arithmetic
 MUTANT_OFFSET = 1_000_000
@@ -47,7 +49,6 @@ EXACT_OFFSET = 2_000_000  # verbatim copies: exact-dup + hamming-0 pairs
 N_PERM = 64
 N_BANDS = 16  # 4 rows per band
 HAM_MAX = 8
-HASH_MOD = 2147483647  # 2^31-1
 HASH_BASE_1 = 131
 HASH_BASE_2 = 137
 HASH_BASE_3 = 139
@@ -630,7 +631,7 @@ def _simhash_signatures_n(
     # hashing (shuffle-path parity is pytest-enforced under
     # autoBroadcastJoinThreshold=-1, tests/test_dedup_similarity.py).
     # The K polynomial folds over the dictionary run in the shared
-    # vectorized kernel (_np_token_hashes — same exact int64 fold, code
+    # vectorized kernel (token_hashes — same exact int64 fold, code
     # points == ascii() on split('') chars for BMP text), replacing the
     # per-char interpreted HOF chain.
     def dict_kernel(batches):
@@ -638,7 +639,7 @@ def _simhash_signatures_n(
 
         for pdf in batches:
             toks = list(pdf["token"].values)
-            hs = _np_token_hashes(toks, tuple(bases))
+            hs = token_hashes(toks, tuple(bases))
             out = {"token": toks}
             for h, arr in enumerate(hs, start=1):
                 out[f"t{h}"] = arr
@@ -889,43 +890,6 @@ def duckdb_simhash128_pairs_sql(table_sql: str, max_hamming: int = HAM_MAX) -> s
 SUBSTR_N = 10  # token-window width for exact substring dedup
 
 
-def _np_token_hashes(toks: list, bases: tuple[int, ...]):
-    """Per-token polynomial char hashes, one int64 array per base —
-    the numpy twin of the former per-token Catalyst HOF folds, exact to
-    the bit: for each token the fold is ``(acc*B + code) % HASH_MOD``
-    over its code points in order, vectorized ACROSS tokens grouped by
-    length (one utf-32 decode per length group, then L fused
-    multiply-mod passes). Intermediates stay exact in int64
-    (acc < 2^31, acc*B + c < 2^39). Code points == ``ascii()`` on each
-    ``split('')`` char for BMP text (the winnowing-kernel contract);
-    empty tokens hash to 0 in both formulations."""
-    import numpy as np
-
-    nt = len(toks)
-    out = [np.zeros(nt, dtype=np.int64) for _ in bases]
-    if not nt:
-        return out
-    lens = np.fromiter((len(t) for t in toks), dtype=np.int64, count=nt)
-    for L in np.unique(lens):
-        if L == 0:
-            continue
-        idx = np.flatnonzero(lens == L)
-        mat = (
-            np.frombuffer(
-                "".join(toks[i] for i in idx).encode("utf-32-le"),
-                dtype=np.uint32,
-            )
-            .astype(np.int64)
-            .reshape(len(idx), int(L))
-        )
-        for o, base in zip(out, bases):
-            acc = np.zeros(len(idx), dtype=np.int64)
-            for d in range(int(L)):
-                acc = (acc * base + mat[:, d]) % HASH_MOD
-            o[idx] = acc
-    return out
-
-
 def _pos_grams(docs: DataFrame, n: int) -> DataFrame:
     """(doc_id, pos, g1, g2): every n-token window's position and its
     62-bit integer gram key — two independent 31-bit double polynomial
@@ -958,7 +922,7 @@ def _pos_grams(docs: DataFrame, n: int) -> DataFrame:
         for pdf in batches:
             doc_toks = [list(t) for t in pdf["toks"]]
             flat = [t for toks in doc_toks for t in toks]
-            h1, h2 = _np_token_hashes(flat, (HASH_BASE_1, HASH_BASE_2))
+            h1, h2 = token_hashes(flat, (HASH_BASE_1, HASH_BASE_2))
             counts, poss, g1s, g2s = [], [], [], []
             off = 0
             for toks in doc_toks:

@@ -144,13 +144,13 @@ def dsir_importance(
     import numpy as np
     import pandas as pd
 
-    from easyocr_spark.operators.dedup import _np_token_hashes
+    from easyocr_spark.operators.kernels import token_hashes
 
     def kernel(batches):
         for pdf in batches:
             doc_toks = [list(t) for t in pdf["toks"]]
             flat = [t for toks in doc_toks for t in toks]
-            (h1,) = _np_token_hashes(flat, (HASH_BASE_1,))
+            (h1,) = token_hashes(flat, (HASH_BASE_1,))
             counts, feats_out = [], []
             off = 0
             for toks in doc_toks:

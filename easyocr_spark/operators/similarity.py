@@ -158,38 +158,6 @@ def brute_force_topk_window(embeddings: DataFrame, k: int = K) -> DataFrame:
     )
 
 
-def _plane_dot(emb: Column, j: int) -> Column:
-    """Dot with deterministic integer hyperplane j:
-    w[j][d] = ((j*DIM + d) * PLANE_MULT) % 1000 - 500.
-    The dimension range follows the actual array length (size() is
-    evaluated outside the lambda, so no per-element re-evaluation);
-    weights still index as j*DIM + d so the 64-dim oracle arithmetic is
-    unchanged on the driver tables. An EMPTY array short-circuits to
-    0.0: sequence(0, size-1) would otherwise build [0, -1] (Catalyst
-    trap — sequence steps downward when end < start) and element_at
-    would fault."""
-    fold = F.aggregate(
-        F.transform(
-            F.sequence(F.lit(0), F.size(emb) - 1),
-            lambda d: (
-                ((F.lit(j) * DIM + d) * F.lit(PLANE_MULT)) % 1000 - 500
-            ).cast("double")
-            * F.element_at(emb, d + 1).cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return F.when(F.size(emb) > 0, fold).otherwise(F.lit(0.0))
-
-
-def lsh_bucket(emb: Column) -> Column:
-    bits = [
-        F.when(_plane_dot(emb, j) >= 0, F.lit(2 ** j)).otherwise(F.lit(0))
-        for j in range(N_PLANES)
-    ]
-    return sum(bits, F.lit(0)).cast("long")
-
-
 def _with_bucket_n2(embeddings: DataFrame) -> DataFrame:
     """(vec_id, embedding, bucket, n2) via ONE vectorized Arrow kernel
     — the ivf_topk assign-kernel pattern: the former per-row Catalyst
@@ -198,13 +166,12 @@ def _with_bucket_n2(embeddings: DataFrame) -> DataFrame:
     O(N_PLANES·DIM) lambda steps per row. The kernel accumulates
     SEQUENTIALLY OVER DIMS and vectorized across rows, so every
     per-row accumulator performs the identical IEEE double adds in the
-    identical order as the ``_plane_dot`` / ``_norm2`` left folds —
-    bucket and n2 are bit-identical to the HOF columns. The weight
-    formula keeps the fixed DIM=64 indexing of the oracle
-    (w[j,d] = ((j·64 + d)·PLANE_MULT) % 1000 − 500) while ranging d
-    over the actual array length, exactly like the HOF; empty arrays
-    yield plane dots of 0.0 (bucket = full mask of >=0 bits) as the
-    ``when(size > 0)`` guard does."""
+    identical order as a left fold over the dims (``_norm2`` on the
+    JVM side, ``duck_plane_dot`` in the oracle) — bucket and n2 are
+    bit-identical to those folds. The weight formula keeps the fixed
+    DIM=64 indexing of the oracle (w[j,d] = ((j·64 + d)·PLANE_MULT) %
+    1000 − 500) while ranging d over the actual array length; empty
+    arrays yield plane dots of 0.0 (bucket = full mask of >=0 bits)."""
     import numpy as np
     import pandas as pd
 
@@ -335,8 +302,9 @@ def ivf_topk(
     NOTE: building this DataFrame is NOT side-effect-free — the codebook
     collect() runs an eager Spark job at construction time, and the
     centroid values are frozen then (not at action time). Callers
-    composing plans lazily (e.g. plans/explain) pay one small job just
-    to build the plan; that is the deliberate FAISS-style trade."""
+    composing plans lazily (e.g. bench.bench_queries, the plan
+    fingerprint test) pay one small job just to build the plan; that is
+    the deliberate FAISS-style trade."""
     import numpy as np
 
     cent_rows = sorted(

@@ -53,14 +53,6 @@ def _char_codes(col: Column) -> Column:
     return F.transform(F.split(col, ""), F.ascii)
 
 
-def _char_fold(col: Column, base: int) -> Column:
-    """31-bit polynomial fold over a string's char codes — the portable
-    string->int hash shared with dedup._poly_hash / fingerprint."""
-    return F.when(
-        F.length(col) > 0, _poly_hash(_char_codes(col), base)
-    ).otherwise(F.lit(0).cast("long"))
-
-
 def _duck_char_fold(col: str, base: int) -> str:
     return (
         "list_reduce(list_prepend(0::BIGINT, "
@@ -226,14 +218,14 @@ def bloom_membership(
     Output: (doc_id, member_est, member_exact) with 0/1 ints."""
     # prefix extraction, case folding and md5 stay JVM-side (identical
     # semantics); the 256-char polynomial fold runs in the shared
-    # vectorized kernel (dedup._np_token_hashes — same exact int64 fold
+    # vectorized kernel (kernels.token_hashes — same exact int64 fold
     # in char order, code points == ascii() on split('') chars for BMP
     # text; empty prefixes hash to 0 as the length guard did). The
     # former interpreted HOF evaluated ~1.3M lambda steps per pass over
     # this corpus, twice (build collect + probe).
     import pandas as pd
 
-    from easyocr_spark.operators.dedup import _np_token_hashes
+    from easyocr_spark.operators.kernels import token_hashes
 
     pre = docs.select(
         "doc_id",
@@ -243,7 +235,7 @@ def bloom_membership(
 
     def fold_kernel(batches):
         for pdf in batches:
-            (h,) = _np_token_hashes(
+            (h,) = token_hashes(
                 list(pdf["prefix"].values), (BLOOM_BASE,)
             )
             yield pd.DataFrame(

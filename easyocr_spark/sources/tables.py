@@ -121,13 +121,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(t)
-
-
 REPLICA_STRIDE = 500_000
 
 

@@ -1,49 +1,11 @@
-"""Output formats, CLI smoke, image feature/resize kernels."""
-
-import json
+"""CLI smoke, JSONL source, image feature/resize kernels."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from easyocr_spark.fixtures import corpus
 from easyocr_spark.ocr import udfs
-from easyocr_spark.operators import formats, pipeline
 from easyocr_spark.sources import tables
 
 SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def ocr_results(spark):
-    docs = tables.interleaved_documents(spark, SF).limit(40)
-    media = tables.media_table(spark, SF)
-    spans = pipeline.explode_spans(docs)
-    refs = spans.filter(F.col("kind") == "media").select("media_ref").distinct()
-    with_bytes = refs.join(media, "media_ref", "inner")
-    det = with_bytes.mapInPandas(
-        udfs.ocr_batches, schema=udfs.OCR_RESULT_SCHEMA
-    ).withColumn("boxes", F.array().cast("array<int>"))
-    return det.cache()
-
-
-def test_format_standard_and_text(ocr_results):
-    std = formats.format_standard(ocr_results).toPandas()
-    assert {"media_ref", "result"} == set(std.columns)
-    assert "text" in dict(std.iloc[0]["result"])
-    txt = formats.format_text_only(ocr_results).toPandas()
-    for _, row in txt.iterrows():
-        assert row["text"] == corpus.ground_truth_text(row["media_ref"])
-
-
-def test_format_json_roundtrip(ocr_results):
-    js = formats.format_json(ocr_results).toPandas()
-    parsed = json.loads(js.iloc[0]["result"])
-    assert "text" in parsed and "confident" in parsed
-
-
-def test_format_dict(ocr_results):
-    d = formats.format_dict(ocr_results).toPandas()
-    assert "text" in d.iloc[0]["result"]
 
 
 def test_image_features_kernel(spark):

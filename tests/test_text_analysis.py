@@ -151,24 +151,28 @@ def test_chunk_overlap_zero_exchange_plan(spark):
 def test_bench_previous_round_timings_rolling_min(tmp_path, monkeypatch):
     """bench.py's outlier baseline must unwrap the driver's BENCH_r*.json
     format (our JSON line nested under 'parsed') and take the rolling
-    per-query MIN across ALL rounds — a throttle-contaminated newest
-    round (r3's extract 6.76s vs the 3.99s idle-box truth) must not
-    poison the baseline."""
+    per-query MIN across ALL rounds of the same run shape — a
+    throttle-contaminated newest round (r3's extract 6.76s vs the 3.99s
+    idle-box truth) must not poison the baseline."""
     import json
 
     import bench
 
+    shape = {"cpus": 4, "sf": "sf", "media_spec_version": 8}
     (tmp_path / "BENCH_r01.json").write_text(
-        json.dumps({"parsed": {"queries": {"q": 3.0, "only_r1": 1.5}}})
+        json.dumps({"parsed": {**shape, "queries": {"q": 3.0, "only_r1": 1.5}}})
     )
     (tmp_path / "BENCH_r02.json").write_text(
-        json.dumps({"parsed": {"queries": {"q": 9.0, "only_r2": 2.5}}})
+        json.dumps({"parsed": {**shape, "queries": {"q": 9.0, "only_r2": 2.5}}})
+    )
+    (tmp_path / "BENCH_r03.json").write_text(  # another core count
+        json.dumps({"parsed": {**shape, "cpus": 32, "queries": {"q": 0.5}}})
     )
     (tmp_path / "BENCH_rbad.json").write_text("not json")
     monkeypatch.setattr(
         "os.path.dirname", lambda p: str(tmp_path), raising=True
     )
-    assert bench._previous_round_timings() == {
+    assert bench._previous_round_timings(4, "sf", 8) == {
         "q": 3.0,  # min across rounds, NOT the newest round's 9.0
         "only_r1": 1.5,
         "only_r2": 2.5,

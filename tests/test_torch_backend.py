@@ -588,23 +588,3 @@ def test_quantize_hook_runs():
     model = backends.maybe_quantize(torch_crnn.build_model(), True)
     x = torch.zeros(1, 1, torch_crnn.IMG_H, 128)
     assert model(x).shape[0] == 1
-
-
-@needs_torch
-def test_onnx_export_craft(tmp_path):
-    from easyocr_spark.ocr.backends import onnx_export
-
-    out = onnx_export.export_craft(None, str(tmp_path / "craft.onnx"))
-    import os
-
-    assert os.path.getsize(out) > 0
-
-
-@needs_torch
-def test_onnx_export_crnn(tmp_path):
-    from easyocr_spark.ocr.backends import onnx_export
-
-    out = onnx_export.export_crnn(None, str(tmp_path / "crnn.onnx"))
-    import os
-
-    assert os.path.getsize(out) > 0
