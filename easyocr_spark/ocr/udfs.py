@@ -14,10 +14,12 @@ column and the output frame. A kernel only supplies a per-image
 function yielding its row tuples (media_ref excluded) and the schema
 string naming them.
 
-Executor-resident model state: the reader singleton (glyph atlas =
-stand-in weights) is a module-level lazy global (``_READERS``, filled
-by ``get_reader``) in the Python worker process — loaded once per
-executor, reused across batches and tasks, exactly the
+Executor-resident model state: this module, with numpy, pandas,
+pyarrow and pyspark, is imported once per executor by the Python
+daemon (``easyocr_spark.worker_daemon``) and shared with every worker
+it forks. The reader singleton (glyph atlas = stand-in weights) is a
+module-level lazy global (``_READERS``, filled by ``get_reader``) in
+each reused worker process, kept across batches and tasks — the
 load-once-per-Reader pattern of the reference
 (easyocr/easyocr.py:214-233) mapped onto Spark's process model. For
 real torch weights this is where `--files`-shipped .pth archives would

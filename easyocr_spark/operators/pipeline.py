@@ -79,7 +79,10 @@ def ocr_media_refs(
     coalesce afterwards. num_partitions defaults to
     2 x defaultParallelism — enough wave slack to absorb image-size
     skew, small enough that per-task Python overhead stays negligible
-    (measured: 4x was slower than 2x even with worker reuse).
+    (measured: 4x was slower than 2x even with worker reuse, but while
+    each Python task still paid ~0.2 CPU-s re-reading Spark's archives,
+    a cost ``easyocr_spark.worker_daemon`` has since removed; not
+    re-measured since).
     """
     spark = spans.sparkSession
     n = num_partitions or spark.sparkContext.defaultParallelism * 2

@@ -14,6 +14,15 @@ also be the right default on a 1000-executor cluster reading 100 TB:
   even for 2560px scans — mirrors EasyOCR's batch_size knob,
   reference easyocr/easyocr.py:538-579).
 - UTC session timezone so DuckDB oracle comparisons are stable.
+- Python workers are forked from ``easyocr_spark.worker_daemon``, which
+  imports pyspark from the interpreter's installed copy instead of
+  Spark's archives and preloads the kernels once per executor, so a task
+  pays no per-task archive re-read (see that module). Only this
+  ``local[N]`` session sets it: a cluster job that ships the package
+  with ``--py-files`` cannot, because the daemon starts before per-task
+  py-files are added.
+- ``spark.driver.memory`` defaults to half the machine's physical RAM,
+  capped at 48g (``SPARK_DRIVER_MEM`` overrides it).
 """
 
 from __future__ import annotations
@@ -23,6 +32,12 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def default_driver_memory() -> str:
+    """Half the machine's physical RAM, capped at 48g."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min((phys // 2) >> 20, 48 << 10)}m"
 
 
 def get_spark(
@@ -72,7 +87,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # re-measured this round (4 repeated flagship runs each way,
@@ -83,8 +101,14 @@ def get_spark(
         # workers keep imports AND the module-level reader singleton
         # (ocr/udfs.get_reader -> _READERS) across tasks, the intended
         # executor-resident-model design; fresh workers paid the
-        # import + atlas tax once per task.
+        # import + atlas tax once per task. Reuse alone still left ~0.2
+        # CPU-s per task: every task calls importlib.invalidate_caches(),
+        # and each zipimporter over Spark's archives (pyspark.zip, the
+        # py4j zip, the spark-core jar) re-reads its whole directory on
+        # that call. The daemon below drops those archives and preloads
+        # pyspark and the kernels before forking any worker.
         .config("spark.python.worker.reuse", "true")
+        .config("spark.python.daemon.module", "easyocr_spark.worker_daemon")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
