@@ -59,9 +59,7 @@ def _docs_media(spark: SparkSession, sf_dir: str):
 
 def _distinct_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs, media = _docs_media(spark, sf_dir)
-    spans = pipeline.explode_spans(docs)
-    refs = spans.filter(F.col("kind") == "media").select("media_ref").distinct()
-    return refs.join(media, "media_ref", "inner")
+    return pipeline.media_images(pipeline.explode_spans(docs), media)
 
 
 DUCK_DISTINCT_REFS = f"""

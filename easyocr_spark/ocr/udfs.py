@@ -10,9 +10,9 @@ batch of typed rows comes back.
 
 Every kernel here is built by ``image_kernel``, the one harness that
 owns the batch loop, the bytes -> image decode, the optional lang
-column and the output frame. A kernel only supplies a per-image
-function yielding its row tuples (media_ref excluded) and the schema
-string naming them.
+column, the per-partition result cache keyed by image content and the
+output frame. A kernel only supplies a per-image function yielding its
+row tuples (media_ref excluded) and the schema string naming them.
 
 Executor-resident model state: this module, with numpy, pandas,
 pyarrow and pyspark, is imported once per executor by the Python
@@ -28,6 +28,7 @@ be deserialized (SURVEY.md §4.2).
 
 from __future__ import annotations
 
+import hashlib
 import struct
 import zlib
 from collections.abc import Callable, Iterable, Iterator
@@ -107,23 +108,38 @@ def image_kernel(
 ) -> Kernel:
     """mapInPandas harness: (media_ref, content[, lang]) -> ``schema``.
 
-    Each image is decoded once with ``decode`` and handed to
+    Each distinct image is decoded once with ``decode`` and handed to
     ``per_image(image, lang)`` (lang defaults to ""), which yields zero
     or more row tuples; the harness prepends media_ref and takes the
     column names from ``schema``. A decode failure fails the job with
-    the offending media_ref in the message."""
+    the offending media_ref in the message.
+
+    A kernel's rows are a pure function of (bytes, lang, kernel
+    config), so the harness computes them once per distinct
+    ``(sha256(bytes), lang)`` and emits the cached rows under every
+    ref carrying that key. lang is part of the key because the same
+    bytes under another lang route to another recognition model. The
+    cache lives as long as the partition's iterator, so it spans Arrow
+    batches; ``pipeline.media_images`` hash-partitions on (content,
+    lang) so every copy of an image lands in one partition. Memory is
+    a 32-byte digest plus the result rows per distinct image."""
     columns = [field.split()[0] for field in schema.split(",")]
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cache: dict[tuple[bytes, str], list[tuple]] = {}
         for pdf in it:
             langs = pdf["lang"] if "lang" in pdf.columns else [""] * len(pdf)
             rows: list[tuple] = []
             for ref, data, lang in zip(pdf["media_ref"], pdf["content"], langs):
-                try:
-                    image = decode(bytes(data))
-                except (ValueError, struct.error, zlib.error) as e:
-                    raise ValueError(f"media_ref {ref!r}: {e}") from e
-                rows.extend((ref, *row) for row in per_image(image, str(lang)))
+                data, lang = bytes(data), str(lang)
+                key = (hashlib.sha256(data).digest(), lang)
+                if key not in cache:
+                    try:
+                        image = decode(data)
+                    except (ValueError, struct.error, zlib.error) as e:
+                        raise ValueError(f"media_ref {ref!r}: {e}") from e
+                    cache[key] = list(per_image(image, lang))
+                rows.extend((ref, *row) for row in cache[key])
             yield pd.DataFrame(rows, columns=columns)
 
     return kernel

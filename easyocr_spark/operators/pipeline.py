@@ -7,22 +7,25 @@ Plan shape (SURVEY.md §1.3), all declarative until the single Arrow UDF:
                                 out of offset order by design)
 2. split media / text spans     narrow filters (Catalyst prunes the
                                 media join below to kind='media' rows)
-3. distinct media_ref           shuffle on media_ref — this is the OCR
-                                dedup: duplicate refs (within and across
-                                docs) are OCR'd ONCE, then results fan
-                                back out. At 10^12 docs this is the
-                                single biggest throughput lever for
-                                media-dedup-heavy corpora.
+3. distinct media_ref           shuffle on media_ref — every ref is
+                                looked up once, however many spans
+                                (within and across docs) carry it
 4. join media bytes             co-partitioned shuffle hash join on
                                 media_ref (broadcast at test scale —
                                 Catalyst/AQE decides; neither side is
                                 broadcastable at 100 TB)
-5. OCR mapInPandas              the one Arrow boundary; repartitioned
-                                first so image-count is balanced and the
-                                per-partition work is independent of
-                                upstream layout (axis-A skew: a doc with
-                                10k media spans contributes 10k refs
-                                spread uniformly by hash)
+5. OCR mapInPandas              the one Arrow boundary, hash-partitioned
+                                on (content, lang) first: every copy of
+                                an image lands in one partition, where
+                                the harness runs the kernel once per
+                                distinct image and fans its result out
+                                to each ref (the OCR dedup — by content,
+                                not by ref, with no extra shuffle or
+                                join). The repartition also balances
+                                image count and makes the per-partition
+                                work independent of upstream layout
+                                (axis-A skew: a doc with 10k media spans
+                                contributes 10k refs spread by hash)
 6. join results back to spans   media_ref join; dup-ref hot keys are
                                 handled by AQE skew join (plus an
                                 explicit salted-join operator in
@@ -65,6 +68,31 @@ def explode_spans(docs: DataFrame, keep_empty: bool = False) -> DataFrame:
     )
 
 
+def media_images(
+    spans: DataFrame, media: DataFrame, num_partitions: int | None = None
+) -> DataFrame:
+    """Distinct media refs of ``spans`` joined to their bytes ->
+    (media_ref, content, lang), hash-partitioned on (content, lang):
+    how an image reaches a kernel. Every ref with the same image lands
+    in one partition, so the ``ocr.udfs.image_kernel`` harness runs a
+    kernel once per distinct image there. A ref with no bytes row is
+    dropped by the inner join.
+
+    The repartition also decouples kernel parallelism from the join's
+    output partitioning and spreads image-size skew; AQE may coalesce
+    afterwards. num_partitions defaults to 2 x defaultParallelism —
+    enough wave slack to absorb image-size skew, small enough that
+    per-task Python overhead stays negligible (measured: 4x was slower
+    than 2x even with worker reuse, but while each Python task still
+    paid ~0.2 CPU-s re-reading Spark's archives, a cost
+    ``easyocr_spark.worker_daemon`` has since removed; not re-measured
+    since).
+    """
+    n = num_partitions or spans.sparkSession.sparkContext.defaultParallelism * 2
+    refs = spans.filter(F.col("kind") == "media").select("media_ref").distinct()
+    return refs.join(media, "media_ref", "inner").repartition(n, "content", "lang")
+
+
 def ocr_media_refs(
     spans: DataFrame,
     media: DataFrame,
@@ -72,27 +100,11 @@ def ocr_media_refs(
     decoder: str = "greedy",
     allowlist: str | None = None,
 ) -> DataFrame:
-    """Distinct media refs -> (media_ref, text, conf, n_boxes).
-
-    The repartition before the UDF decouples OCR parallelism from the
-    join's output partitioning and spreads image-size skew; AQE may
-    coalesce afterwards. num_partitions defaults to
-    2 x defaultParallelism — enough wave slack to absorb image-size
-    skew, small enough that per-task Python overhead stays negligible
-    (measured: 4x was slower than 2x even with worker reuse, but while
-    each Python task still paid ~0.2 CPU-s re-reading Spark's archives,
-    a cost ``easyocr_spark.worker_daemon`` has since removed; not
-    re-measured since).
-    """
-    spark = spans.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism * 2
-    refs = (
-        spans.filter(F.col("kind") == "media")
-        .select("media_ref")
-        .distinct()
-    )
-    with_bytes = refs.join(media, "media_ref", "inner")
-    return with_bytes.repartition(n, "media_ref").mapInPandas(
+    """Distinct media refs -> (media_ref, text, conf, n_boxes), one row
+    per ref. OCR runs once per distinct (content, lang) inside each
+    content partition of ``media_images``; refs sharing an image get
+    identical rows."""
+    return media_images(spans, media, num_partitions).mapInPandas(
         make_ocr_batches(decoder, allowlist), schema=OCR_RESULT_SCHEMA
     )
 

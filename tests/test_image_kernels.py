@@ -1,6 +1,7 @@
 """The image-kernel harness in ocr/udfs.py, driven without Spark: every
-kernel's output frame matches its schema string, and a decode failure
-names the media_ref that caused it."""
+kernel's output frame matches its schema string, a kernel runs once per
+distinct (bytes, lang) in a partition, and a decode failure names the
+media_ref that caused it."""
 
 import pandas as pd
 import pytest
@@ -71,3 +72,33 @@ def test_decode_failure_names_its_media_ref():
         list(udfs.dims_batches(iter([batch])))
     with pytest.raises(ValueError, match="media_ref 'm_truncated'"):
         list(udfs.dims_batches(iter([batch.drop(index=1)])))
+
+
+def test_harness_runs_each_distinct_image_once():
+    """One image under three refs, spread over two Arrow batches of one
+    partition, is decoded and run once; every ref gets identical rows
+    under its own media_ref. The same bytes under another lang run
+    again."""
+    calls = []
+
+    def features(img, lang):
+        calls.append(lang)
+        return udfs._features(img, lang)
+
+    kernel = udfs.image_kernel(udfs.IMAGE_META_SCHEMA, features)
+    png = corpus.render_media("m_3_0")
+    first = pd.DataFrame(
+        {"media_ref": ["a", "b"], "content": [png, png], "lang": ["latin"] * 2}
+    )
+    second = pd.DataFrame(
+        {"media_ref": ["c", "d"], "content": [png, png], "lang": ["latin", "arabic"]}
+    )
+    out = pd.concat(list(kernel(iter([first, second]))))
+    assert calls == ["latin", "arabic"]
+    assert out["media_ref"].tolist() == ["a", "b", "c", "d"]
+    rows = out.drop(columns="media_ref").values.tolist()
+    assert rows[0] == rows[1] == rows[2] == rows[3]
+
+    corrupt = pd.DataFrame({"media_ref": ["x", "y"], "content": [png[:40]] * 2})
+    with pytest.raises(ValueError, match="media_ref 'x'"):
+        list(kernel(iter([corrupt])))

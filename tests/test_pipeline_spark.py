@@ -109,41 +109,6 @@ def test_ocr_dedup_runs_each_ref_once(docs, media, spark):
     assert results.select("media_ref").distinct().count() == n_refs
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Co-bucketed tables join with zero shuffles: the plan must contain
-    no Exchange when broadcast is disabled."""
-    import io
-    from contextlib import redirect_stdout
-
-    from pyspark.sql import functions as F
-
-    from easyocr_spark.operators import bucketing
-
-    left = spark.range(1000).select(
-        F.col("id").alias("doc_id"), (F.col("id") * 2).alias("score")
-    )
-    right = spark.range(1000).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 7).alias("grade")
-    )
-    bucketing.write_bucketed(left, "t_left", str(tmp_path / "l"), "doc_id", 8)
-    bucketing.write_bucketed(right, "t_right", str(tmp_path / "r"), "doc_id", 8)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = bucketing.bucketed_join(spark, "t_left", "t_right")
-        assert joined.count() == 1000
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS t_left")
-        spark.sql("DROP TABLE IF EXISTS t_right")
-
-
 def _doc_strings(df):
     """Canonical per-doc string: doc_id + offset-ordered span tuples —
     nested-array-safe equality across plan shapes."""
@@ -155,13 +120,48 @@ def _doc_strings(df):
     )
 
 
+def _dup_content_input(media):
+    """Media spans over every ref plus copies of the same bytes: a
+    same-lang copy of each of 12 refs and a lang-swapped copy of 4."""
+    some = media.orderBy("media_ref").limit(12)
+    copies = some.withColumn("media_ref", F.concat("media_ref", F.lit("_copy")))
+    relang = some.limit(4).select(
+        F.concat("media_ref", F.lit("_relang")).alias("media_ref"),
+        "content",
+        F.when(F.col("lang") == "arabic", "latin").otherwise("arabic").alias("lang"),
+    )
+    dup_media = media.unionByName(copies).unionByName(relang)
+    spans = dup_media.select(F.lit("media").alias("kind"), "media_ref")
+    return spans, dup_media
+
+
+def _ocr_rows(spans, media, num_partitions=None):
+    return sorted(
+        map(
+            tuple,
+            pipeline.ocr_media_refs(spans, media, num_partitions)
+            .select("media_ref", "text", "conf", "n_boxes")
+            .collect(),
+        )
+    )
+
+
 def test_flagship_join_parity_broadcast_vs_shuffle_vs_salted(docs, media, spark):
     """The 100-TB join path, exercised end-to-end: with broadcast
     disabled (autoBroadcastJoinThreshold=-1) the OCR results join-back
     and the media join take their at-scale shuffle shapes, and the
     explicit salted fallback (operators/skew.salted_join) must all
-    produce the exact documents the broadcast plan does."""
+    produce the exact documents the broadcast plan does.
+
+    On an input where one image sits under several refs, the per-ref
+    OCR rows must not depend on layout either: broadcast vs shuffle and
+    1 vs 7 content partitions give the same rows, and each same-lang
+    copy gets the rows of the ref it copies."""
     base = _doc_strings(pipeline.extract_documents(docs, media))
+    dup_spans, dup_media = _dup_content_input(media)
+    n_content = dup_media.select("content", "lang").distinct().count()
+    assert dup_media.select("content").distinct().count() < n_content < dup_media.count()
+    ocr_base = _ocr_rows(dup_spans, dup_media)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -174,10 +174,20 @@ def test_flagship_join_parity_broadcast_vs_shuffle_vs_salted(docs, media, spark)
         salted_plan = salted_df._jdf.queryExecution().executedPlan().toString()
         assert "_salt" in salted_plan, salted_plan
         salted = _doc_strings(salted_df)
+        ocr_forced = _ocr_rows(dup_spans, dup_media)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert forced == base
     assert salted == base
+    assert ocr_forced == ocr_base
+    for n in (1, 7):
+        assert _ocr_rows(dup_spans, dup_media, n) == ocr_base, n
+    by_ref = {r[0]: r[1:] for r in ocr_base}
+    assert len(by_ref) == dup_media.count()
+    copies = [ref for ref in by_ref if ref.endswith("_copy")]
+    assert len(copies) == 12
+    for ref in copies:
+        assert by_ref[ref] == by_ref[ref[: -len("_copy")]], ref
 
 
 def test_strip_boilerplate_drops_cross_doc_chrome(spark):
