@@ -202,7 +202,7 @@ def normalize_pad(crop: np.ndarray, target_h: int = IMG_H,
 
 class TorchCrnnRecognizer:
     """recognize_probs(crop) -> [T, C] softmax matrix with blank at
-    index 0 — the same contract the stand-in's _frames_for_chunk
+    index 0 — the same contract the stand-in's recognition._frames
     produces, so ocr/ctc.py decoders apply unchanged."""
 
     def __init__(self, weights_path: str | None = None, quantize: bool = False,

@@ -12,7 +12,11 @@ Pipeline per crop, mirroring the reference's recognition contract:
    the glyph atlas -> a [T, C] probability matrix with column 0 = CTC
    blank. Each glyph emits two identical frames followed by a blank
    frame (as a stride-based CNN over the cell grid would), so the CTC
-   collapse-repeats + drop-blank path does real work.
+   collapse-repeats + drop-blank path does real work. All n glyph
+   windows of a crop (each nearest-resized to GLYPH_H x GLYPH_W) are
+   scored at once: one [n, 35] x [35, C] matmul per script model, one
+   sharpen + normalise over the [3n, C] frames, then a slice per word
+   chunk for decoding — bit-identical to scoring window by window.
 4. CTC greedy (default) or prefix beam search decode; confidence =
    custom_mean of non-blank step max-probs (reference
    easyocr/recognition.py:13-14,99-151).
@@ -21,7 +25,7 @@ Pipeline per crop, mirroring the reference's recognition contract:
    contrast_ths(0.1), pass 2 contrast-adjusted; keep the higher-conf
    result.
 
-Word gaps >= WORD_GAP base px inside one crop decode as spaces (the
+Word gaps >= SPACE_GAP base px inside one crop decode as spaces (the
 production path keeps words in separate boxes; this covers merged-box
 crops from group_text_box's width_ths merging).
 """
@@ -30,14 +34,8 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..fixtures.fonts import CHARSET, GLYPH_H, GLYPH_W, MODEL_TEMPLATES, TEMPLATES
-from .ctc import (
-    ctc_beam_search,
-    custom_mean,
-    decode_greedy,
-    greedy_collapse,
-    word_beam_search,
-)
+from ..fixtures.fonts import CHARSET, GLYPH_H, GLYPH_W, MODEL_TEMPLATES
+from .ctc import ctc_beam_search, custom_mean, greedy_collapse, word_beam_search
 
 CONTRAST_THS = 0.1  # reference easyocr/easyocr.py:353 default
 ADJUST_CONTRAST = 0.5  # reference default target passed to pass 2
@@ -49,8 +47,7 @@ N_CLASSES = len(CHARSET) + 1
 
 def contrast_grey(img: np.ndarray) -> tuple[float, float, float]:
     """(contrast, high, low) — reference easyocr/recognition.py:16-20."""
-    high = float(np.percentile(img, 90))
-    low = float(np.percentile(img, 10))
+    high, low = (float(v) for v in np.percentile(img, (90, 10)))
     return (high - low) / max(10.0, high + low), high, low
 
 
@@ -65,70 +62,65 @@ def adjust_contrast_grey(img: np.ndarray, target: float = 0.4) -> np.ndarray:
     return img
 
 
+def _nearest_index(n: int, size):
+    """Source indices of an n-sample nearest resize of ``size`` samples;
+    ``size`` may be an int array column, giving one index row each."""
+    return ((np.arange(n) + 0.5) * size / n).astype(np.int64).clip(0, size - 1)
+
+
 def _nearest_resize(img: np.ndarray, h: int, w: int) -> np.ndarray:
-    ys = ((np.arange(h) + 0.5) * img.shape[0] / h).astype(np.int64).clip(
-        0, img.shape[0] - 1
-    )
-    xs = ((np.arange(w) + 0.5) * img.shape[1] / w).astype(np.int64).clip(
-        0, img.shape[1] - 1
-    )
-    return img[ys][:, xs]
+    return img[_nearest_index(h, img.shape[0])][:, _nearest_index(w, img.shape[1])]
 
 
 # hoisted constants for the frame scorer (computed once per process,
 # one set per script model — the executor-resident "weights"):
 # match fraction between binary images a, t of P pixels is
 # (P - popcount(a XOR t))/P = (2*a.t - sum(a) - sum(t) + P)/P — one
-# matvec against the flattened template stack instead of per-char
-# equality scans per segment.
+# matmul against the flattened template stack instead of per-char
+# equality scans per window.
 _NPIX = GLYPH_H * GLYPH_W
 
 
 class _ScriptModel:
     def __init__(self, templates: np.ndarray):
-        self.tflat = templates.reshape(len(CHARSET), -1)
-        self.tsum = self.tflat.sum(axis=1)
+        self.tflat_t = np.ascontiguousarray(templates.reshape(len(CHARSET), -1).T)
+        self.tsum = self.tflat_t.sum(axis=0)
         self.blank_scores = np.empty(N_CLASSES)
         self.blank_scores[0] = 1.0
         # blank frame scores vs glyph templates: fraction of pixels
         # matching an empty window = the template's own empty fraction
         self.blank_scores[1:] = 1.0 - self.tsum / _NPIX
+        raw = self.blank_scores ** SHARPNESS
+        self.blank_probs = raw / raw.sum()  # every blank frame's probs
 
 
 _SCRIPT_MODELS: dict[str, _ScriptModel] = {
     name: _ScriptModel(t) for name, t in MODEL_TEMPLATES.items()
 }
-# back-compat aliases (latin is the default model)
-_TFLAT = _SCRIPT_MODELS["latin"].tflat
-_TSUM = _SCRIPT_MODELS["latin"].tsum
-_BLANK_SCORES = _SCRIPT_MODELS["latin"].blank_scores
 
 
-def _frames_for_chunk(
-    chunk: np.ndarray,
-    segments: list[tuple[int, int]],
-    model: str = "latin",
-) -> np.ndarray:
-    """Binary base-res chunk + char segments -> [T, C] prob matrix,
-    scored against the given script model's templates."""
+def _frames(windows: np.ndarray, model: str) -> np.ndarray:
+    """float32[n, GLYPH_H*GLYPH_W] 0/1 glyph windows -> [3n, C] prob
+    matrix: per window its score frame twice, then a blank frame.
+
+    Bit-identical to scoring each window on its own: every dot product
+    and sum is an integer below 2^24, so float32 summation order cannot
+    change a bit, and every later step is the same elementwise op (the
+    blank column stays float64, as the per-window scalar path had it).
+    Rows are normalised independently, so each window's frame is
+    sharpened once and the constant blank frame not at all."""
     m = _SCRIPT_MODELS[model]
-    frames: list[np.ndarray] = []
-    for s, e in segments:
-        seg = chunk[:, s:e].astype(np.float32)
-        if seg.shape != (GLYPH_H, GLYPH_W):
-            seg = _nearest_resize(seg, GLYPH_H, GLYPH_W)
-        flat = seg.ravel()
-        ssum = flat.sum()
-        scores = np.empty(N_CLASSES)
-        scores[0] = 1.0 - ssum / _NPIX  # blank likes empty windows
-        scores[1:] = (2.0 * (m.tflat @ flat) - m.tsum - ssum + _NPIX) / _NPIX
-        frames.append(scores)
-        frames.append(scores)  # duplicated frame: real collapse work
-        frames.append(m.blank_scores)
-    if not frames:
-        return np.empty((0, N_CLASSES))
-    raw = np.stack(frames) ** SHARPNESS
-    return raw / raw.sum(axis=1, keepdims=True)
+    n = len(windows)
+    ssum = windows.sum(axis=1)
+    scores = np.empty((n, N_CLASSES))
+    scores[:, 0] = 1.0 - ssum.astype(np.float64) / _NPIX  # blank likes empty windows
+    scores[:, 1:] = (2.0 * (windows @ m.tflat_t) - m.tsum - ssum[:, None] + _NPIX) / _NPIX
+    raw = scores ** SHARPNESS
+    frames = np.empty((n, 3, N_CLASSES))
+    # the score frame twice (real collapse work for CTC), then a blank
+    frames[:, 0] = frames[:, 1] = raw / raw.sum(axis=1, keepdims=True)
+    frames[:, 2] = m.blank_probs
+    return frames.reshape(3 * n, N_CLASSES)
 
 
 def build_ignore_mask(
@@ -174,10 +166,11 @@ def recognize_crop(
     img = adjust_contrast_grey(crop, ADJUST_CONTRAST) if adjust else crop
     darkness = (255.0 - img.astype(np.float32)) / 255.0
     binary = darkness > INK_THRESHOLD
-    if not binary.any():
+    rows = np.flatnonzero(binary.any(axis=1))
+    if not len(rows):
         return "", 0.0
-    ys, xs = np.nonzero(binary)
-    binary = binary[ys.min() : ys.max() + 1, xs.min() : xs.max() + 1]
+    cols = np.flatnonzero(binary.any(axis=0))
+    binary = binary[rows[0] : rows[-1] + 1, cols[0] : cols[-1] + 1]
     h = binary.shape[0]
     scale = max(1, round(h / GLYPH_H))
     if h != scale * GLYPH_H:
@@ -186,37 +179,37 @@ def recognize_crop(
         ) > 0.5
     else:
         base = binary[scale // 2 :: scale, scale // 2 :: scale]
-    # char segmentation: runs of non-empty columns
-    colink = base.sum(axis=0) > 0
-    padded = np.concatenate(([False], colink, [False]))
-    diff = np.diff(padded.astype(np.int8))
-    starts = np.flatnonzero(diff == 1)
-    ends = np.flatnonzero(diff == -1)
-    # split into word chunks at wide gaps
-    chunks: list[list[tuple[int, int]]] = []
-    for s, e in zip(starts, ends):
-        if chunks and s - chunks[-1][-1][1] < SPACE_GAP:
-            chunks[-1].append((int(s), int(e)))
-        else:
-            chunks.append([(int(s), int(e))])
+    # char segmentation: runs of non-empty columns (edges alternate
+    # run start, run end)
+    edges = np.flatnonzero(np.diff(np.concatenate(([False], base.any(axis=0), [False]))))
+    starts, ends = edges[0::2], edges[1::2]
+    if not len(starts):
+        return "", 0.0
+    # glyph windows of every segment, nearest-resized to GLYPH_H x GLYPH_W
+    # (base is GLYPH_H rows, so only the columns resample)
+    idx = starts[:, None] + _nearest_index(GLYPH_W, (ends - starts)[:, None])
+    windows = base[:, idx].transpose(1, 0, 2).reshape(len(starts), -1)
+    probs = _apply_ignore(_frames(windows.astype(np.float32), model), ignore)
+    # split into word chunks at wide gaps: 3 frames per segment
+    breaks = np.flatnonzero(starts[1:] - ends[:-1] >= SPACE_GAP) + 1
+    bounds = [0, *(3 * breaks).tolist(), len(probs)]
     words: list[str] = []
     all_confs: list[np.ndarray] = []
-    for segs in chunks:
-        probs = _apply_ignore(_frames_for_chunk(base, segs, model), ignore)
+    for lo, hi in zip(bounds[:-1], bounds[1:]):
+        chunk = probs[lo:hi]
+        labels, confs = greedy_collapse(chunk)
         if decoder == "beamsearch":
-            text, _ = ctc_beam_search(probs, CHARSET)
+            text, _ = ctc_beam_search(chunk, CHARSET)
         elif decoder == "wordbeamsearch":
             from ..fixtures.corpus import VOCAB  # the stand-in word dict
 
-            text, _ = word_beam_search(probs, CHARSET, VOCAB)
+            text, _ = word_beam_search(chunk, CHARSET, VOCAB)
         else:
-            text, _ = decode_greedy(probs, CHARSET)
-        _, confs = greedy_collapse(probs)
+            text = "".join(CHARSET[i - 1] for i in labels)
         if text:
             words.append(text)
         all_confs.append(confs)
-    conf = custom_mean(np.concatenate(all_confs)) if all_confs else 0.0
-    return " ".join(words), conf
+    return " ".join(words), custom_mean(np.concatenate(all_confs))
 
 
 def recognize_two_pass(

@@ -1,3 +1,5 @@
+import hashlib
+
 import numpy as np
 import pytest
 
@@ -60,6 +62,29 @@ def test_low_contrast_takes_second_pass():
     assert text2 == "HELLO" and conf2 > 0.5
 
 
+@pytest.mark.parametrize("model", ["latin", "cjk"])
+def test_frames_match_per_window_reference(model):
+    # the batched scorer against the per-window matvec loop it replaced:
+    # 0/1 windows make every dot product an exact integer, so the
+    # frames must be equal to the bit
+    from easyocr_spark.ocr.recognition import _NPIX, _SCRIPT_MODELS, SHARPNESS, _frames
+
+    m = _SCRIPT_MODELS[model]
+    rng = np.random.default_rng(7)
+    for n in (1, 2, 5, 13):
+        windows = (rng.random((n, _NPIX)) < 0.4).astype(np.float32)
+        frames = []
+        for flat in windows:
+            ssum = flat.sum()
+            scores = np.empty(len(m.blank_scores))
+            scores[0] = 1.0 - ssum / _NPIX
+            scores[1:] = (2.0 * (m.tflat_t.T @ flat) - m.tsum - ssum + _NPIX) / _NPIX
+            frames += [scores, scores, m.blank_scores]
+        raw = np.stack(frames) ** SHARPNESS
+        expected = raw / raw.sum(axis=1, keepdims=True)
+        assert _frames(windows, model).tobytes() == expected.tobytes()
+
+
 def test_contrast_adjustment_semantics():
     img = render.render_text([["SPARK"]], scale=2, low_contrast=True)
     c1, _, _ = contrast_grey(img)
@@ -95,6 +120,25 @@ def test_connected_components_u_shape():
     mask[4, 1:6] = True
     labels, n = detection.connected_components(mask)
     assert n == 1
+
+
+@pytest.mark.parametrize(
+    "shape", [(14, 16), (15, 17), (16, 15), (1, 1), (1, 7), (2, 3), (3, 2), (31, 64), (97, 130)]
+)
+def test_half_res_min_matches_block_reshape_min(shape):
+    # odd/even sizes with 1-px remainders, and the tiny class's 14x16
+    rng = np.random.default_rng(shape[0] * 1000 + shape[1])
+    gray = rng.integers(0, 256, size=shape, dtype=np.uint8)
+    h2, w2 = shape[0] // 2, shape[1] // 2
+    expected = gray[: 2 * h2, : 2 * w2].reshape(h2, 2, w2, 2).min(axis=(1, 3))
+    got = detection.half_res_min(gray)
+    assert got.dtype == np.uint8
+    np.testing.assert_array_equal(got, expected)
+    lo, hi = int(gray.min()), int(gray.max())
+    region, _ = detection.compute_score_maps(gray)
+    np.testing.assert_array_equal(
+        region, (hi - expected.astype(np.float32)) * (1.0 / max(hi - lo, 1))
+    )
 
 
 def test_resize_aspect_ratio_caps_and_pads():
@@ -150,3 +194,61 @@ def test_dims_formula_matches_render():
     for ref in refs:
         img = png.decode_gray(corpus.render_media(ref))
         assert rows[ref] == (img.shape[1], img.shape[0]), ref
+
+
+# one ref per (image class, lang): the 9 classes of corpus.media_spec
+# (tiny, low_contrast, rgb/rgba/palette color, slanted, curved, smooth,
+# plain) x latin/chinese/arabic
+GOLDEN_REFS = [
+    "m_0_0", "m_13_1", "m_23_0",  # tiny
+    "m_0_7", "m_1_6", "m_2_5",  # low_contrast
+    "m_0_6", "m_4_7", "m_11_5",  # rgb
+    "m_6_5", "m_1_0", "m_2_4",  # rgba
+    "m_0_1", "m_1_5", "m_5_6",  # palette
+    "m_0_3", "m_4_1", "m_8_5",  # slanted
+    "m_0_2", "m_4_0", "m_8_4",  # curved
+    "m_6_7", "m_4_5", "m_2_3",  # smooth
+    "m_0_4", "m_1_1", "m_2_0",  # plain
+]
+GOLDEN_MODES = {
+    "greedy": ({}, None),
+    "beamsearch": ({"decoder": "beamsearch"}, None),
+    "wordbeamsearch": ({"decoder": "wordbeamsearch"}, None),
+    "allowlist": ({"allowlist": "ABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"}, None),
+    "rotation": ({}, [90, 180]),
+}
+# sha256 of every readtext (boxes, text, conf.hex()) over GOLDEN_REFS x
+# GOLDEN_MODES; any change to a detection or recognition bit moves it
+GOLDEN_DIGEST = "3d29ec66497000f44cb98474e5919e265be361b6a45dd8d2b11154cbacda1ee8"
+
+
+def _image_class(spec: dict) -> str:
+    for name in ("tiny", "low_contrast"):
+        if spec[name]:
+            return name
+    if spec["color"]:
+        return spec["color_fmt"]
+    for name, key in (("slanted", "slant_dy"), ("curved", "curve"), ("smooth", "smooth")):
+        if spec[key]:
+            return name
+    return "plain"
+
+
+def golden_kernel_digest() -> str:
+    h = hashlib.sha256()
+    for mode, (kwargs, rotation_info) in GOLDEN_MODES.items():
+        for ref in GOLDEN_REFS:
+            reader = StandInReader(lang_list=[corpus.media_spec(ref)["lang"]], **kwargs)
+            img = png.decode_gray(corpus.render_media(ref))
+            for box, text, conf in reader.readtext(img, rotation_info=rotation_info):
+                pts = [float(v).hex() for p in box for v in p]
+                h.update(repr((mode, ref, pts, text, float(conf).hex())).encode())
+    return h.hexdigest()
+
+
+def test_golden_kernel_digest():
+    specs = [corpus.media_spec(r) for r in GOLDEN_REFS]
+    assert len({(_image_class(s), s["lang"]) for s in specs}) == len(GOLDEN_REFS) == 27
+    # readtext is deterministic and bit-exact: a kernel rewrite must keep
+    # every box coordinate, text and confidence bit
+    assert golden_kernel_digest() == GOLDEN_DIGEST
