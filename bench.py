@@ -1,7 +1,8 @@
 """Benchmark harness — prints ONE JSON line for the driver.
 
 Headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-on local[$SPARK_GRAFT_CPUS]. The primary metric is the flagship
+on local[session.DEFAULT_CPUS] ($SPARK_GRAFT_CPUS, else the CPUs this
+process may run on). The primary metric is the flagship
 extraction pipeline's documents/sec (media spans OCR'd end-to-end);
 per-query wall seconds are reported in "queries".
 
@@ -232,11 +233,11 @@ def warm_up(spark, sf_dir: str) -> None:
 
 
 def run_bench(cpus: int | None = None, sf_dir: str | None = None) -> dict:
-    from easyocr_spark.session import get_spark
+    from easyocr_spark.session import DEFAULT_CPUS, get_spark
     from easyocr_spark.sources import tables
 
     sf_dir = sf_dir or os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus or DEFAULT_CPUS
     spark = get_spark(app_name=f"bench_{cpus}", cpus=cpus)
 
     from easyocr_spark.fixtures.corpus import MEDIA_SPEC_VERSION as media_spec_version

@@ -28,7 +28,7 @@ PLANS_DIR = os.path.join(HERE, ".plans")
 
 def main() -> None:
     from bench import bench_queries, checksum, warm_up
-    from easyocr_spark.session import get_spark
+    from easyocr_spark.session import DEFAULT_CPUS, get_spark
 
     args = sys.argv[1:]
     runs = 2
@@ -47,8 +47,7 @@ def main() -> None:
             i += 1
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(app_name=f"bench_extra_{cpus}", cpus=cpus)
+    spark = get_spark(app_name=f"bench_extra_{DEFAULT_CPUS}")
     qs = bench_queries(spark, sf_dir)
     if not names:
         names = list(qs)

@@ -490,8 +490,8 @@ def duckdb_smooth_geometry_sql(refs_sql: str) -> str:
     render.smooth_drop_quarters), so quarter-px output keeps the
     comparison integer-exact where deci-px would land on .5 rounding
     ties. Mirrors the full chain: anti-aliased render -> full-res
-    ink-weighted refinement (detection._refine_smooth_quads: sub-pixel
-    cell tops from the blend gray) -> group_text_box free-path margin
+    ink-weighted refinement (detection._refine_smooth_quads on
+    detection.smooth_cells: sub-pixel cell tops from the blend gray) -> group_text_box free-path margin
     expansion with its float arithmetic reproduced verbatim (margins
     are 0.1*h doubles; rounded products never land on .5)."""
     a = "TRY_CAST(split_part(media_ref, '_', 2) AS BIGINT)"

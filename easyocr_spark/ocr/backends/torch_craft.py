@@ -12,15 +12,18 @@ the code here is an independent implementation — modules are built
 from config lists and checkpoint keys are translated, not mirrored.
 
 Post-processing intentionally REUSES the engine's numpy pipeline
-(ocr/detection.py get_det_boxes / adjust_result_coordinates): the
-thresholds (text 0.7 / low 0.4 / link 0.4) are the reference defaults
-and the box recipe is the same getDetBoxes_core contract, so only the
-score-map *producer* changes between backends.
+(ocr/detection.py get_det_boxes, whose boxes detect() keeps, and
+adjust_result_coordinates): the thresholds (text 0.7 / low 0.4 /
+link 0.4) are the reference defaults and the box recipe is the same
+getDetBoxes_core contract, so only the score-map *producer* changes
+between backends.
 
-UNTESTED IN THIS SANDBOX: torch is not installed here (verified by the
-round-1 judge), so this module is exercised only by tests that
-``pytest.importorskip('torch')``. The shapes, slice boundaries and key
-maps were written against the published checkpoint layout.
+Without torch installed, ``build_model()``, the forward pass and
+detect() still run under the numpy shim (``np_torch.installed()``) in
+tests/test_torch_backend.py, on seeded or synthetic weights; the tests
+that need real torch ``pytest.importorskip('torch')``. The shapes,
+slice boundaries and key maps were written against the published
+checkpoint layout.
 """
 
 from __future__ import annotations
@@ -272,5 +275,5 @@ class TorchCraftDetector:
 
     def detect(self, gray: np.ndarray) -> list[np.ndarray]:
         region, link, ratio = self.score_maps(gray)
-        boxes = get_det_boxes(region, link)
+        boxes, _, _ = get_det_boxes(region, link)
         return adjust_result_coordinates(boxes, ratio)

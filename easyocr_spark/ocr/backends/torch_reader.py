@@ -17,7 +17,7 @@ import numpy as np
 
 from ..grouping import group_text_box, min_size_filter
 from ..paragraph import get_paragraph
-from ..reader import MIN_SIZE, four_point_transform
+from ..reader import MIN_SIZE, four_point_transform, merge_to_free, text_projection
 from ..recognition import adjust_contrast_grey, contrast_grey
 from .torch_craft import TorchCraftDetector
 from .torch_crnn import TorchCrnnRecognizer
@@ -135,7 +135,8 @@ class TorchReader:
                     return t2, c2
         return text, conf
 
-    def recognize(self, gray, horizontal_list, free_list, paragraph=False):
+    def recognize(self, gray, horizontal_list, free_list, paragraph=False,
+                  free_merge=False):
         h, w = gray.shape
         results = []
         for x0, x1, y0, y1 in horizontal_list:
@@ -148,25 +149,18 @@ class TorchReader:
             crop = four_point_transform(gray, np.asarray(quad))
             text, conf = self._decode_crop(crop)
             results.append(([list(p) for p in quad], text, conf))
+        if free_merge:
+            results = merge_to_free(results, len(free_list))
         if paragraph:
             mode = "rtl" if "ar" in self.lang_list else "ltr"
             return get_paragraph(results, mode=mode)
         return results
 
-    def readtext(self, gray: np.ndarray, paragraph: bool = False):
+    def readtext(self, gray: np.ndarray, paragraph: bool = False,
+                 free_merge: bool = False):
         horizontal, free = self.detect(gray)
-        return self.recognize(gray, horizontal, free, paragraph=paragraph)
+        return self.recognize(gray, horizontal, free, paragraph=paragraph,
+                              free_merge=free_merge)
 
     def readtext_text(self, gray: np.ndarray, rtl: bool = False) -> str:
-        results = [(b, t) for b, t, _ in self.readtext(gray) if t]
-        if not rtl:
-            return " ".join(t for _, t in results)
-        lines: list[list[str]] = []
-        last_y = None
-        for box, text in results:
-            y0 = box[0][1]
-            if last_y is None or y0 != last_y:
-                lines.append([])
-                last_y = y0
-            lines[-1].append(text)
-        return " ".join(t for line in lines for t in reversed(line))
+        return text_projection(self.readtext(gray, free_merge=True), rtl)[0]

@@ -181,34 +181,113 @@ def connected_components(mask: np.ndarray) -> tuple[np.ndarray, int]:
     return labels, 0
 
 
+INK_DARKNESS = 0.45  # darkness (255 - gray) / 255 above this is ink
+SMOOTH_BLEND = 128  # the half-pixel anti-alias gray (render_text_smooth)
+
+
+def ink_mask(gray: np.ndarray) -> np.ndarray:
+    """uint8 gray -> bool ink mask: the binarization the recognizer and
+    the staircase unshear share."""
+    return (255.0 - gray.astype(np.float32)) / 255.0 > INK_DARKNESS
+
+
+def runs(flags: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """bool[N] -> (starts, ends) of its runs of True, ends exclusive
+    (the edges of the zero-padded flags alternate start, end)."""
+    edges = np.flatnonzero(np.diff(np.concatenate(([False], flags, [False]))))
+    return edges[0::2], edges[1::2]
+
+
+def glyph_cells(ink: np.ndarray) -> tuple[np.ndarray, ...]:
+    """bool[H, W] ink -> (starts, ends, tops, bottoms), one entry per
+    glyph cell: a run of ink columns [start, end) split at blank
+    columns, whose ink rows span [top, bottom). Exact at any integer
+    render scale: cell boundaries stay even-aligned through the half-res
+    pooling. The role of the reference's per-character blob labeling
+    (easyocr/craft_utils.py:46-49)."""
+    starts, ends = runs(ink.any(axis=0))
+    if not len(starts):
+        return starts, ends, starts, ends
+    # row-any per cell; the blank columns between cells add nothing
+    rows = np.logical_or.reduceat(ink, starts, axis=1)
+    return starts, ends, rows.argmax(axis=0), len(rows) - rows[::-1].argmax(axis=0)
+
+
+def smooth_cells(crop: np.ndarray) -> tuple[np.ndarray, ...]:
+    """Glyph cells of an anti-aliased (smooth) word crop holding a
+    SMOOTH_BLEND pixel -> (starts, ends, tops, half, heights). ``half``
+    is the blend phase: the darkest pixel of the cell's first ink row is
+    a blend rather than full ink, so the cell's true top is top + 0.5.
+    ``heights`` are the unblended ink heights (a blend adds one row)."""
+    starts, ends, tops, bottoms = glyph_cells(crop <= 250)
+    half = np.minimum.reduceat(crop[tops], starts, axis=1).diagonal() == SMOOTH_BLEND
+    return starts, ends, tops, half, bottoms - tops - half
+
+
+def quad_window(gray: np.ndarray, quad) -> tuple[np.ndarray, int, int]:
+    """The quad's axis-aligned bbox clamped to the image -> (crop, x0, y0)."""
+    q = np.asarray(quad, dtype=np.float64)
+    h, w = gray.shape
+    x0 = max(0, int(np.floor(q[:, 0].min())))
+    x1 = min(w, int(np.ceil(q[:, 0].max())))
+    y0 = max(0, int(np.floor(q[:, 1].min())))
+    y1 = min(h, int(np.ceil(q[:, 1].max())))
+    return gray[y0:y1, x0:x1], x0, y0
+
+
+def vertical_edged(quad) -> bool:
+    """True for the staircase-slant contract: a parallelogram whose
+    left and right edges are vertical."""
+    q = np.asarray(quad, dtype=np.float64)
+    return abs(q[0][0] - q[3][0]) < 1e-6 and abs(q[1][0] - q[2][0]) < 1e-6
+
+
 def get_det_boxes(
     region: np.ndarray,
     link: np.ndarray,
     text_threshold: float = TEXT_THRESHOLD,
     low_text: float = LOW_TEXT,
     link_threshold: float = LINK_THRESHOLD,
-    estimate_num_chars: bool = False,
-    with_polys: bool = False,
-):
-    """Score maps -> list of 4-point boxes (float, half-res coords),
-    following getDetBoxes_core (reference easyocr/craft_utils.py:20-85):
-    threshold both maps, clip the sum, CC, area filter, max-region-score
-    filter, tight box per component over TEXT pixels only (the reference
-    removes the link-only area before fitting the rectangle,
-    craft_utils.py:38-44)."""
+) -> tuple[list[np.ndarray], list[int], list[np.ndarray | None]]:
+    """Score maps -> (boxes, n_chars, polys) in half-res coords, one
+    entry each per kept component, following getDetBoxes_core
+    (reference easyocr/craft_utils.py:20-85): threshold both maps, clip
+    the sum, CC, area filter, max-region-score filter, tight box per
+    component over TEXT pixels only (the reference removes the
+    link-only area before fitting the rectangle, craft_utils.py:38-44).
+
+    Each component's text pixels are segmented into glyph cells once;
+    its box, character count and poly all come from those cells:
+
+    - box: the tight rectangle, clockwise from top-left (reference
+      craft_utils.py:79-81); for a SLANTED component (last cell's top
+      differs from the first's) the parallelogram [(x0, t_first),
+      (x1, t_last), (x1, t_last + h), (x0, t_first + h)], h = the first
+      cell's ink height — the role of cv2.minAreaRect
+      (craft_utils.py:66-83).
+    - n_chars: the cell count.
+    - poly: the getPoly_core role (craft_utils.py:87-231) — for a
+      component whose cell tops are not all equal, each cell's top-left
+      and top-right corners at its own ink top, then the bottoms
+      mirrored right-to-left (a closed 4k-point staircase); None for
+      upright components (the caller falls back to the box)."""
     text_score = region >= low_text
     link_score = link >= link_threshold
     combined = text_score | link_score
     labels, n = connected_components(combined)
+    boxes: list[np.ndarray] = []
+    n_chars: list[int] = []
+    polys: list[np.ndarray | None] = []
     if n == 0:
-        return []
+        return boxes, n_chars, polys
     # vectorized per-component stats (the connectedComponentsWithStats
     # role): area, max region score, tight bbox over TEXT pixels only
     flat = labels.ravel()
     area = np.bincount(flat, minlength=n + 1)
     maxscore = np.zeros(n + 1, dtype=region.dtype)
     np.maximum.at(maxscore, flat, region.ravel())
-    ys, xs = np.nonzero(text_score & (labels > 0))
+    text_mask = text_score & (labels > 0)
+    ys, xs = np.nonzero(text_mask)
     labs = labels[ys, xs]
     big = 1 << 30
     ix0 = np.full(n + 1, big)
@@ -219,14 +298,8 @@ def get_det_boxes(
     np.maximum.at(ix1, labs, xs)
     np.minimum.at(iy0, labs, ys)
     np.maximum.at(iy1, labs, ys)
-    text_mask = text_score & (labels > 0)
-    boxes: list[np.ndarray] = []
-    n_chars: list[int] = []
-    polys: list[np.ndarray | None] = []
     for k in range(1, n + 1):
-        if area[k] < MIN_AREA:
-            continue
-        if maxscore[k] < text_threshold:
+        if area[k] < MIN_AREA or maxscore[k] < text_threshold:
             continue
         if ix1[k] < 0:  # no text pixels in this component
             continue
@@ -235,118 +308,45 @@ def get_det_boxes(
             text_mask[y0 : y1 + 1, x0 : x1 + 1]
             & (labels[y0 : y1 + 1, x0 : x1 + 1] == k)
         )
-        if estimate_num_chars:
-            # per-component character-count estimate: glyph-cell runs
-            # split at blank columns — the role of the reference's
-            # character-blob labeling (easyocr/craft_utils.py:46-49)
-            starts, _ = _column_runs(sub)
-            n_chars.append(max(1, len(starts)))
-        if with_polys:
-            starts, ends = _column_runs(sub)
-            polys.append(
-                _component_poly(sub, starts, ends, x0, y0)
-                if len(starts)
-                else None
-            )
-        quad = _slanted_quad(sub, x0, y0)
-        if quad is not None:
-            boxes.append(quad)
+        starts, ends, tops, bottoms = glyph_cells(sub)
+        n_chars.append(len(starts))
+        if tops[0] != tops[-1]:
+            xr, ya, yb = x0 + ends[-1], y0 + tops[0], y0 + tops[-1]
+            h = bottoms[0] - tops[0]
+            box = [[x0, ya], [xr, yb], [xr, yb + h], [x0, ya + h]]
+        else:
+            box = [[x0, y0], [x1 + 1, y0], [x1 + 1, y1 + 1], [x0, y1 + 1]]
+        boxes.append(np.array(box, dtype=np.float32))
+        if (tops == tops[0]).all():
+            polys.append(None)
             continue
-        # clockwise from top-left, the reference's coordinate contract
-        # (easyocr/craft_utils.py:79-81)
-        boxes.append(
-            np.array(
-                [[x0, y0], [x1 + 1, y0], [x1 + 1, y1 + 1], [x0, y1 + 1]],
-                dtype=np.float32,
-            )
-        )
-    if estimate_num_chars and with_polys:
-        return boxes, n_chars, polys
-    if estimate_num_chars:
-        return boxes, n_chars
-    if with_polys:
-        return boxes, polys
-    return boxes
+        poly = _staircase(x0 + starts, x0 + ends, y0 + tops, y0 + bottoms)
+        polys.append(poly.astype(np.float32))
+    return boxes, n_chars, polys
 
 
-def _column_runs(sub: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Runs of non-blank columns in a component window -> (starts, ends)."""
-    col_any = sub.any(axis=0)
-    padded = np.concatenate(([False], col_any, [False]))
-    d = np.diff(padded.astype(np.int8))
-    return np.flatnonzero(d == 1), np.flatnonzero(d == -1)
+def _staircase(xl, xr, tops, bottoms) -> np.ndarray:
+    """Per-cell column spans and ink extents -> the closed 4k-point
+    outline: each cell's top-left and top-right corners at its own top,
+    then the bottoms mirrored right-to-left."""
+    xs = np.stack([xl, xr], axis=1).ravel()
+    top = np.stack([xs, np.repeat(tops, 2)], axis=1)
+    bottom = np.stack([xs, np.repeat(bottoms, 2)], axis=1)
+    return np.concatenate([top, bottom[::-1]])
 
 
-def _slanted_quad_runs(sub, starts, ends, x0, y0):
-    if len(starts) < 2:
-        return None  # single cell: nothing to measure slant from
-    first = sub[:, starts[0] : ends[0]]
-    last = sub[:, starts[-1] : ends[-1]]
-    fy = np.nonzero(first.any(axis=1))[0]
-    ly = np.nonzero(last.any(axis=1))[0]
-    t_first, t_last = int(fy[0]), int(ly[0])
-    if t_first == t_last:
+def _smooth_reading(gray: np.ndarray, quad) -> tuple | None:
+    """One smooth measurement of a quad's window: None unless the window
+    carries blend pixels (gray == SMOOTH_BLEND, unique to the smooth
+    render among all corpus inks), else (xl, xr, tops, bottoms) per
+    glyph cell in image coords, with the half-pixel blend phase in the
+    tops and each bottom = top + the unblended cell height."""
+    crop, x0, y0 = quad_window(gray, quad)
+    if not (crop == SMOOTH_BLEND).any():
         return None
-    h = int(fy[-1]) - t_first + 1
-    xl = float(x0)
-    xr = float(x0 + ends[-1])  # exclusive right edge, like x1 + 1
-    ya, yb = float(y0 + t_first), float(y0 + t_last)
-    return np.array(
-        [[xl, ya], [xr, yb], [xr, yb + h], [xl, ya + h]], dtype=np.float32
-    )
-
-
-def _component_poly(sub, starts, ends, x0, y0) -> np.ndarray | None:
-    """Polygon tracing a SLANTED component's text region at glyph-cell
-    granularity — the role of getPoly_core (reference
-    easyocr/craft_utils.py:87-231: poly=True fits a point sequence
-    along the text line's local height instead of one quad). For each
-    cell: its top-left and top-right corners at the cell's own ink top;
-    the return path mirrors the bottoms right-to-left, giving a closed
-    4k-point staircase outline. Upright components return None (the
-    reference also returns None polys for short/straight boxes and the
-    caller falls back to the quad)."""
-    if len(starts) < 2:
-        return None
-    tops = []
-    bots = []
-    slanted = False
-    prev_t = None
-    for s, e in zip(starts, ends):
-        ys = np.nonzero(sub[:, s:e].any(axis=1))[0]
-        t, btm = int(ys[0]), int(ys[-1]) + 1
-        if prev_t is not None and t != prev_t:
-            slanted = True
-        prev_t = t
-        tops += [(float(x0 + s), float(y0 + t)), (float(x0 + e), float(y0 + t))]
-        bots += [(float(x0 + s), float(y0 + btm)), (float(x0 + e), float(y0 + btm))]
-    if not slanted:
-        return None
-    return np.array(tops + bots[::-1], dtype=np.float32)
-
-
-def _slanted_quad(sub: np.ndarray, x0: int, y0: int) -> np.ndarray | None:
-    """Min-area-style quad for a SLANTED component, or None if the
-    component is upright (the role of cv2.minAreaRect in reference
-    craft_utils.py:66-83: slanted components get a rotated 4-point box
-    instead of the axis-aligned rectangle).
-
-    Slant is measured at glyph-cell granularity: the component's text
-    columns split into cell runs at blank columns (exact at any integer
-    render scale — cell boundaries stay even-aligned through the
-    half-res pooling); if the last cell's top differs from the first
-    cell's top, the component is a staircase-slanted word and the quad
-    is the parallelogram [(x0, t_first), (x1, t_last),
-    (x1, t_last + h), (x0, t_first + h)] with h = the first cell's ink
-    height. Upright components (t_last == t_first) return None and keep
-    the tight-rectangle path — zero behavior change for them."""
-    starts, ends = _column_runs(sub)
-    if len(starts) == 0:
-        return None
-    return _slanted_quad_runs(sub, starts, ends, x0, y0)
-
-
-SMOOTH_BLEND = 128  # the half-pixel anti-alias gray (render_text_smooth)
+    starts, ends, tops, half, heights = smooth_cells(crop)
+    sub_tops = y0 + tops + 0.5 * half
+    return x0 + starts, x0 + ends, sub_tops, sub_tops + heights
 
 
 def _refine_smooth_quads(
@@ -358,56 +358,25 @@ def _refine_smooth_quads(
     whose cell tops no longer sit on integer rows.
 
     The half-res score maps quantize away the gray-edge blend, so each
-    vertical-edged slanted quad whose image region carries blend pixels
-    (gray == 128, unique to the smooth render among all corpus inks) is
-    re-measured on the full-res image: glyph-cell runs from ink
-    columns; each cell's top = integer first ink row + the blend PHASE
-    read from the gray value (+0.5 when the darkest pixel of that row
-    is a blend rather than full ink) — ink-weighted column tops instead
-    of exact cell boundaries. Refined quad: [[xl, t_first], [xr,
-    t_last], [xr, t_last+h], [xl, t_first+h]] with sub-pixel tops and
-    h = the first (unshifted) cell's ink height."""
-    h_img, w_img = gray.shape
+    vertical-edged slanted quad whose window carries blend pixels is
+    re-measured on the full-res image (``_smooth_reading``). Refined
+    quad: [[xl, t_first], [xr, t_last], [xr, t_last+h], [xl, t_first+h]]
+    with sub-pixel tops and h = the first (never shifted) cell's ink
+    height."""
     out: list[np.ndarray] = []
     for q in boxes:
-        qa = np.asarray(q, dtype=np.float64)
-        vertical_edged = (
-            abs(qa[0][0] - qa[3][0]) < 1e-6 and abs(qa[1][0] - qa[2][0]) < 1e-6
-        )
-        slanted = qa[0][1] != qa[1][1]
-        if not (vertical_edged and slanted):
+        cells = None
+        if vertical_edged(q) and q[0][1] != q[1][1]:
+            cells = _smooth_reading(gray, q)
+        if cells is None or len(cells[0]) < 2:
             out.append(q)
             continue
-        x0 = max(0, int(np.floor(qa[:, 0].min())))
-        x1 = min(w_img, int(np.ceil(qa[:, 0].max())))
-        y0 = max(0, int(np.floor(qa[:, 1].min())))
-        y1 = min(h_img, int(np.ceil(qa[:, 1].max())))
-        crop = gray[y0:y1, x0:x1]
-        if crop.size == 0 or not (crop == SMOOTH_BLEND).any():
-            out.append(q)
-            continue
-        mask = crop <= 250
-        starts, ends = _column_runs(mask)
-        if len(starts) < 2:
-            out.append(q)
-            continue
-
-        def sub_top(s: int, e: int) -> tuple[float, np.ndarray]:
-            rows = np.nonzero(mask[:, s:e].any(axis=1))[0]
-            t = int(rows[0])
-            frac = 0.5 if int(crop[t, s:e].min()) == SMOOTH_BLEND else 0.0
-            return t + frac, rows
-
-        t_first, rows_f = sub_top(int(starts[0]), int(ends[0]))
-        t_last, _ = sub_top(int(starts[-1]), int(ends[-1]))
-        hh = float(int(rows_f[-1]) - int(rows_f[0]) + 1)
-        xl = float(x0 + starts[0])
-        xr = float(x0 + ends[-1])
-        ya = y0 + t_first
-        yb = y0 + t_last
+        xl, xr, tops, bottoms = cells
+        h = bottoms[0] - tops[0]
         out.append(
             np.array(
-                [[xl, ya], [xr, yb], [xr, yb + hh], [xl, ya + hh]],
+                [[xl[0], tops[0]], [xr[-1], tops[-1]],
+                 [xr[-1], tops[-1] + h], [xl[0], tops[0] + h]],
                 dtype=np.float64,
             )
         )
@@ -418,36 +387,16 @@ def detect_smooth_polys(gray: np.ndarray) -> list[np.ndarray]:
     """poly=True for the SMOOTH class: one 4L-point SUB-PIXEL outline
     per smooth word in reading order — the getPoly_core refinement at
     the anti-aliased grain. Each glyph cell contributes its top-left /
-    top-right corners at the cell's own ink top INCLUDING the half-
-    pixel blend phase (read from the gray like _refine_smooth_quads),
-    and the return path mirrors the bottoms (top + unblended cell
-    height) right-to-left. Words without blend pixels yield no entry
-    (the staircase classes keep their integer detect_polys path)."""
-    h_img, w_img = gray.shape
+    top-right corners at the cell's own sub-pixel top, and the return
+    path mirrors the bottoms right-to-left (``_smooth_reading``, the
+    measurement _refine_smooth_quads uses). Words without blend pixels
+    yield no entry (the staircase classes keep their integer
+    detect_polys path)."""
     polys: list[np.ndarray] = []
     for q in detect(gray):
-        qa = np.asarray(q, dtype=np.float64)
-        x0 = max(0, int(np.floor(qa[:, 0].min())))
-        x1 = min(w_img, int(np.ceil(qa[:, 0].max())))
-        y0 = max(0, int(np.floor(qa[:, 1].min())))
-        y1 = min(h_img, int(np.ceil(qa[:, 1].max())))
-        crop = gray[y0:y1, x0:x1]
-        if crop.size == 0 or not (crop == SMOOTH_BLEND).any():
-            continue
-        mask = crop <= 250
-        starts, ends = _column_runs(mask)
-        tops: list[tuple[float, float]] = []
-        bots: list[tuple[float, float]] = []
-        for s, e in zip(starts, ends):
-            rows = np.nonzero(mask[:, s:e].any(axis=1))[0]
-            t = int(rows[0])
-            half = int(crop[t, s:e].min()) == SMOOTH_BLEND
-            t_sub = t + (0.5 if half else 0.0)
-            hh = int(rows[-1]) - t + 1 - (1 if half else 0)
-            xl, xr = float(x0 + s), float(x0 + e)
-            tops += [(xl, y0 + t_sub), (xr, y0 + t_sub)]
-            bots += [(xl, y0 + t_sub + hh), (xr, y0 + t_sub + hh)]
-        polys.append(np.array(tops + bots[::-1], dtype=np.float64))
+        cells = _smooth_reading(gray, q)
+        if cells is not None:
+            polys.append(_staircase(*cells))
     return polys
 
 
@@ -476,11 +425,9 @@ def detect(
     budget first see the most promising boxes."""
     resized, ratio = resize_aspect_ratio(gray, canvas_size, mag_ratio)
     region, link = compute_score_maps(resized)
-    if optimal_num_chars is None:
-        boxes = get_det_boxes(region, link)
-    else:
-        boxes, counts = get_det_boxes(region, link, estimate_num_chars=True)
-        order = sorted(range(len(boxes)), key=lambda i: abs(optimal_num_chars - counts[i]))
+    boxes, n_chars, _ = get_det_boxes(region, link)
+    if optimal_num_chars is not None:
+        order = sorted(range(len(boxes)), key=lambda i: abs(optimal_num_chars - n_chars[i]))
         boxes = [boxes[i] for i in order]
     return _refine_smooth_quads(gray, adjust_result_coordinates(boxes, ratio))
 
@@ -494,6 +441,6 @@ def detect_polys(
     components, None for upright ones (caller falls back to the box)."""
     resized, ratio = resize_aspect_ratio(gray, canvas_size, mag_ratio)
     region, link = compute_score_maps(resized)
-    _, polys = get_det_boxes(region, link, with_polys=True)
+    _, _, polys = get_det_boxes(region, link)
     inv = RATIO_NET / ratio
     return [None if p is None else p * inv for p in polys]

@@ -17,16 +17,7 @@ from __future__ import annotations
 
 import numpy as np
 
-MIN_GAP_COLS = 6  # min blank columns separating words (base-scale aware
-#                   callers pass rendered images where word gaps >= 2*s*4)
-
-
-def _runs(mask: np.ndarray) -> list[tuple[int, int]]:
-    padded = np.concatenate(([False], mask, [False]))
-    diff = np.diff(padded.astype(np.int8))
-    starts = np.flatnonzero(diff == 1)
-    ends = np.flatnonzero(diff == -1)
-    return list(zip(starts.tolist(), ends.tolist()))
+from .detection import glyph_cells, runs
 
 
 def detect(gray: np.ndarray, min_gap_frac: float = 0.75) -> list[np.ndarray]:
@@ -41,29 +32,16 @@ def detect(gray: np.ndarray, min_gap_frac: float = 0.75) -> list[np.ndarray]:
     lo, hi = g.min(), g.max()
     ink = (hi - g) / max(hi - lo, 1.0) > 0.5
     boxes: list[np.ndarray] = []
-    for y0, y1 in _runs(ink.any(axis=1)):
-        band = ink[y0:y1]
-        height = y1 - y0
-        min_gap = max(2, int(min_gap_frac * height))
-        col = band.any(axis=0)
+    for y0, y1 in zip(*runs(ink.any(axis=1))):
+        min_gap = max(2, int(min_gap_frac * (y1 - y0)))
+        starts, ends, tops, bottoms = glyph_cells(ink[y0:y1])
         # merge char runs separated by gaps < min_gap into words
-        runs = _runs(col)
-        if not runs:
-            continue
-        words: list[list[int]] = [[runs[0][0], runs[0][1]]]
-        for s, e in runs[1:]:
-            if s - words[-1][1] < min_gap:
-                words[-1][1] = e
-            else:
-                words.append([s, e])
-        for x0, x1 in words:
-            sub = band[:, x0:x1]
-            ys = np.nonzero(sub.any(axis=1))[0]
-            by0, by1 = y0 + int(ys.min()), y0 + int(ys.max()) + 1
+        firsts = np.flatnonzero(np.r_[True, starts[1:] - ends[:-1] >= min_gap])
+        lasts = np.r_[firsts[1:], len(starts)] - 1
+        by0 = y0 + np.minimum.reduceat(tops, firsts)
+        by1 = y0 + np.maximum.reduceat(bottoms, firsts)
+        for x0, x1, t, b in zip(starts[firsts], ends[lasts], by0, by1):
             boxes.append(
-                np.array(
-                    [[x0, by0], [x1, by0], [x1, by1], [x0, by1]],
-                    dtype=np.float32,
-                )
+                np.array([[x0, t], [x1, t], [x1, b], [x0, b]], dtype=np.float32)
             )
     return boxes

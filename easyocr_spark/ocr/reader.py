@@ -8,8 +8,9 @@ API mirror of the reference's Reader (reference easyocr/easyocr.py):
   right words), two-pass contrast retry, greedy/beam/wordbeam decoder
   switch, allowlist/blocklist masking, rotation TTA.
 - ``readtext(gray)`` = detect ∘ recognize             (:440-474)
-- ``readtext_text`` — the projection our span pipeline uses: non-empty
-  texts joined by single spaces in reading order.
+- ``text_projection`` — the projection our span pipeline uses: non-empty
+  texts joined by single spaces in reading order, plus their min
+  confidence; ``readtext_text`` is its text.
 
 The detect stage is pluggable ('craft' score-map strategy,
 'dbnet' — the real DBNet post-process over shrunken-kernel maps,
@@ -26,6 +27,8 @@ executor-resident-singleton pattern from SURVEY.md §4.2).
 """
 
 from __future__ import annotations
+
+from itertools import groupby
 
 import numpy as np
 
@@ -55,9 +58,6 @@ def four_point_transform(gray: np.ndarray, quad: np.ndarray) -> np.ndarray:
     xs = pts[:, :, 0].round().astype(np.int64).clip(0, gray.shape[1] - 1)
     ys = pts[:, :, 1].round().astype(np.int64).clip(0, gray.shape[0] - 1)
     return gray[ys, xs]
-
-
-INK_DARKNESS = 0.45  # same binarization rule recognition.py uses
 
 
 def merge_to_free(results: list, n_free: int) -> list:
@@ -101,103 +101,50 @@ def merge_to_free(results: list, n_free: int) -> list:
 
 def deshear_crop(gray: np.ndarray, quad: np.ndarray) -> np.ndarray:
     """Pixel-exact unshear for staircase-slanted words (vertical-edged
-    parallelogram quads from the detector's _slanted_quad): crop the
-    quad's axis-aligned bbox, split ink columns into glyph-cell runs at
-    blank columns, and re-paste each run with its own ink top aligned
-    to a common baseline. Because glyphs are upright within the
-    staircase (only their vertical offset varies), this reconstructs
-    the unslanted word exactly — unlike a generic perspective warp,
-    which would resample (and distort) glyph pixels along the slant.
-    The reference handles slanted boxes by warping
-    (easyocr/utils.py:428-448 four_point_transform); the exact unshear
-    is the stand-in-faithful equivalent for its own staircase class."""
-    q = np.asarray(quad, dtype=np.float64)
-    h_img, w_img = gray.shape
-    x0 = max(0, int(np.floor(q[:, 0].min())))
-    x1 = min(w_img, int(np.ceil(q[:, 0].max())))
-    y0 = max(0, int(np.floor(q[:, 1].min())))
-    y1 = min(h_img, int(np.ceil(q[:, 1].max())))
-    crop = gray[y0:y1, x0:x1]
-    if crop.size == 0:
-        return crop
-    if (crop == SMOOTH_BLEND).any():
-        return _deshear_smooth(crop)
-    darkness = (255.0 - crop.astype(np.float32)) / 255.0
-    binary = darkness > INK_DARKNESS
-    col_any = binary.any(axis=0)
-    if not col_any.any():
-        return crop
-    padded = np.concatenate(([False], col_any, [False]))
-    d = np.diff(padded.astype(np.int8))
-    starts = np.flatnonzero(d == 1)
-    ends = np.flatnonzero(d == -1)
-    heights = []
-    tops = []
-    for s, e in zip(starts, ends):
-        ys = np.nonzero(binary[:, s:e].any(axis=1))[0]
-        tops.append(int(ys[0]))
-        heights.append(int(ys[-1]) - int(ys[0]) + 1)
-    out_h = max(heights)
-    out = np.full((out_h, crop.shape[1]), crop.max(), dtype=gray.dtype)
-    for (s, e), top, hh in zip(zip(starts, ends), tops, heights):
-        out[:hh, s:e] = crop[top : top + hh, s:e]
-    return out
+    parallelogram quads from detection.get_det_boxes): crop the quad's
+    axis-aligned bbox, split it into glyph cells, and re-paste each cell
+    with its own ink top aligned to a common baseline. Because glyphs
+    are upright within the staircase (only their vertical offset
+    varies), this reconstructs the unslanted word exactly — unlike a
+    generic perspective warp, which would resample (and distort) glyph
+    pixels along the slant. The reference handles slanted boxes by
+    warping (easyocr/utils.py:428-448 four_point_transform); the exact
+    unshear is the stand-in-faithful equivalent for its own staircase
+    class.
 
-
-SMOOTH_BLEND = 128  # half-pixel anti-alias gray (render_text_smooth)
-
-
-def _deshear_smooth(crop: np.ndarray) -> np.ndarray:
-    """Exact unshear + DEBLEND for the anti-aliased constant-slope
-    (smooth) class: glyph cells carry a half-pixel vertical phase
-    rendered as a 2-tap gray-edge blend S(y) = (O(y) + O(y-1)) / 2
-    over the binary cell O. Per cell run: the integer shift comes from
-    the run's first ink row; the phase from whether that row's darkest
-    pixel is a blend (128) or full ink; half-phase cells are inverted
-    by the exact greedy deconvolution O(y) = [2*S(y) - O(y-1) > 1/2]
-    top-down (binary rounding resets the uint8 quantization error each
-    row, so the recursion is stable). The result is the byte-exact
-    upright render the template recognizer expects — the reference
-    warps such boxes approximately (easyocr/utils.py:428-448); the
-    stand-in's gray-edge contract makes the inverse exact."""
-    mask = crop <= 250
-    col_any = mask.any(axis=0)
-    if not col_any.any():
-        return crop
-    padded = np.concatenate(([False], col_any, [False]))
-    d = np.diff(padded.astype(np.int8))
-    starts = np.flatnonzero(d == 1)
-    ends = np.flatnonzero(d == -1)
-    cells = []
-    for s, e in zip(starts, ends):
-        rows = np.nonzero(mask[:, s:e].any(axis=1))[0]
-        t = int(rows[0])
-        half = int(crop[t, s:e].min()) == SMOOTH_BLEND
-        # ink height of the unblended cell (blend adds one row)
-        hh = int(rows[-1]) - t + 1 - (1 if half else 0)
-        cells.append((int(s), int(e), t, half, hh))
-    out_h = max(c[4] for c in cells)
-    out = np.full((out_h, crop.shape[1]), 255, dtype=crop.dtype)
-    for s, e, t, half, hh in cells:
-        if not half:
+    Blended branch, for the anti-aliased constant-slope (smooth) class,
+    whose cells carry a half-pixel vertical phase rendered as a 2-tap
+    gray-edge blend S(y) = (O(y) + O(y-1)) / 2 over the binary cell O:
+    cells come from detection.smooth_cells (integer shift, blend phase,
+    unblended height); half-phase cells are inverted by the exact greedy
+    deconvolution O(y) = [2*S(y) - O(y-1) > 1/2] top-down (binary
+    rounding resets the uint8 quantization error each row, so the
+    recursion is stable). The result is the byte-exact upright render
+    the template recognizer expects — the reference warps such boxes
+    approximately; the stand-in's gray-edge contract makes the inverse
+    exact."""
+    crop, _, _ = detection.quad_window(gray, quad)
+    if (crop == detection.SMOOTH_BLEND).any():
+        starts, ends, tops, half, heights = detection.smooth_cells(crop)
+        fill = 255
+    else:
+        starts, ends, tops, bottoms = detection.glyph_cells(detection.ink_mask(crop))
+        if not len(starts):
+            return crop
+        half, heights = np.zeros(len(starts), dtype=bool), bottoms - tops
+        fill = crop.max()
+    out = np.full((heights.max(), crop.shape[1]), fill, dtype=crop.dtype)
+    for s, e, t, blended, hh in zip(starts, ends, tops, half, heights):
+        if not blended:
             out[:hh, s:e] = crop[t : t + hh, s:e]
             continue
-        n = e - s
-        o_prev = np.zeros(n, dtype=np.float64)
+        o_prev = np.zeros(e - s, dtype=np.float64)
         for i in range(hh):
             sv = (255.0 - crop[t + i, s:e].astype(np.float64)) / 255.0
             o_cur = (2.0 * sv - o_prev) > 0.5
             out[i, s:e] = np.where(o_cur, 0, 255)
             o_prev = o_cur.astype(np.float64)
     return out
-
-
-def _is_vertical_edged(quad: np.ndarray) -> bool:
-    """True for parallelogram quads whose left/right edges are vertical
-    (the staircase-slant detector contract) — those unshear exactly;
-    arbitrary rotated quads fall back to the perspective warp."""
-    q = np.asarray(quad, dtype=np.float64)
-    return abs(q[0][0] - q[3][0]) < 1e-6 and abs(q[1][0] - q[2][0]) < 1e-6
 
 
 class StandInReader:
@@ -293,7 +240,7 @@ class StandInReader:
             results.append((box, text, conf))
         for quad in free_list:
             q = np.asarray(quad)
-            if _is_vertical_edged(q):
+            if detection.vertical_edged(q):
                 crop = deshear_crop(gray, q)
             else:
                 crop = four_point_transform(gray, q)
@@ -324,22 +271,23 @@ class StandInReader:
         )
 
     def readtext_text(self, gray: np.ndarray, rtl: bool = False) -> str:
-        """Reading-order concatenation — the span-text projection.
-        ``rtl`` reverses word order within each line (the bidi display
-        reordering stand-in, reference easyocr/easyocr.py:414-418 —
-        applied when the routed language is Arabic). free_merge puts
-        free-quad results in reading position among the horizontal ones
-        (a no-op for all-upright or all-slanted pages)."""
-        results = [(b, t) for b, t, _ in self.readtext(gray, free_merge=True) if t]
-        if not rtl:
-            return " ".join(t for _, t in results)
-        # group consecutive results into lines by top-y, reverse within
-        lines: list[list[str]] = []
-        last_y = None
-        for box, text in results:
-            y0 = box[0][1]
-            if last_y is None or y0 != last_y:
-                lines.append([])
-                last_y = y0
-            lines[-1].append(text)
-        return " ".join(t for line in lines for t in reversed(line))
+        """Reading-order span text: ``text_projection`` of the
+        free-merged readtext results."""
+        return text_projection(self.readtext(gray, free_merge=True), rtl)[0]
+
+
+def text_projection(results: list, rtl: bool = False) -> tuple[str, float]:
+    """readtext results -> (span text, min confidence) — the projection
+    the span pipeline uses: non-empty texts joined by single spaces in
+    result order, with the min over their confidences (0.0 when none).
+    ``rtl`` reverses word order within each line (the bidi display
+    reordering stand-in, reference easyocr/easyocr.py:414-418 — applied
+    when the routed language is Arabic); a new line starts where the box
+    top changes. Callers pass free-merged results (``free_merge=True``),
+    so free quads sit in reading position among the horizontal boxes (a
+    no-op for all-upright or all-slanted pages)."""
+    kept = [(b, t, c) for b, t, c in results if t]
+    if rtl:
+        lines = groupby(kept, key=lambda k: k[0][0][1])
+        kept = [k for _, line in lines for k in reversed(list(line))]
+    return " ".join(t for _, t, _ in kept), min((c for _, _, c in kept), default=0.0)

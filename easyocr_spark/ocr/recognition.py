@@ -36,10 +36,10 @@ import numpy as np
 
 from ..fixtures.fonts import CHARSET, GLYPH_H, GLYPH_W, MODEL_TEMPLATES
 from .ctc import ctc_beam_search, custom_mean, greedy_collapse, word_beam_search
+from .detection import ink_mask, runs
 
 CONTRAST_THS = 0.1  # reference easyocr/easyocr.py:353 default
 ADJUST_CONTRAST = 0.5  # reference default target passed to pass 2
-INK_THRESHOLD = 0.45  # darkness above this is ink
 SHARPNESS = 40.0  # score -> prob sharpening exponent
 SPACE_GAP = 6  # base px gap that reads as a word separator
 N_CLASSES = len(CHARSET) + 1
@@ -164,8 +164,7 @@ def recognize_crop(
 ) -> tuple[str, float]:
     """uint8[H, W] crop -> (text, confidence)."""
     img = adjust_contrast_grey(crop, ADJUST_CONTRAST) if adjust else crop
-    darkness = (255.0 - img.astype(np.float32)) / 255.0
-    binary = darkness > INK_THRESHOLD
+    binary = ink_mask(img)
     rows = np.flatnonzero(binary.any(axis=1))
     if not len(rows):
         return "", 0.0
@@ -179,10 +178,8 @@ def recognize_crop(
         ) > 0.5
     else:
         base = binary[scale // 2 :: scale, scale // 2 :: scale]
-    # char segmentation: runs of non-empty columns (edges alternate
-    # run start, run end)
-    edges = np.flatnonzero(np.diff(np.concatenate(([False], base.any(axis=0), [False]))))
-    starts, ends = edges[0::2], edges[1::2]
+    # char segmentation: runs of non-empty columns
+    starts, ends = runs(base.any(axis=0))
     if not len(starts):
         return "", 0.0
     # glyph windows of every segment, nearest-resized to GLYPH_H x GLYPH_W

@@ -33,7 +33,6 @@ import struct
 import zlib
 from collections.abc import Callable, Iterable, Iterator
 from functools import partial
-from itertools import groupby
 
 import numpy as np
 import pandas as pd
@@ -41,7 +40,7 @@ import pandas as pd
 from ..fixtures.png import decode_gray, decode_image, encode_gray
 from .detection import detect_polys, detect_smooth_polys
 from .paragraph import get_paragraph
-from .reader import StandInReader
+from .reader import StandInReader, text_projection
 
 Kernel = Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]
 
@@ -152,18 +151,13 @@ def make_ocr_batches(decoder: str, allowlist: str | None = None) -> Kernel:
     easyocr/easyocr.py:363-368: allowlist -> ignore set pushed into the
     softmax columns). The lang column routes the recognition model and
     RTL post-processing (Arabic word order within lines — the
-    reference's bidi reordering, easyocr/easyocr.py:414-418)."""
+    reference's bidi reordering, easyocr/easyocr.py:414-418). Text and
+    conf are ``reader.text_projection`` of the free-merged results, the
+    projection ``readtext_text`` returns."""
 
     def ocr(img: np.ndarray, lang: str) -> Iterator[tuple]:
-        results = get_reader(decoder, allowlist, lang).readtext(img)
-        kept = [(b, t, c) for b, t, c in results if t]
-        if lang == "arabic":
-            # a new line starts where the box top changes
-            lines = groupby(kept, key=lambda k: k[0][0][1])
-            words = [t for _, line in lines for _, t, _ in reversed(list(line))]
-        else:
-            words = [t for _, t, _ in kept]
-        yield " ".join(words), min((c for _, _, c in kept), default=0.0), len(results)
+        results = get_reader(decoder, allowlist, lang).readtext(img, free_merge=True)
+        yield (*text_projection(results, rtl=lang == "arabic"), len(results))
 
     return image_kernel(OCR_RESULT_SCHEMA, ocr)
 

@@ -82,11 +82,11 @@ def media_images(
     output partitioning and spreads image-size skew; AQE may coalesce
     afterwards. num_partitions defaults to 2 x defaultParallelism —
     enough wave slack to absorb image-size skew, small enough that
-    per-task Python overhead stays negligible (measured: 4x was slower
-    than 2x even with worker reuse, but while each Python task still
-    paid ~0.2 CPU-s re-reading Spark's archives, a cost
-    ``easyocr_spark.worker_daemon`` has since removed; not re-measured
-    since).
+    per-task Python overhead stays negligible. Re-measured after
+    ``easyocr_spark.worker_daemon`` removed the per-task archive
+    re-read: on perfbench ocr_dense (4 vCPU, 5 seeds), 2x vs 4x read
+    a median 5.50 vs 6.03 cpu_ms_per_doc and 4x won 2 of 5, so 2x
+    stays.
     """
     n = num_partitions or spans.sparkSession.sparkContext.defaultParallelism * 2
     refs = spans.filter(F.col("kind") == "media").select("media_ref").distinct()

@@ -23,6 +23,9 @@ also be the right default on a 1000-executor cluster reading 100 TB:
   py-files are added.
 - ``spark.driver.memory`` defaults to half the machine's physical RAM,
   capped at 48g (``SPARK_DRIVER_MEM`` overrides it).
+- ``local[N]`` defaults to the CPUs the process may run on
+  (``SPARK_GRAFT_CPUS`` overrides it): ``DEFAULT_CPUS``, which the CLI,
+  the benches and the contract check all use.
 """
 
 from __future__ import annotations
@@ -31,7 +34,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 
 def default_driver_memory() -> str:

@@ -3,11 +3,14 @@ kernel's output frame matches its schema string, a kernel runs once per
 distinct (bytes, lang) in a partition, and a decode failure names the
 media_ref that caused it."""
 
+import numpy as np
 import pandas as pd
 import pytest
 
-from easyocr_spark.fixtures import corpus
+from easyocr_spark.fixtures import corpus, render
+from easyocr_spark.fixtures.png import encode_gray
 from easyocr_spark.ocr import udfs
+from easyocr_spark.ocr.reader import StandInReader
 
 # one plain latin, one slanted latin and one arabic (RTL) image
 REFS = ["m_3_0", "m_0_3", "m_2_0"]
@@ -102,3 +105,25 @@ def test_harness_runs_each_distinct_image_once():
     corrupt = pd.DataFrame({"media_ref": ["x", "y"], "content": [png[:40]] * 2})
     with pytest.raises(ValueError, match="media_ref 'x'"):
         list(kernel(iter([corrupt])))
+
+
+def test_ocr_kernel_text_is_the_readtext_text_projection():
+    """The OCR kernel's text is the reader's span-text projection: on a
+    line holding a slanted word then an upright one, both read the
+    words in page order (free quads merged into reading position)."""
+    up = render.render_text([["SPARK"]], scale=2)
+    sl = render.render_text([["QUERY"]], scale=2, slant_dy=2)
+    h = max(up.shape[0], sl.shape[0])
+    canvas = np.full((h, up.shape[1] + sl.shape[1] + 20), 255, dtype=np.uint8)
+    canvas[: sl.shape[0], : sl.shape[1]] = sl
+    canvas[: up.shape[0], sl.shape[1] + 20 :] = up
+    batch = pd.DataFrame(
+        {"media_ref": ["mixed"], "content": [encode_gray(canvas)], "lang": ["latin"]}
+    )
+    out = pd.concat(list(udfs.ocr_batches(iter([batch]))))
+    reader = StandInReader()
+    assert reader.readtext_text(canvas) == "QUERY SPARK"
+    assert out["text"].tolist() == ["QUERY SPARK"]
+    results = reader.readtext(canvas)
+    assert len(results) == 2
+    assert out[["conf", "n_boxes"]].values.tolist() == [[min(c for _, _, c in results), 2]]

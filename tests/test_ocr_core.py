@@ -141,6 +141,63 @@ def test_half_res_min_matches_block_reshape_min(shape):
     )
 
 
+def _cells_by_loop(ink):
+    # per-column reference: a cell is a run of ink columns; its ink
+    # rows span [top, bottom)
+    spans, start = [], None
+    for x in range(ink.shape[1] + 1):
+        inked = x < ink.shape[1] and ink[:, x].any()
+        if inked and start is None:
+            start = x
+        elif not inked and start is not None:
+            spans.append((start, x))
+            start = None
+    cells = []
+    for s, e in spans:
+        ys = [y for y in range(ink.shape[0]) if ink[y, s:e].any()]
+        cells.append((s, e, ys[0], ys[-1] + 1))
+    return cells
+
+
+def test_glyph_cells_match_per_column_loop():
+    rng = np.random.default_rng(11)
+    masks = [
+        np.zeros((4, 7), dtype=bool),  # all blank
+        np.zeros((0, 5), dtype=bool),
+        np.ones((3, 1), dtype=bool),  # one column
+        np.array([[0, 1, 1, 0, 1, 0, 1, 1, 0]], dtype=bool),  # runs one column apart
+        np.eye(6, dtype=bool),  # every column its own run, one row each
+    ]
+    padded = np.zeros((5, 12), dtype=bool)
+    padded[1:4, 3:5] = padded[2, 7:9] = True  # leading and trailing blank columns
+    masks.append(padded)
+    for h, w in [(1, 1), (1, 9), (5, 1), (7, 13), (12, 40), (20, 3)]:
+        for p in (0.1, 0.4):
+            blank_cols = rng.random(w) < 0.3
+            masks.append((rng.random((h, w)) < p) & ~blank_cols)
+    for ink in masks:
+        got = list(zip(*(a.tolist() for a in detection.glyph_cells(ink))))
+        assert got == _cells_by_loop(ink), ink.astype(int)
+        starts, ends = detection.runs(ink.any(axis=0))
+        assert list(zip(starts.tolist(), ends.tolist())) == [c[:2] for c in got]
+
+
+def test_smooth_cells_read_blend_phase_and_sub_pixel_tops():
+    word, s = "HELLO", 2
+    smooth = render.render_text_smooth([[word]], scale=s)
+    upright = render.render_text([[word]], scale=s)
+    starts, ends, tops, half, heights = detection.smooth_cells(smooth)
+    cells = _cells_by_loop(upright <= 250)
+    assert len(starts) == len(cells) == len(word)
+    for g, (s0, e0, t0, b0) in enumerate(cells):
+        drop = render.smooth_drop_quarters(g, s) / 4  # whole or half pixels
+        assert (starts[g], ends[g]) == (s0, e0)
+        assert half[g] == (drop % 1 == 0.5)
+        assert tops[g] + 0.5 * half[g] == t0 + drop
+        assert heights[g] == b0 - t0  # the blend's extra row is not counted
+    assert half.any() and not half.all()
+
+
 def test_resize_aspect_ratio_caps_and_pads():
     img = np.full((100, 3000), 255, dtype=np.uint8)
     out, ratio = detection.resize_aspect_ratio(img, canvas_size=2560)
@@ -252,3 +309,31 @@ def test_golden_kernel_digest():
     # readtext is deterministic and bit-exact: a kernel rewrite must keep
     # every box coordinate, text and confidence bit
     assert golden_kernel_digest() == GOLDEN_DIGEST
+
+
+# sha256 of every detector output readtext does not reach: the poly
+# outlines (staircase and sub-pixel smooth) and the char-count priority
+# order, over GOLDEN_REFS
+GOLDEN_DETECT_DIGEST = "225b383fa69fdba39336e174836e96dd7f47e1060d9d01ef94d593c0641f95aa"
+
+
+def golden_detect_digest() -> str:
+    def pts(shape) -> list | None:
+        return None if shape is None else [float(v).hex() for p in shape for v in p]
+
+    h = hashlib.sha256()
+    for ref in GOLDEN_REFS:
+        img = png.decode_gray(corpus.render_media(ref))
+        outputs = {
+            "polys": detection.detect_polys(img),
+            "smooth_polys": detection.detect_smooth_polys(img),
+            "chars2": detection.detect(img, optimal_num_chars=2),
+            "chars6": detection.detect(img, optimal_num_chars=6),
+        }
+        for name, shapes in outputs.items():
+            h.update(repr((name, ref, [pts(s) for s in shapes])).encode())
+    return h.hexdigest()
+
+
+def test_golden_detect_digest():
+    assert golden_detect_digest() == GOLDEN_DETECT_DIGEST

@@ -1,11 +1,14 @@
 """The executor's Python daemon (``easyocr_spark.worker_daemon``): workers
 import pyspark from the installed copy, keep no Spark archive in their
-importer cache, and start with the kernels loaded."""
+importer cache, and start with the kernels loaded. Plus the session's
+machine-fitted defaults (driver memory, local[] parallelism)."""
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
+import sys
 import zipfile
 
 import pyspark
@@ -14,6 +17,7 @@ from easyocr_spark.session import default_driver_memory
 from easyocr_spark.worker_daemon import without_spark_archives
 
 SITE = os.path.dirname(os.path.dirname(pyspark.__file__))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _fake_pyspark_zip(path, version):
@@ -54,6 +58,24 @@ def test_default_driver_memory_fits_the_machine():
     mem = default_driver_memory()
     assert mem.endswith("m")
     assert 0 < int(mem[:-1]) <= min(phys_mb // 2, 48 << 10)
+
+
+def test_default_cpus_fits_the_machine():
+    """local[] parallelism without --cpus is SPARK_GRAFT_CPUS, else the
+    CPUs this process may run on (read at import, so each case is a
+    fresh interpreter)."""
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    code = "from easyocr_spark.session import DEFAULT_CPUS; print(DEFAULT_CPUS)"
+
+    def default_cpus(env: dict) -> int:
+        out = subprocess.run(
+            [sys.executable, "-c", code], env=env, cwd=REPO, capture_output=True,
+            text=True, check=True,
+        )
+        return int(out.stdout)
+
+    assert default_cpus(env) == len(os.sched_getaffinity(0))
+    assert default_cpus({**env, "SPARK_GRAFT_CPUS": "3"}) == 3
 
 
 def test_workers_forked_from_preloaded_daemon(spark):

@@ -43,7 +43,7 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark(cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    spark = get_spark()  # local[session.DEFAULT_CPUS]
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
