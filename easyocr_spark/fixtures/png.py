@@ -107,41 +107,43 @@ def _unfilter(raw: np.ndarray, h: int, row_bytes: int, bpp: int) -> np.ndarray:
     """Reconstruct filtered scanlines -> uint8[h, row_bytes]. bpp-aware
     (Sub/Average/Paeth reference the pixel bpp bytes to the left)."""
     filters = raw[:, 0]
-    out = raw[:, 1:].astype(np.int32).copy()
-    if np.any(filters):
-        prev = np.zeros(row_bytes, dtype=np.int32)
-        for y in range(h):
-            f = filters[y]
-            row = out[y]
-            if f == 0:
-                pass
-            elif f == 1:  # Sub
-                for x in range(bpp, row_bytes):
-                    row[x] = (row[x] + row[x - bpp]) & 0xFF
-            elif f == 2:  # Up
-                row += prev
-                row &= 0xFF
-            elif f == 3:  # Average
-                for x in range(row_bytes):
-                    a = row[x - bpp] if x >= bpp else 0
-                    row[x] = (row[x] + (a + int(prev[x])) // 2) & 0xFF
-            elif f == 4:  # Paeth
-                for x in range(row_bytes):
-                    a = row[x - bpp] if x >= bpp else 0
-                    b = int(prev[x])
-                    c = int(prev[x - bpp]) if x >= bpp else 0
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                    row[x] = (row[x] + pred) & 0xFF
-            else:
-                raise ValueError(f"bad filter {f}")
-            prev = row
+    if not filters.any():  # filter 0 (None) on every row: the scanlines are the pixels
+        return raw[:, 1:].copy()
+    out = raw[:, 1:].astype(np.int32)
+    prev = np.zeros(row_bytes, dtype=np.int32)
+    for y in range(h):
+        f = filters[y]
+        row = out[y]
+        if f == 0:
+            pass
+        elif f == 1:  # Sub
+            for x in range(bpp, row_bytes):
+                row[x] = (row[x] + row[x - bpp]) & 0xFF
+        elif f == 2:  # Up
+            row += prev
+            row &= 0xFF
+        elif f == 3:  # Average
+            for x in range(row_bytes):
+                a = row[x - bpp] if x >= bpp else 0
+                row[x] = (row[x] + (a + int(prev[x])) // 2) & 0xFF
+        elif f == 4:  # Paeth
+            for x in range(row_bytes):
+                a = row[x - bpp] if x >= bpp else 0
+                b = int(prev[x])
+                c = int(prev[x - bpp]) if x >= bpp else 0
+                p = a + b - c
+                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
+                row[x] = (row[x] + pred) & 0xFF
+        else:
+            raise ValueError(f"bad filter {f}")
+        prev = row
     return out.astype(np.uint8)
 
 
 def _bt601(rgb: np.ndarray) -> np.ndarray:
-    rgb = rgb.astype(np.uint32)
+    # uint16 holds every sum: at most 256 * 255 + 128 = 65408
+    rgb = rgb.astype(np.uint16)
     gray = (77 * rgb[:, :, 0] + 150 * rgb[:, :, 1] + 29 * rgb[:, :, 2] + 128) >> 8
     return gray.astype(np.uint8)
 

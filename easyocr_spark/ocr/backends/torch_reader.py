@@ -18,12 +18,15 @@ import numpy as np
 from ..grouping import group_text_box, min_size_filter
 from ..paragraph import get_paragraph
 from ..reader import MIN_SIZE, four_point_transform, merge_to_free, text_projection
-from ..recognition import adjust_contrast_grey, contrast_grey
+from ..recognition import (
+    ADJUST_CONTRAST,
+    CONTRAST_THS,
+    adjust_contrast_grey,
+    build_ignore_mask,
+    contrast_grey,
+)
 from .torch_craft import TorchCraftDetector
 from .torch_crnn import TorchCrnnRecognizer
-
-CONTRAST_THS = 0.1
-ADJUST_CONTRAST = 0.5
 
 # (lang codes, gen1 model key) in the reference auto-router's EXACT
 # priority order (easyocr/easyocr.py:111-168 elif chain: th ... ta,
@@ -100,21 +103,8 @@ class TorchReader:
             )
         else:
             self.recognizer = TorchCrnnRecognizer(crnn_weights, quantize=quantize)
-        # allow/blocklist -> ignore mask over the model charset (same
-        # semantics as recognition.build_ignore_mask, different charset)
-        cs = self.recognizer.charset
-        self.ignore = None
-        if allowlist is not None or blocklist:
-            mask = np.zeros(len(cs) + 1, dtype=bool)
-            if allowlist is not None:
-                for i, ch in enumerate(cs):
-                    if ch not in allowlist:
-                        mask[i + 1] = True
-            elif blocklist:
-                for ch in blocklist:
-                    if ch in cs:
-                        mask[cs.index(ch) + 1] = True
-            self.ignore = mask
+        # allow/blocklist -> ignore mask over the model charset
+        self.ignore = build_ignore_mask(allowlist, blocklist, self.recognizer.charset)
 
     def detect(self, gray: np.ndarray, min_size: int = MIN_SIZE):
         boxes = self.detector.detect(gray)
@@ -161,6 +151,16 @@ class TorchReader:
         horizontal, free = self.detect(gray)
         return self.recognize(gray, horizontal, free, paragraph=paragraph,
                               free_merge=free_merge)
+
+    # the batch entry points the ocr/udfs.py kernels call; the torch
+    # path runs image by image
+    def detect_batched(self, grays: list[np.ndarray], min_size: int = MIN_SIZE):
+        return [self.detect(g, min_size) for g in grays]
+
+    def readtext_batched(self, grays: list[np.ndarray], paragraph: bool = False,
+                         free_merge: bool = False):
+        return [self.readtext(g, paragraph=paragraph, free_merge=free_merge)
+                for g in grays]
 
     def readtext_text(self, gray: np.ndarray, rtl: bool = False) -> str:
         return text_projection(self.readtext(gray, free_merge=True), rtl)[0]

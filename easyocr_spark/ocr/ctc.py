@@ -26,20 +26,27 @@ def custom_mean(x: np.ndarray) -> float:
     return float(np.prod(x) ** (2.0 / np.sqrt(len(x))))
 
 
-def greedy_collapse(probs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """probs float[T, C] -> (nonblank labels, their step max-probs) after
-    collapse-repeats + drop-blank (the decode_greedy core)."""
+def greedy_path(probs: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """probs float[T, C] -> (steps, labels, confs) of the labels left
+    after collapse-repeats + drop-blank (the decode_greedy core): each
+    one's frame index, class and step max-prob."""
     if probs.size == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0)
+        empty = np.empty(0, dtype=np.int64)
+        return empty, empty, np.empty(0)
     idx = probs.argmax(axis=1)
-    maxp = probs[np.arange(len(idx)), idx]
     # collapse repeats: keep positions where label differs from previous
     keep = np.ones(len(idx), dtype=bool)
     keep[1:] = idx[1:] != idx[:-1]
-    labels = idx[keep]
-    confs = maxp[keep]
-    nonblank = labels != BLANK
-    return labels[nonblank], confs[nonblank]
+    steps = np.flatnonzero(keep & (idx != BLANK))
+    labels = idx[steps]
+    return steps, labels, probs[steps, labels]
+
+
+def greedy_collapse(probs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """probs float[T, C] -> (nonblank labels, their step max-probs) after
+    collapse-repeats + drop-blank."""
+    _, labels, confs = greedy_path(probs)
+    return labels, confs
 
 
 def decode_greedy(probs: np.ndarray, charset: str) -> tuple[str, float]:
@@ -75,7 +82,7 @@ def word_beam_search(
     semantics (decode_wordbeamsearch easyocr/utils.py:352-384 +
     BeamState.wordsearch :88-108): the matrix passed in is already ONE
     space-separated segment — segmentation happens upstream at the
-    word gaps (recognize_crop's chunk split plays the role of the
+    word gaps (recognize_crops' chunk split plays the role of the
     no-separator branch's argwhere(argmax != space) timestep split) —
     beam-search it, walk the final beam candidates in probability
     order, and snap to the FIRST candidate that is a dictionary word.

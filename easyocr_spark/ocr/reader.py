@@ -8,6 +8,11 @@ API mirror of the reference's Reader (reference easyocr/easyocr.py):
   right words), two-pass contrast retry, greedy/beam/wordbeam decoder
   switch, allowlist/blocklist masking, rotation TTA.
 - ``readtext(gray)`` = detect ∘ recognize             (:440-474)
+- ``detect_batched`` / ``recognize_batched`` / ``readtext_batched``
+  (:538-579): the same over a list of images — one detector canvas pass
+  (``detection.detect_batched``) and one recognizer pass
+  (``recognition.get_text``) over every crop of the batch. The
+  per-image methods are these with a batch of one.
 - ``text_projection`` — the projection our span pipeline uses: non-empty
   texts joined by single spaces in reading order, plus their min
   confidence; ``readtext_text`` is its text.
@@ -35,7 +40,7 @@ import numpy as np
 from . import detection, detection_projection
 from .grouping import group_text_box, min_size_filter
 from .paragraph import get_paragraph
-from .recognition import build_ignore_mask, recognize_two_pass
+from .recognition import build_ignore_mask, get_text
 
 MIN_SIZE = 10
 
@@ -178,43 +183,97 @@ class StandInReader:
         # two template atlases standing in for two script models)
         self.recog_model = "cjk" if "chinese" in self.lang_list else "latin"
 
+    def _detect_boxes(
+        self, grays: list[np.ndarray], optimal_num_chars: int | None
+    ) -> list[list[np.ndarray]]:
+        if self.detect_network == "projection":
+            return [detection_projection.detect(g) for g in grays]
+        if self.detect_network == "dbnet":
+            from . import detection_db
+
+            return [detection_db.detect(g) for g in grays]
+        return detection.detect_batched(grays, optimal_num_chars=optimal_num_chars)
+
+    def detect_batched(
+        self,
+        grays: list[np.ndarray],
+        min_size: int = MIN_SIZE,
+        optimal_num_chars: int | None = None,
+    ) -> list[tuple[list[list[int]], list[list[list[float]]]]]:
+        """Per image (horizontal_list, free_list); the craft detector
+        runs once over the whole batch."""
+        out = []
+        for boxes in self._detect_boxes(grays, optimal_num_chars):
+            # with a char-count target the detector's priority order is
+            # the answer — grouping must not re-sort it (reference
+            # easyocr/easyocr.py:342: sort_output = optimal_num_chars is None)
+            horizontal, free = group_text_box(
+                boxes, sort_output=optimal_num_chars is None
+            )
+            out.append(min_size_filter(horizontal, free, min_size))
+        return out
+
     def detect(
         self,
         gray: np.ndarray,
         min_size: int = MIN_SIZE,
         optimal_num_chars: int | None = None,
     ) -> tuple[list[list[int]], list[list[list[float]]]]:
-        if self.detect_network == "projection":
-            boxes = detection_projection.detect(gray)
-        elif self.detect_network == "dbnet":
-            from . import detection_db
+        return self.detect_batched([gray], min_size, optimal_num_chars)[0]
 
-            boxes = detection_db.detect(gray)
-        else:
-            boxes = detection.detect(gray, optimal_num_chars=optimal_num_chars)
-        # with a char-count target the detector's priority order is the
-        # answer — grouping must not re-sort it (reference
-        # easyocr/easyocr.py:342: sort_output = optimal_num_chars is None)
-        horizontal, free = group_text_box(
-            boxes, sort_output=optimal_num_chars is None
-        )
-        return min_size_filter(horizontal, free, min_size)
-
-    def _decode_crop(
-        self, crop: np.ndarray, rotation_info: list[int] | None
-    ) -> tuple[str, float]:
-        text, conf = recognize_two_pass(
-            crop, decoder=self.decoder, ignore=self.ignore, model=self.recog_model
-        )
+    def _decode_crops(
+        self, crops: list[np.ndarray], rotation_info: list[int] | None
+    ) -> list[tuple[str, float]]:
+        """Two-pass recognition of every crop, then each listed rotation
+        of every crop; a rotation wins where its confidence is higher."""
+        kwargs = {"decoder": self.decoder, "ignore": self.ignore, "model": self.recog_model}
+        best = get_text(crops, **kwargs)
         for rot in rotation_info or []:
-            rotated = np.rot90(crop, k=rot // 90)
-            t2, c2 = recognize_two_pass(
-                rotated, decoder=self.decoder, ignore=self.ignore,
-                model=self.recog_model,
-            )
-            if c2 > conf:
-                text, conf = t2, c2
-        return text, conf
+            rotated = get_text([np.rot90(c, k=rot // 90) for c in crops], **kwargs)
+            best = [r if r[1] > b[1] else b for b, r in zip(best, rotated)]
+        return best
+
+    def recognize_batched(
+        self,
+        grays: list[np.ndarray],
+        detections: list[tuple[list[list[int]], list[list[list[float]]]]],
+        rotation_info: list[int] | None = None,
+        paragraph: bool = False,
+        free_merge: bool = False,
+    ) -> list:
+        """``recognize`` for a batch of images and their detections: the
+        crops of every image are recognized together."""
+        crops: list[np.ndarray] = []
+        boxes: list[tuple[int, list]] = []  # (image index, result box)
+        for i, (gray, (horizontal_list, free_list)) in enumerate(zip(grays, detections)):
+            h, w = gray.shape
+            # horizontal boxes are already in reading order from
+            # grouping; the reference's get_image_list re-sorts by top y
+            # (easyocr/utils.py:621-622) which is stable-equal here
+            for x0, x1, y0, y1 in horizontal_list:
+                x0c, y0c = max(0, x0), max(0, y0)
+                crop = gray[y0c : min(h, y1), x0c : min(w, x1)]
+                if crop.size == 0:
+                    continue
+                crops.append(crop)
+                boxes.append((i, [[x0, y0], [x1, y0], [x1, y1], [x0, y1]]))
+            for quad in free_list:
+                q = np.asarray(quad)
+                if detection.vertical_edged(q):
+                    crops.append(deshear_crop(gray, q))
+                else:
+                    crops.append(four_point_transform(gray, q))
+                boxes.append((i, [list(p) for p in quad]))
+        results: list[list] = [[] for _ in grays]
+        for (i, box), (text, conf) in zip(boxes, self._decode_crops(crops, rotation_info)):
+            results[i].append((box, text, conf))
+        mode = "rtl" if "arabic" in self.lang_list else "ltr"
+        for i, (_, free_list) in enumerate(detections):
+            if free_merge:
+                results[i] = merge_to_free(results[i], len(free_list))
+            if paragraph:
+                results[i] = get_paragraph(results[i], mode=mode)
+        return results
 
     def recognize(
         self,
@@ -225,33 +284,24 @@ class StandInReader:
         paragraph: bool = False,
         free_merge: bool = False,
     ) -> list:
-        h, w = gray.shape
-        results: list[tuple[list, str, float]] = []
-        # horizontal boxes are already in reading order from grouping;
-        # the reference's get_image_list re-sorts by top y
-        # (easyocr/utils.py:621-622) which is stable-equal here
-        for x0, x1, y0, y1 in horizontal_list:
-            x0c, y0c = max(0, x0), max(0, y0)
-            crop = gray[y0c : min(h, y1), x0c : min(w, x1)]
-            if crop.size == 0:
-                continue
-            text, conf = self._decode_crop(crop, rotation_info)
-            box = [[x0, y0], [x1, y0], [x1, y1], [x0, y1]]
-            results.append((box, text, conf))
-        for quad in free_list:
-            q = np.asarray(quad)
-            if detection.vertical_edged(q):
-                crop = deshear_crop(gray, q)
-            else:
-                crop = four_point_transform(gray, q)
-            text, conf = self._decode_crop(crop, rotation_info)
-            results.append(([list(p) for p in quad], text, conf))
-        if free_merge:
-            results = merge_to_free(results, len(free_list))
-        if paragraph:
-            mode = "rtl" if "arabic" in self.lang_list else "ltr"
-            return get_paragraph(results, mode=mode)
-        return results
+        return self.recognize_batched(
+            [gray], [(horizontal_list, free_list)], rotation_info, paragraph, free_merge
+        )[0]
+
+    def readtext_batched(
+        self,
+        grays: list[np.ndarray],
+        rotation_info: list[int] | None = None,
+        paragraph: bool = False,
+        free_merge: bool = False,
+    ) -> list:
+        """readtext over a batch of images (the reference's
+        readtext_batched, easyocr/easyocr.py:538-579): one detector pass
+        and one recognizer pass for the whole batch; per image the same
+        results as ``readtext``."""
+        return self.recognize_batched(
+            grays, self.detect_batched(grays), rotation_info, paragraph, free_merge
+        )
 
     def readtext(
         self,
@@ -260,15 +310,7 @@ class StandInReader:
         paragraph: bool = False,
         free_merge: bool = False,
     ) -> list:
-        horizontal, free = self.detect(gray)
-        return self.recognize(
-            gray,
-            horizontal,
-            free,
-            rotation_info=rotation_info,
-            paragraph=paragraph,
-            free_merge=free_merge,
-        )
+        return self.readtext_batched([gray], rotation_info, paragraph, free_merge)[0]
 
     def readtext_text(self, gray: np.ndarray, rtl: bool = False) -> str:
         """Reading-order span text: ``text_projection`` of the

@@ -12,18 +12,20 @@ Pipeline per crop, mirroring the reference's recognition contract:
    the glyph atlas -> a [T, C] probability matrix with column 0 = CTC
    blank. Each glyph emits two identical frames followed by a blank
    frame (as a stride-based CNN over the cell grid would), so the CTC
-   collapse-repeats + drop-blank path does real work. All n glyph
-   windows of a crop (each nearest-resized to GLYPH_H x GLYPH_W) are
-   scored at once: one [n, 35] x [35, C] matmul per script model, one
-   sharpen + normalise over the [3n, C] frames, then a slice per word
-   chunk for decoding — bit-identical to scoring window by window.
+   collapse-repeats + drop-blank path does real work. The crops of a
+   batch are prepared together (``_glyph_windows``: every crop on one
+   canvas) and all their n glyph windows (each nearest-resized to
+   GLYPH_H x GLYPH_W) are scored at once: one [n, 35] x [35, C] matmul
+   per script model, one sharpen + normalise over the [3n, C] frames,
+   one greedy CTC pass, then a slice per word chunk — bit-identical to
+   scoring and decoding crop by crop, window by window.
 4. CTC greedy (default) or prefix beam search decode; confidence =
    custom_mean of non-blank step max-probs (reference
    easyocr/recognition.py:13-14,99-151).
 5. Two-pass orchestration a la get_text (reference
    easyocr/recognition.py:186-233): pass 1 plain; if conf <
    contrast_ths(0.1), pass 2 contrast-adjusted; keep the higher-conf
-   result.
+   result. ``get_text`` runs each pass over a whole batch of crops.
 
 Word gaps >= SPACE_GAP base px inside one crop decode as spaces (the
 production path keeps words in separate boxes; this covers merged-box
@@ -32,11 +34,13 @@ crops from group_text_box's width_ths merging).
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 
 from ..fixtures.fonts import CHARSET, GLYPH_H, GLYPH_W, MODEL_TEMPLATES
-from .ctc import ctc_beam_search, custom_mean, greedy_collapse, word_beam_search
-from .detection import ink_mask, runs
+from .ctc import ctc_beam_search, custom_mean, greedy_path, word_beam_search
+from .detection import canvas_groups, ink_mask, runs
 
 CONTRAST_THS = 0.1  # reference easyocr/easyocr.py:353 default
 ADJUST_CONTRAST = 0.5  # reference default target passed to pass 2
@@ -45,9 +49,29 @@ SPACE_GAP = 6  # base px gap that reads as a word separator
 N_CLASSES = len(CHARSET) + 1
 
 
+def _percentile(cum: np.ndarray, q: float) -> float:
+    """The q-quantile (0..1) of the uint8 values counted by ``cum`` (the
+    cumulative histogram), as ``np.percentile``'s default linear method
+    computes it: the order statistics at floor and ceil of (n - 1) * q,
+    blended by the same float64 expressions (numpy's ``_lerp``). The
+    k-th smallest value is the first bin whose cumulative count passes
+    k, so no sort is needed."""
+    n = int(cum[-1])
+    v = (n - 1) * q
+    if v >= n - 1:
+        return float(np.searchsorted(cum, n - 1, side="right"))
+    i = math.floor(v)
+    a, b = np.searchsorted(cum, [i, i + 1], side="right").tolist()
+    t = v - i
+    return b - (b - a) * (1 - t) if t >= 0.5 else a + (b - a) * t
+
+
 def contrast_grey(img: np.ndarray) -> tuple[float, float, float]:
-    """(contrast, high, low) — reference easyocr/recognition.py:16-20."""
-    high, low = (float(v) for v in np.percentile(img, (90, 10)))
+    """(contrast, high, low) of a uint8 image — reference
+    easyocr/recognition.py:16-20, with high and low the 90th and 10th
+    percentiles (``_percentile``)."""
+    cum = np.cumsum(np.bincount(img.ravel(), minlength=256))
+    high, low = _percentile(cum, 0.9), _percentile(cum, 0.1)
     return (high - low) / max(10.0, high + low), high, low
 
 
@@ -66,10 +90,6 @@ def _nearest_index(n: int, size):
     """Source indices of an n-sample nearest resize of ``size`` samples;
     ``size`` may be an int array column, giving one index row each."""
     return ((np.arange(n) + 0.5) * size / n).astype(np.int64).clip(0, size - 1)
-
-
-def _nearest_resize(img: np.ndarray, h: int, w: int) -> np.ndarray:
-    return img[_nearest_index(h, img.shape[0])][:, _nearest_index(w, img.shape[1])]
 
 
 # hoisted constants for the frame scorer (computed once per process,
@@ -124,24 +144,28 @@ def _frames(windows: np.ndarray, model: str) -> np.ndarray:
 
 
 def build_ignore_mask(
-    allowlist: str | None = None, blocklist: str | None = None
+    allowlist: str | None = None,
+    blocklist: str | None = None,
+    charset: str = CHARSET,
 ) -> np.ndarray | None:
     """Character-constraint mask pushed into decoding (the reference
     zeroes softmax columns of ignored chars and renormalizes,
     easyocr/recognition.py:117-122; the ignore set is charset -
     allowlist, or blocklist — easyocr/easyocr.py:363-368). Returns a
-    bool[N_CLASSES] with True = ignore (never index 0 = blank)."""
+    bool[len(charset) + 1] with True = ignore (never index 0 = blank);
+    ``charset`` is the recognition model's (the torch models carry
+    their own)."""
     if allowlist is None and blocklist is None:
         return None
-    mask = np.zeros(N_CLASSES, dtype=bool)
+    mask = np.zeros(len(charset) + 1, dtype=bool)
     if allowlist is not None:
-        for i, ch in enumerate(CHARSET):
+        for i, ch in enumerate(charset):
             if ch not in allowlist:
                 mask[i + 1] = True
     elif blocklist:
         for ch in blocklist:
-            if ch in CHARSET:
-                mask[CHARSET.index(ch) + 1] = True
+            if ch in charset:
+                mask[charset.index(ch) + 1] = True
     return mask
 
 
@@ -155,6 +179,138 @@ def _apply_ignore(probs: np.ndarray, ignore: np.ndarray | None) -> np.ndarray:
     return out / s
 
 
+def _canvas_windows(crops: list[np.ndarray]) -> tuple[np.ndarray, ...]:
+    """Non-empty uint8 crops -> (windows, owner, word) for the crops
+    stacked on one canvas; see ``_glyph_windows``."""
+    top = np.concatenate(([0], np.cumsum([c.shape[0] for c in crops])))
+    canvas = np.full((top[-1], max(c.shape[1] for c in crops)), 255, dtype=np.uint8)
+    for c, y in zip(crops, top.tolist()):
+        canvas[y : y + c.shape[0], : c.shape[1]] = c
+    ink = ink_mask(canvas)
+    # each crop's ink bbox: its first and last ink row, and the first
+    # and last ink column of its band
+    rows = np.flatnonzero(ink.any(axis=1))
+    r0, r1 = np.searchsorted(rows, top[:-1]), np.searchsorted(rows, top[1:]) - 1
+    inked = np.flatnonzero(r0 <= r1)
+    band, col = np.nonzero(np.logical_or.reduceat(ink, top[:-1], axis=0)[inked])
+    c0 = np.searchsorted(band, np.arange(len(inked)))
+    c1 = np.searchsorted(band, np.arange(len(inked)), side="right") - 1
+    y0, x0 = rows[r0[inked]], col[c0]
+    h, w = rows[r1[inked]] + 1 - y0, col[c1] + 1 - x0
+    # GLYPH_H base rows: every scale-th ink pixel when the ink height is
+    # scale * GLYPH_H, else a nearest resize to round(w * GLYPH_H / h)
+    # columns (half-to-even rounding and ``_nearest_index``'s float64
+    # formula, per column, so each crop samples the pixels it would alone)
+    scale = np.maximum(1, np.round(h / GLYPH_H)).astype(np.int64)
+    exact = h == scale * GLYPH_H
+    row_at = y0[:, None] + np.where(
+        exact[:, None],
+        scale[:, None] // 2 + scale[:, None] * np.arange(GLYPH_H),
+        _nearest_index(GLYPH_H, h[:, None]),
+    )
+    width = np.where(
+        exact,
+        -(-(w - scale // 2) // scale),  # len(range(scale // 2, w, scale))
+        np.maximum(1, np.round(w / (h / GLYPH_H))).astype(np.int64),
+    )
+    own = np.repeat(np.arange(len(inked)), width)
+    j = np.arange(len(own)) - np.repeat(np.cumsum(width) - width, width)
+    col_at = x0[own] + np.where(
+        exact[own],
+        scale[own] // 2 + scale[own] * j,
+        ((j + 0.5) * w[own] / width[own]).astype(np.int64).clip(0, w[own] - 1),
+    )
+    base = ink[row_at[own].T, col_at]  # every crop's GLYPH_H rows side by side
+    # char segmentation: runs of non-empty base columns, with one blank
+    # column after each crop so no run crosses into the next
+    flags = np.zeros(len(own) + len(inked), dtype=bool)
+    flags[np.arange(len(own)) + own] = base.any(axis=0)
+    starts, ends = runs(flags)
+    seg = np.searchsorted(np.cumsum(width + 1) - width - 1, starts, side="right") - 1
+    starts, ends = starts - seg, ends - seg
+    # glyph windows of every segment, nearest-resized to GLYPH_W columns
+    idx = starts[:, None] + _nearest_index(GLYPH_W, (ends - starts)[:, None])
+    windows = base[:, idx].transpose(1, 0, 2).reshape(len(starts), GLYPH_H * GLYPH_W)
+    # word chunks split at wide gaps
+    word = np.ones(len(starts), dtype=bool)
+    word[1:] = (seg[1:] != seg[:-1]) | (starts[1:] - ends[:-1] >= SPACE_GAP)
+    return windows, inked[seg], word
+
+
+def _glyph_windows(crops: list[np.ndarray]) -> tuple[np.ndarray, ...]:
+    """uint8 crops -> (windows, owner, word): one 0/1 row of
+    GLYPH_H * GLYPH_W per glyph segment of every crop, in crop order;
+    each segment's crop index; and True where a segment starts a word
+    (a crop's first segment, or one past a SPACE_GAP gap). A crop
+    without ink has no segment.
+
+    Per crop: the ink mask trimmed to its ink bbox, brought to GLYPH_H
+    rows (the role of NormalizePAD + aspect resize), split at blank
+    columns into glyph segments, each nearest-resized to GLYPH_W
+    columns. The crops are packed onto canvases (``canvas_groups``, 255
+    pad = no ink), so each step is one array op over many crops."""
+    keep = [i for i, c in enumerate(crops) if c.size]
+    parts = []
+    for group in canvas_groups([crops[i].shape for i in keep]):
+        ids = np.array([keep[i] for i in group])
+        windows, owner, word = _canvas_windows([crops[i] for i in ids])
+        parts.append((windows, ids[owner], word))
+    if not parts:
+        return np.zeros((0, _NPIX), dtype=bool), np.zeros(0, dtype=np.int64), np.zeros(0, dtype=bool)
+    windows, owner, word = (np.concatenate(p) for p in zip(*parts))
+    order = np.argsort(owner, kind="stable")
+    return windows[order], owner[order], word[order]
+
+
+def recognize_crops(
+    crops: list[np.ndarray],
+    adjust: bool = False,
+    decoder: str = "greedy",
+    ignore: np.ndarray | None = None,
+    model: str = "latin",
+) -> list[tuple[str, float]]:
+    """uint8[H, W] crops -> (text, confidence) each, in one pass: every
+    crop's glyph windows go through one ``_frames`` call, and greedy
+    CTC collapses all frames at once. That equals decoding each word
+    chunk alone: every window ends in a blank frame, so no repeat
+    collapses across a chunk boundary, and a chunk's first frame is
+    kept exactly when it is not blank. Beam decoders still run per
+    chunk; the confidence always comes from the greedy path."""
+    if adjust:
+        crops = [adjust_contrast_grey(c, ADJUST_CONTRAST) for c in crops]
+    out = [("", 0.0)] * len(crops)
+    windows, owner, word = _glyph_windows(crops)
+    if not len(owner):
+        return out
+    probs = _apply_ignore(_frames(windows.astype(np.float32), model), ignore)
+    at, labels, confs = greedy_path(probs)
+    chars = [CHARSET[k - 1] for k in labels.tolist()]
+    # frame bounds of every word chunk (3 frames per segment) and the
+    # greedy labels inside each
+    chunk = np.append(np.flatnonzero(word), len(word))
+    bounds = (3 * chunk).tolist()
+    cuts = np.searchsorted(at, bounds).tolist()
+    crop_chunks = np.searchsorted(owner[chunk[:-1]], np.arange(len(crops) + 1)).tolist()
+    for i, (c0, c1) in enumerate(zip(crop_chunks[:-1], crop_chunks[1:])):
+        if c0 == c1:
+            continue
+        words: list[str] = []
+        for k in range(c0, c1):
+            lo, hi = bounds[k], bounds[k + 1]
+            if decoder == "beamsearch":
+                text, _ = ctc_beam_search(probs[lo:hi], CHARSET)
+            elif decoder == "wordbeamsearch":
+                from ..fixtures.corpus import VOCAB  # the stand-in word dict
+
+                text, _ = word_beam_search(probs[lo:hi], CHARSET, VOCAB)
+            else:
+                text = "".join(chars[cuts[k] : cuts[k + 1]])
+            if text:
+                words.append(text)
+        out[i] = " ".join(words), custom_mean(confs[cuts[c0] : cuts[c1]])
+    return out
+
+
 def recognize_crop(
     crop: np.ndarray,
     adjust: bool = False,
@@ -162,51 +318,29 @@ def recognize_crop(
     ignore: np.ndarray | None = None,
     model: str = "latin",
 ) -> tuple[str, float]:
-    """uint8[H, W] crop -> (text, confidence)."""
-    img = adjust_contrast_grey(crop, ADJUST_CONTRAST) if adjust else crop
-    binary = ink_mask(img)
-    rows = np.flatnonzero(binary.any(axis=1))
-    if not len(rows):
-        return "", 0.0
-    cols = np.flatnonzero(binary.any(axis=0))
-    binary = binary[rows[0] : rows[-1] + 1, cols[0] : cols[-1] + 1]
-    h = binary.shape[0]
-    scale = max(1, round(h / GLYPH_H))
-    if h != scale * GLYPH_H:
-        base = _nearest_resize(
-            binary.astype(np.float32), GLYPH_H, max(1, round(binary.shape[1] / (h / GLYPH_H)))
-        ) > 0.5
-    else:
-        base = binary[scale // 2 :: scale, scale // 2 :: scale]
-    # char segmentation: runs of non-empty columns
-    starts, ends = runs(base.any(axis=0))
-    if not len(starts):
-        return "", 0.0
-    # glyph windows of every segment, nearest-resized to GLYPH_H x GLYPH_W
-    # (base is GLYPH_H rows, so only the columns resample)
-    idx = starts[:, None] + _nearest_index(GLYPH_W, (ends - starts)[:, None])
-    windows = base[:, idx].transpose(1, 0, 2).reshape(len(starts), -1)
-    probs = _apply_ignore(_frames(windows.astype(np.float32), model), ignore)
-    # split into word chunks at wide gaps: 3 frames per segment
-    breaks = np.flatnonzero(starts[1:] - ends[:-1] >= SPACE_GAP) + 1
-    bounds = [0, *(3 * breaks).tolist(), len(probs)]
-    words: list[str] = []
-    all_confs: list[np.ndarray] = []
-    for lo, hi in zip(bounds[:-1], bounds[1:]):
-        chunk = probs[lo:hi]
-        labels, confs = greedy_collapse(chunk)
-        if decoder == "beamsearch":
-            text, _ = ctc_beam_search(chunk, CHARSET)
-        elif decoder == "wordbeamsearch":
-            from ..fixtures.corpus import VOCAB  # the stand-in word dict
+    """uint8[H, W] crop -> (text, confidence): ``recognize_crops`` of one."""
+    return recognize_crops([crop], adjust, decoder, ignore, model)[0]
 
-            text, _ = word_beam_search(chunk, CHARSET, VOCAB)
-        else:
-            text = "".join(CHARSET[i - 1] for i in labels)
-        if text:
-            words.append(text)
-        all_confs.append(confs)
-    return " ".join(words), custom_mean(np.concatenate(all_confs))
+
+def get_text(
+    crops: list[np.ndarray],
+    decoder: str = "greedy",
+    contrast_ths: float = CONTRAST_THS,
+    ignore: np.ndarray | None = None,
+    model: str = "latin",
+) -> list[tuple[str, float]]:
+    """get_text's two-pass orchestration over a batch of crops
+    (reference easyocr/recognition.py:186-233): retry every
+    low-confidence crop with contrast adjustment, all retries in one
+    second ``recognize_crops`` pass, and keep the better result."""
+    out = recognize_crops(crops, False, decoder, ignore, model)
+    retry = [i for i, (_, conf) in enumerate(out) if conf < contrast_ths]
+    if retry:
+        again = recognize_crops([crops[i] for i in retry], True, decoder, ignore, model)
+        for i, (text, conf) in zip(retry, again):
+            if conf > out[i][1]:
+                out[i] = text, conf
+    return out
 
 
 def recognize_two_pass(
@@ -216,16 +350,5 @@ def recognize_two_pass(
     ignore: np.ndarray | None = None,
     model: str = "latin",
 ) -> tuple[str, float]:
-    """get_text's two-pass orchestration (reference
-    easyocr/recognition.py:186-233): retry low-confidence crops with
-    contrast adjustment, keep the better result."""
-    text1, conf1 = recognize_crop(
-        crop, adjust=False, decoder=decoder, ignore=ignore, model=model
-    )
-    if conf1 < contrast_ths:
-        text2, conf2 = recognize_crop(
-            crop, adjust=True, decoder=decoder, ignore=ignore, model=model
-        )
-        if conf2 > conf1:
-            return text2, conf2
-    return text1, conf1
+    """``get_text`` for one crop."""
+    return get_text([crop], decoder, contrast_ths, ignore, model)[0]

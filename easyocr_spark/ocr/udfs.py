@@ -3,16 +3,20 @@
 Design contract from BASELINE.json input_hint: vectorized pandas/Arrow
 UDFs ONLY, zero per-row Python at the Spark boundary. One Arrow batch of
 (media_ref, content[, lang]) rows crosses into the Python worker; the
-whole decode -> detect -> group -> crop -> recognize -> order -> concat
-pipeline runs per image inside the batch (the reference's
-readtext_batched unit of work, easyocr/easyocr.py:538-579); one Arrow
-batch of typed rows comes back.
+decode -> detect -> group -> crop -> recognize -> order -> concat
+pipeline runs a batch at a time (the reference's readtext_batched unit
+of work, easyocr/easyocr.py:538-579): the batch's new images of one
+lang go through one detector canvas pass and one recognizer pass
+(``StandInReader.readtext_batched``); one Arrow batch of typed rows
+comes back.
 
-Every kernel here is built by ``image_kernel``, the one harness that
+Every kernel here is built by ``batch_kernel``, the one harness that
 owns the batch loop, the bytes -> image decode, the optional lang
 column, the per-partition result cache keyed by image content and the
-output frame. A kernel only supplies a per-image function yielding its
-row tuples (media_ref excluded) and the schema string naming them.
+output frame. A kernel only supplies a per-batch function — images of
+one lang in, one list of row tuples (media_ref excluded) per image out
+— and the schema string naming the columns; ``image_kernel`` adapts a
+per-image function to it.
 
 Executor-resident model state: this module, with numpy, pandas,
 pyarrow and pyspark, is imported once per executor by the Python
@@ -39,7 +43,6 @@ import pandas as pd
 
 from ..fixtures.png import decode_gray, decode_image, encode_gray
 from .detection import detect_polys, detect_smooth_polys
-from .paragraph import get_paragraph
 from .reader import StandInReader, text_projection
 
 Kernel = Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]
@@ -100,18 +103,20 @@ def get_reader(
     return _READERS[key]
 
 
-def image_kernel(
+def batch_kernel(
     schema: str,
-    per_image: Callable[[object, str], Iterable[tuple]],
+    per_batch: Callable[[list, str], list[list[tuple]]],
     decode: Callable[[bytes], object] = decode_gray,
 ) -> Kernel:
     """mapInPandas harness: (media_ref, content[, lang]) -> ``schema``.
 
-    Each distinct image is decoded once with ``decode`` and handed to
-    ``per_image(image, lang)`` (lang defaults to ""), which yields zero
-    or more row tuples; the harness prepends media_ref and takes the
-    column names from ``schema``. A decode failure fails the job with
-    the offending media_ref in the message.
+    Per Arrow batch, each image not seen before in the partition is
+    decoded once with ``decode``; the new images are grouped by lang
+    (default "") and each group goes to one ``per_batch(images, lang)``
+    call, which returns one list of row tuples per image. The harness
+    prepends media_ref and takes the column names from ``schema``. A
+    decode failure fails the job with the offending media_ref in the
+    message.
 
     A kernel's rows are a pure function of (bytes, lang, kernel
     config), so the harness computes them once per distinct
@@ -128,20 +133,36 @@ def image_kernel(
         cache: dict[tuple[bytes, str], list[tuple]] = {}
         for pdf in it:
             langs = pdf["lang"] if "lang" in pdf.columns else [""] * len(pdf)
-            rows: list[tuple] = []
+            keys: list[tuple[bytes, str]] = []
+            new: dict[str, dict[tuple[bytes, str], object]] = {}
             for ref, data, lang in zip(pdf["media_ref"], pdf["content"], langs):
                 data, lang = bytes(data), str(lang)
                 key = (hashlib.sha256(data).digest(), lang)
-                if key not in cache:
-                    try:
-                        image = decode(data)
-                    except (ValueError, struct.error, zlib.error) as e:
-                        raise ValueError(f"media_ref {ref!r}: {e}") from e
-                    cache[key] = list(per_image(image, lang))
-                rows.extend((ref, *row) for row in cache[key])
+                keys.append(key)
+                if key in cache or key in new.get(lang, ()):
+                    continue
+                try:
+                    new.setdefault(lang, {})[key] = decode(data)
+                except (ValueError, struct.error, zlib.error) as e:
+                    raise ValueError(f"media_ref {ref!r}: {e}") from e
+            for lang, group in new.items():
+                cache.update(zip(group, per_batch(list(group.values()), lang)))
+            rows = [(ref, *row) for ref, key in zip(pdf["media_ref"], keys) for row in cache[key]]
             yield pd.DataFrame(rows, columns=columns)
 
     return kernel
+
+
+def image_kernel(
+    schema: str,
+    per_image: Callable[[object, str], Iterable[tuple]],
+    decode: Callable[[bytes], object] = decode_gray,
+) -> Kernel:
+    """``batch_kernel`` for a per-image function: ``per_image(image,
+    lang)`` yields the image's zero or more row tuples."""
+    return batch_kernel(
+        schema, lambda images, lang: [list(per_image(im, lang)) for im in images], decode
+    )
 
 
 def make_ocr_batches(decoder: str, allowlist: str | None = None) -> Kernel:
@@ -153,27 +174,33 @@ def make_ocr_batches(decoder: str, allowlist: str | None = None) -> Kernel:
     RTL post-processing (Arabic word order within lines — the
     reference's bidi reordering, easyocr/easyocr.py:414-418). Text and
     conf are ``reader.text_projection`` of the free-merged results, the
-    projection ``readtext_text`` returns."""
+    projection ``readtext_text`` returns; each lang's new images of a
+    batch go through one ``readtext_batched`` call."""
 
-    def ocr(img: np.ndarray, lang: str) -> Iterator[tuple]:
-        results = get_reader(decoder, allowlist, lang).readtext(img, free_merge=True)
-        yield (*text_projection(results, rtl=lang == "arabic"), len(results))
+    def ocr(images: list[np.ndarray], lang: str) -> list[list[tuple]]:
+        reader = get_reader(decoder, allowlist, lang)
+        return [
+            [(*text_projection(results, rtl=lang == "arabic"), len(results))]
+            for results in reader.readtext_batched(images, free_merge=True)
+        ]
 
-    return image_kernel(OCR_RESULT_SCHEMA, ocr)
+    return batch_kernel(OCR_RESULT_SCHEMA, ocr)
 
 
 ocr_batches = make_ocr_batches("greedy")
 
 
-def _detect(img: np.ndarray, lang: str) -> Iterator[tuple]:
+def _detect(images: list[np.ndarray], lang: str) -> list[list[tuple]]:
     """Detect-only stage (the reference's two-phase detect()/recognize()
     split, easyocr/easyocr.py:311-351): box count + horizontal boxes as
     flat ints [x0,x1,y0,y1,...]."""
-    horizontal, free = get_reader().detect(img)
-    yield len(horizontal) + len(free), [int(v) for b in horizontal for v in b]
+    return [
+        [(len(horizontal) + len(free), [int(v) for b in horizontal for v in b])]
+        for horizontal, free in get_reader().detect_batched(images)
+    ]
 
 
-def _free_quads(img: np.ndarray, lang: str, scale: int) -> Iterator[tuple]:
+def _free_quads(images: list[np.ndarray], lang: str, scale: int) -> list[list[tuple]]:
     """Free-list (rotated quad) detection: one row per free quad, its 4
     corners times ``scale`` rounded to int, in reading order (component
     raster order). The grouping margin arithmetic is float; scaled ints
@@ -181,9 +208,10 @@ def _free_quads(img: np.ndarray, lang: str, scale: int) -> Iterator[tuple]:
     staircase classes; quarter-pixels (x4) for the SMOOTH class, whose
     drop lives on a half-pixel grid where deci-px would land on .5
     rounding ties."""
-    _, free = get_reader().detect(img)
-    for i, quad in enumerate(free):
-        yield (i, *(int(round(c * scale)) for p in quad for c in p))
+    return [
+        [(i, *(int(round(c * scale)) for p in quad for c in p)) for i, quad in enumerate(free)]
+        for _, free in get_reader().detect_batched(images)
+    ]
 
 
 def _poly(img: np.ndarray, lang: str) -> Iterator[tuple]:
@@ -205,17 +233,14 @@ def _smooth_poly(img: np.ndarray, lang: str) -> Iterator[tuple]:
             yield box_idx, pt_idx, int(round(x * 4)), int(round(y * 4))
 
 
-def _paragraph(img: np.ndarray, lang: str) -> Iterator[tuple]:
+def _paragraph(images: list[np.ndarray], lang: str) -> list[list[tuple]]:
     """Paragraph-mode OCR (reference paragraph=True path,
     easyocr/easyocr.py:422-423 + utils.py:643-709): grouped paragraphs
-    with reading-order concat; RTL mode for arabic-routed media."""
-    reader = get_reader(lang=lang)
-    horizontal, free = reader.detect(img)
-    paras = get_paragraph(
-        reader.recognize(img, horizontal, free),
-        mode="rtl" if lang == "arabic" else "ltr",
-    )
-    yield len(paras), " ".join(t for _, t in paras)
+    of the free-merged results (free quads in reading position first,
+    as the OCR kernel reads them), concatenated in reading order; RTL
+    mode for arabic-routed media."""
+    batch = get_reader(lang=lang).readtext_batched(images, paragraph=True, free_merge=True)
+    return [[(len(paras), " ".join(t for _, t in paras))] for paras in batch]
 
 
 def _dims(img: np.ndarray, lang: str) -> Iterator[tuple]:
@@ -239,14 +264,12 @@ def _features(img: np.ndarray, lang: str) -> Iterator[tuple]:
     )
 
 
-detect_batches = image_kernel(DETECT_RESULT_SCHEMA, _detect)
-detect_free_batches = image_kernel(DETECT_FREE_SCHEMA, partial(_free_quads, scale=10))
-detect_smooth_batches = image_kernel(
-    DETECT_SMOOTH_SCHEMA, partial(_free_quads, scale=4)
-)
+detect_batches = batch_kernel(DETECT_RESULT_SCHEMA, _detect)
+detect_free_batches = batch_kernel(DETECT_FREE_SCHEMA, partial(_free_quads, scale=10))
+detect_smooth_batches = batch_kernel(DETECT_SMOOTH_SCHEMA, partial(_free_quads, scale=4))
 detect_poly_batches = image_kernel(DETECT_POLY_SCHEMA, _poly)
 detect_smooth_poly_batches = image_kernel(DETECT_SMOOTH_POLY_SCHEMA, _smooth_poly)
-paragraph_batches = image_kernel(PARAGRAPH_RESULT_SCHEMA, _paragraph)
+paragraph_batches = batch_kernel(PARAGRAPH_RESULT_SCHEMA, _paragraph)
 dims_batches = image_kernel(DIMS_RESULT_SCHEMA, _dims)
 channels_batches = image_kernel(CHANNELS_RESULT_SCHEMA, _channels, decode=decode_image)
 image_features = image_kernel(IMAGE_META_SCHEMA, _features)

@@ -8,7 +8,7 @@ import pandas as pd
 import pytest
 
 from easyocr_spark.fixtures import corpus, render
-from easyocr_spark.fixtures.png import encode_gray
+from easyocr_spark.fixtures.png import decode_gray, encode_gray
 from easyocr_spark.ocr import udfs
 from easyocr_spark.ocr.reader import StandInReader
 
@@ -107,19 +107,25 @@ def test_harness_runs_each_distinct_image_once():
         list(kernel(iter([corrupt])))
 
 
-def test_ocr_kernel_text_is_the_readtext_text_projection():
-    """The OCR kernel's text is the reader's span-text projection: on a
-    line holding a slanted word then an upright one, both read the
-    words in page order (free quads merged into reading position)."""
+def _mixed_line() -> pd.DataFrame:
+    """One image whose line holds a slanted word, then an upright one."""
     up = render.render_text([["SPARK"]], scale=2)
     sl = render.render_text([["QUERY"]], scale=2, slant_dy=2)
     h = max(up.shape[0], sl.shape[0])
     canvas = np.full((h, up.shape[1] + sl.shape[1] + 20), 255, dtype=np.uint8)
     canvas[: sl.shape[0], : sl.shape[1]] = sl
     canvas[: up.shape[0], sl.shape[1] + 20 :] = up
-    batch = pd.DataFrame(
+    return pd.DataFrame(
         {"media_ref": ["mixed"], "content": [encode_gray(canvas)], "lang": ["latin"]}
     )
+
+
+def test_ocr_kernel_text_is_the_readtext_text_projection():
+    """The OCR kernel's text is the reader's span-text projection: on a
+    line holding a slanted word then an upright one, both read the
+    words in page order (free quads merged into reading position)."""
+    batch = _mixed_line()
+    canvas = decode_gray(batch["content"][0])
     out = pd.concat(list(udfs.ocr_batches(iter([batch]))))
     reader = StandInReader()
     assert reader.readtext_text(canvas) == "QUERY SPARK"
@@ -127,3 +133,14 @@ def test_ocr_kernel_text_is_the_readtext_text_projection():
     results = reader.readtext(canvas)
     assert len(results) == 2
     assert out[["conf", "n_boxes"]].values.tolist() == [[min(c for _, _, c in results), 2]]
+
+
+def test_paragraph_kernel_reads_in_page_order():
+    """The paragraph kernel groups the free-merged results: the slanted
+    word left of the upright one comes first, as in the OCR kernel."""
+    out = pd.concat(list(udfs.paragraph_batches(iter([_mixed_line()]))))
+    assert out["text"].tolist() == ["QUERY SPARK"]
+    reader = StandInReader()
+    canvas = decode_gray(_mixed_line()["content"][0])
+    paras = reader.readtext(canvas, paragraph=True, free_merge=True)
+    assert out["n_paragraphs"].tolist() == [len(paras)]

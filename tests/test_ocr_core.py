@@ -93,6 +93,25 @@ def test_contrast_adjustment_semantics():
     assert c2 > c1
 
 
+def test_contrast_grey_matches_numpy_percentile():
+    # the histogram order statistics + numpy's lerp give np.percentile's
+    # 90th/10th to the bit, including 1- and 2-pixel images
+    rng = np.random.default_rng(5)
+    for _ in range(500):
+        h, w = rng.integers(1, 25, size=2)
+        lo, hi = sorted(rng.integers(0, 256, size=2))
+        img = rng.integers(lo, hi + 1, size=(h, w), dtype=np.uint8)
+        high, low = (float(v) for v in np.percentile(img, (90, 10)))
+        expected = ((high - low) / max(10.0, high + low), high, low)
+        assert [v.hex() for v in contrast_grey(img)] == [v.hex() for v in expected]
+
+
+def test_ink_mask_is_the_float_darkness_test():
+    gray = np.arange(256, dtype=np.uint8).reshape(16, 16)
+    darkness = (255.0 - gray.astype(np.float32)) / 255.0
+    np.testing.assert_array_equal(detection.ink_mask(gray), darkness > detection.INK_DARKNESS)
+
+
 def test_word_count_matches_detection():
     for ref in ["m_5_2", "m_11_1", "m_17_4"]:
         spec = corpus.media_spec(ref)
@@ -120,6 +139,118 @@ def test_connected_components_u_shape():
     mask[4, 1:6] = True
     labels, n = detection.connected_components(mask)
     assert n == 1
+
+
+def _flood_fill_labels(mask):
+    # brute-force 4-connected labeling, labels in raster order of each
+    # component's first pixel
+    labels = np.zeros(mask.shape, dtype=np.int32)
+    n = 0
+    for y, x in zip(*np.nonzero(mask)):
+        if labels[y, x]:
+            continue
+        n += 1
+        labels[y, x] = n
+        stack = [(y, x)]
+        while stack:
+            cy, cx = stack.pop()
+            for ny, nx in ((cy - 1, cx), (cy + 1, cx), (cy, cx - 1), (cy, cx + 1)):
+                if (
+                    0 <= ny < mask.shape[0] and 0 <= nx < mask.shape[1]
+                    and mask[ny, nx] and not labels[ny, nx]
+                ):
+                    labels[ny, nx] = n
+                    stack.append((ny, nx))
+    return labels, n
+
+
+def _serpentine(turns, length):
+    # full-length bars joined at alternating ends: one component whose
+    # path runs through every bar
+    mask = np.zeros((2 * turns + 1, length), dtype=bool)
+    mask[0::2] = True
+    for i in range(turns):
+        mask[2 * i + 1, length - 1 if i % 2 == 0 else 0] = True
+    return mask
+
+
+def test_connected_components_match_flood_fill():
+    rng = np.random.default_rng(3)
+    diagonal = np.array([[1, 0, 0], [0, 1, 0], [0, 0, 1]], dtype=bool)
+    u_shape = np.zeros((5, 7), dtype=bool)
+    u_shape[:, 1] = u_shape[:, 5] = u_shape[4, 1:6] = True
+    masks = [
+        diagonal,  # corner contact only: three components
+        u_shape,  # two arms labeled apart until the bottom row joins them
+        np.zeros((4, 6), dtype=bool),
+        np.zeros((0, 3), dtype=bool),
+        np.ones((3, 5), dtype=bool),
+        _serpentine(6, 9),
+        _serpentine(6, 9).T,
+    ]
+    for h, w in [(1, 1), (1, 12), (9, 1), (8, 8), (17, 31), (40, 64)]:
+        for p in (0.2, 0.45, 0.6):
+            masks.append(rng.random((h, w)) < p)
+    for mask in masks:
+        labels, n = detection.connected_components(mask)
+        expected, n_expected = _flood_fill_labels(mask)
+        assert n == n_expected, mask.astype(int)
+        assert labels.dtype == np.int32
+        np.testing.assert_array_equal(labels, expected)
+    assert detection.connected_components(diagonal)[1] == 3
+    assert detection.connected_components(u_shape)[1] == 1
+
+
+@pytest.mark.parametrize("mask", [_serpentine(50, 40), _serpentine(50, 40).T])
+def test_run_labeling_rounds_stay_few_on_a_serpentine(mask):
+    # one component threaded through ~100 (rows) or ~2000 (columns)
+    # runs: pointer jumping keeps the hooking rounds to a handful,
+    # where label propagation would need one per bar
+    starts, ends = detection._row_runs(mask)
+    labels, n, rounds = detection._label_runs(starts, ends, mask.shape[1] + 1)
+    assert n == 1 and (labels == 1).all()
+    assert len(starts) >= 100
+    assert rounds <= 4
+
+
+def test_detector_canvas_stays_within_pixel_budget(monkeypatch):
+    # a budget of ~ten small images: the golden refs pack into several
+    # canvases, the largest image gets one of its own, and every image
+    # detects exactly as it does alone
+    budget = 80_000
+    monkeypatch.setattr(detection, "BATCH_PIXELS", budget)
+    grays = [png.decode_gray(corpus.render_media(r)) for r in GOLDEN_REFS]
+    word = render.render_text([["LARGE"]], scale=4)
+    big = np.full((320, 320), 255, dtype=np.uint8)
+    big[100 : 100 + word.shape[0], 40 : 40 + word.shape[1]] = word
+    grays.append(big)  # 320 x 320 + separator > budget on its own
+    # ink on the last and on the first row, stacked next to each other
+    # (their own width): the separator row must keep them apart
+    low, high = (np.full((32, 96), 255, dtype=np.uint8) for _ in range(2))
+    low[-4:, 8:80] = high[:4, 8:80] = 0
+    grays += [low, high]
+    canvases = []
+    real_canvas = detection._canvas
+
+    def recording_canvas(images):
+        out = real_canvas(images)
+        canvases.append((len(images), out[0].size))
+        return out
+
+    monkeypatch.setattr(detection, "_canvas", recording_canvas)
+    batched = detection.detect_batched(grays)
+    assert len(canvases) > 2
+    assert all(size <= budget or n == 1 for n, size in canvases)
+    assert (1, 322 * 320) in canvases
+    assert sum(n for n, _ in canvases) == len(grays)
+    for gray, boxes in zip(grays, batched):
+        alone = detection.detect(gray)
+        assert [b.tobytes() for b in boxes] == [b.tobytes() for b in alone]
+    assert len(batched[-3]) == 1
+    shapes = [(64, 256), (32, 96), (64, 1024), (2048, 2048), (32, 96)]
+    groups = detection.canvas_groups(shapes)
+    assert sorted(i for g in groups for i in g) == list(range(len(shapes)))
+    assert [3] in groups
 
 
 @pytest.mark.parametrize(
@@ -337,3 +468,44 @@ def golden_detect_digest() -> str:
 
 def test_golden_detect_digest():
     assert golden_detect_digest() == GOLDEN_DETECT_DIGEST
+
+
+def _kernel_rows(frame):
+    return [
+        (ref, text, float(conf).hex(), int(n))
+        for ref, text, conf, n in frame[["media_ref", "text", "conf", "n_boxes"]].itertuples(index=False)
+    ]
+
+
+def test_golden_refs_kernel_batch_parity():
+    """The OCR kernel on one Arrow batch mixing every golden ref's lang,
+    duplicate refs and a blank image (no component) returns, bit for
+    bit, each image's own readtext projection; so does a batch of one."""
+    import pandas as pd
+
+    from easyocr_spark.ocr import udfs
+    from easyocr_spark.ocr.reader import text_projection
+
+    blank = png.encode_gray(np.full((40, 120), 255, dtype=np.uint8))
+    media = {r: (corpus.render_media(r), corpus.media_spec(r)["lang"]) for r in GOLDEN_REFS}
+    media["blank"] = (blank, "latin")
+    refs = GOLDEN_REFS[::2] + ["blank"] + GOLDEN_REFS[1::2] + GOLDEN_REFS[:4]
+    batch = pd.DataFrame(
+        {
+            "media_ref": [f"{r}#{i}" for i, r in enumerate(refs)],
+            "content": [media[r][0] for r in refs],
+            "lang": [media[r][1] for r in refs],
+        }
+    )
+    expected = []
+    for ref, data, lang in batch.itertuples(index=False):
+        results = StandInReader(lang_list=[lang]).readtext(png.decode_gray(data), free_merge=True)
+        text, conf = text_projection(results, rtl=lang == "arabic")
+        expected.append((ref, text, conf.hex(), len(results)))
+    k = refs.index("blank")
+    assert expected[k] == (f"blank#{k}", "", (0.0).hex(), 0)
+    got = _kernel_rows(pd.concat(list(udfs.ocr_batches(iter([batch])))))
+    assert got == expected
+    for i in (0, k, len(refs) - 1):
+        one = pd.concat(list(udfs.ocr_batches(iter([batch.iloc[i : i + 1]]))))
+        assert _kernel_rows(one) == [expected[i]]

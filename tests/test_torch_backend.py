@@ -472,6 +472,9 @@ def test_torch_reader_end_to_end_under_shim(tmp_path):
         # paragraph mode + flat-text variants execute the same pipeline
         assert isinstance(reader.readtext(gray, paragraph=True), list)
         assert isinstance(reader.readtext_text(gray), str)
+        # the batch entry points the image kernels call
+        assert reader.readtext_batched([gray]) == [results]
+        assert reader.detect_batched([gray]) == [reader.detect(gray)]
 
 
 def test_normalize_pad_shape_and_range():
