@@ -23,7 +23,7 @@ deterministic numpy stand-in model (same interfaces, same post-processing
 semantics: score maps -> connected components -> box grouping -> line
 clustering -> crop -> CTC greedy/beam decode) as planned in SURVEY.md
 §5.2.3. All Spark plumbing — schemas, partitioning, Arrow batching,
-skew salting, checkpoint/resume — is real and tested.
+AQE skew-join splitting, checkpoint/resume — is real and tested.
 """
 
 __version__ = "0.1.0"

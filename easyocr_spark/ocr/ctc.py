@@ -56,21 +56,6 @@ def decode_greedy(probs: np.ndarray, charset: str) -> tuple[str, float]:
     return text, custom_mean(confs)
 
 
-def edit_distance(a: str, b: str) -> int:
-    """Levenshtein distance (used by word-beam dictionary re-rank, the
-    role of the reference's wordsearch top-k candidate match,
-    easyocr/utils.py:352-384)."""
-    if len(a) < len(b):
-        a, b = b, a
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[-1]
-
-
 def word_beam_search(
     probs: np.ndarray,
     charset: str,

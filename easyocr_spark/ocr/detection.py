@@ -127,13 +127,6 @@ def _darkness(g: np.ndarray, hi, inv) -> np.ndarray:
     return out
 
 
-def compute_score_maps(gray: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """gray uint8[H, W] -> (region, link) float32 at half resolution,
-    stretched by the image's own min/max."""
-    lo, hi = int(gray.min()), int(gray.max())
-    return _score_maps(gray, hi, 1.0 / max(hi - lo, 1))
-
-
 def _row_runs(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """bool[H, W] -> (starts, ends) of its row runs of True in raster
     order, as flat keys row * (W + 1) + column (ends exclusive): the
@@ -180,23 +173,6 @@ def _label_runs(
             parent = up
     roots = parent == np.arange(n)
     return np.cumsum(roots)[parent], int(roots.sum()), rounds
-
-
-def connected_components(mask: np.ndarray) -> tuple[np.ndarray, int]:
-    """4-connected CC labeling (the role of
-    cv2.connectedComponentsWithStats in reference craft_utils.py:30):
-    ``_label_runs`` over the mask's row runs, painted back as +label at
-    each run start and -label at its end, then one cumulative sum.
-    Returns (labels int32[H, W] with 0 = background, n_labels), labels
-    in raster order of each component's first pixel."""
-    h, w = mask.shape
-    starts, ends = _row_runs(mask)
-    comp, n, _ = _label_runs(starts, ends, w + 1)
-    flat = np.zeros(h * (w + 1), dtype=np.int32)
-    flat[starts] = comp
-    flat[ends] = -comp
-    labels = np.cumsum(flat, dtype=np.int32).reshape(h, w + 1)[:, :w]
-    return np.ascontiguousarray(labels), n
 
 
 INK_DARKNESS = 0.45  # darkness (255 - gray) / 255 above this is ink

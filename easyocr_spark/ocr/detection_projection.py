@@ -1,16 +1,14 @@
-"""Alternative detector: projection-profile strategy.
+"""Independent reference detector: projection-profile strategy.
 
-The reference makes the detect stage pluggable — CRAFT or DBNet behind
-one interface (`detect_network` param, easyocr/easyocr.py:235-268;
-compatibility wrappers easyocr/detection_db.py:15-220). This module is
-our second strategy proving the same plug point: instead of score maps
-+ connected components it uses classic projection profiles — row-ink
-sums split the page into line bands, column-ink sums inside each band
-split words — and returns the SAME output contract as detection.detect:
-a list of 4-point float boxes in input pixel coords.
+Instead of score maps + connected components it uses classic projection
+profiles — row-ink sums split the page into line bands, column-ink sums
+inside each band split words — and returns the SAME output contract as
+detection.detect: a list of 4-point float boxes in input pixel coords.
 
-Semantically different engine, identical interface and (on clean
-renders) identical boxes — asserted in tests/test_reader_features.py.
+No query runs it: it is the second engine that CRAFT's boxes are
+checked against. Semantically different engine, identical interface
+and (on clean renders) identical boxes — asserted in
+tests/test_reader_features.py.
 """
 
 from __future__ import annotations

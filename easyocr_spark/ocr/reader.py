@@ -17,10 +17,9 @@ API mirror of the reference's Reader (reference easyocr/easyocr.py):
   texts joined by single spaces in reading order, plus their min
   confidence; ``readtext_text`` is its text.
 
-The detect stage is pluggable ('craft' score-map strategy,
-'dbnet' — the real DBNet post-process over shrunken-kernel maps,
-ocr/detection_db.py — or the 'projection' profile strategy; the
-reference's CRAFT/DBNet switch, easyocr/easyocr.py:235-268). Rotation TTA mirrors
+The detect stage is the CRAFT-style score-map detector
+(``ocr/detection.py``); the reference's DBNet alternative
+(easyocr/easyocr.py:235-268) is not mirrored. Rotation TTA mirrors
 make_rotated_img_list + set_result_with_confidence
 (easyocr/utils.py:802-835): each crop is additionally decoded at the
 listed rotations and the highest-confidence variant wins.
@@ -37,7 +36,7 @@ from itertools import groupby
 
 import numpy as np
 
-from . import detection, detection_projection
+from . import detection
 from .grouping import group_text_box, min_size_filter
 from .paragraph import get_paragraph
 from .recognition import build_ignore_mask, get_text
@@ -164,7 +163,6 @@ class StandInReader:
         self,
         lang_list: list[str] | None = None,
         decoder: str = "greedy",
-        detect_network: str = "craft",
         allowlist: str | None = None,
         blocklist: str | None = None,
     ):
@@ -175,24 +173,12 @@ class StandInReader:
         if "chinese" in self.lang_list:
             decoder = "greedy"
         self.decoder = decoder
-        self.detect_network = detect_network
         self.ignore = build_ignore_mask(allowlist, blocklist)
         # language -> recognition model routing (the reference's
         # decision tree maps lang_list to a gen1/gen2 model + charset,
         # easyocr/easyocr.py:106-167 + config.py:53+; the stand-in has
         # two template atlases standing in for two script models)
         self.recog_model = "cjk" if "chinese" in self.lang_list else "latin"
-
-    def _detect_boxes(
-        self, grays: list[np.ndarray], optimal_num_chars: int | None
-    ) -> list[list[np.ndarray]]:
-        if self.detect_network == "projection":
-            return [detection_projection.detect(g) for g in grays]
-        if self.detect_network == "dbnet":
-            from . import detection_db
-
-            return [detection_db.detect(g) for g in grays]
-        return detection.detect_batched(grays, optimal_num_chars=optimal_num_chars)
 
     def detect_batched(
         self,
@@ -203,7 +189,7 @@ class StandInReader:
         """Per image (horizontal_list, free_list); the craft detector
         runs once over the whole batch."""
         out = []
-        for boxes in self._detect_boxes(grays, optimal_num_chars):
+        for boxes in detection.detect_batched(grays, optimal_num_chars=optimal_num_chars):
             # with a char-count target the detector's priority order is
             # the answer — grouping must not re-sort it (reference
             # easyocr/easyocr.py:342: sort_output = optimal_num_chars is None)

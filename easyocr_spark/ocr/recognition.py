@@ -311,17 +311,6 @@ def recognize_crops(
     return out
 
 
-def recognize_crop(
-    crop: np.ndarray,
-    adjust: bool = False,
-    decoder: str = "greedy",
-    ignore: np.ndarray | None = None,
-    model: str = "latin",
-) -> tuple[str, float]:
-    """uint8[H, W] crop -> (text, confidence): ``recognize_crops`` of one."""
-    return recognize_crops([crop], adjust, decoder, ignore, model)[0]
-
-
 def get_text(
     crops: list[np.ndarray],
     decoder: str = "greedy",
@@ -341,14 +330,3 @@ def get_text(
             if conf > out[i][1]:
                 out[i] = text, conf
     return out
-
-
-def recognize_two_pass(
-    crop: np.ndarray,
-    decoder: str = "greedy",
-    contrast_ths: float = CONTRAST_THS,
-    ignore: np.ndarray | None = None,
-    model: str = "latin",
-) -> tuple[str, float]:
-    """``get_text`` for one crop."""
-    return get_text([crop], decoder, contrast_ths, ignore, model)[0]

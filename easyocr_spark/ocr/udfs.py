@@ -41,7 +41,7 @@ from functools import partial
 import numpy as np
 import pandas as pd
 
-from ..fixtures.png import decode_gray, decode_image, encode_gray
+from ..fixtures.png import decode_gray, decode_image
 from .detection import detect_polys, detect_smooth_polys
 from .reader import StandInReader, text_projection
 
@@ -67,7 +67,6 @@ CHANNELS_RESULT_SCHEMA = "media_ref string, channels int, width int, height int"
 IMAGE_META_SCHEMA = (
     "media_ref string, width int, height int, mean_luma int, ink_ratio_milli int"
 )
-RESIZE_SCHEMA = "media_ref string, content binary, width int, height int"
 
 _READERS: dict[tuple, object] = {}
 
@@ -273,20 +272,3 @@ paragraph_batches = batch_kernel(PARAGRAPH_RESULT_SCHEMA, _paragraph)
 dims_batches = image_kernel(DIMS_RESULT_SCHEMA, _dims)
 channels_batches = image_kernel(CHANNELS_RESULT_SCHEMA, _channels, decode=decode_image)
 image_features = image_kernel(IMAGE_META_SCHEMA, _features)
-
-
-def make_image_resizer(max_side: int) -> Kernel:
-    """Nearest-neighbor resize kernel capped at max_side (the
-    resize_aspect_ratio analogue as a standalone op), re-encoded as a
-    gray PNG."""
-
-    def resize(img: np.ndarray, lang: str) -> Iterator[tuple]:
-        h, w = img.shape
-        if max(h, w) > max_side:
-            r = max_side / max(h, w)
-            ys = (np.arange(int(h * r)) / r).astype(np.int64).clip(0, h - 1)
-            xs = (np.arange(int(w * r)) / r).astype(np.int64).clip(0, w - 1)
-            img = img[ys][:, xs]
-        yield encode_gray(img), img.shape[1], img.shape[0]
-
-    return image_kernel(RESIZE_SCHEMA, resize)

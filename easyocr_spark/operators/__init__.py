@@ -1,2 +1,2 @@
 """DataFrame-level operators: span algebra, extraction pipeline, dedup,
-similarity search, text analysis, skew handling."""
+similarity search, text analysis."""

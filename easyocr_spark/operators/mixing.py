@@ -30,7 +30,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import HASH_BASE_1, HASH_BASE_3, HASH_MOD, _poly_hash, _duck_tok_fold
+from .dedup import HASH_BASE_1, HASH_BASE_3, HASH_MOD, _duck_tok_fold
 
 PPM = 1_000_000
 

@@ -26,10 +26,9 @@ Plan shape (SURVEY.md §1.3), all declarative until the single Arrow UDF:
                                 work independent of upstream layout
                                 (axis-A skew: a doc with 10k media spans
                                 contributes 10k refs spread by hash)
-6. join results back to spans   media_ref join; dup-ref hot keys are
-                                handled by AQE skew join (plus an
-                                explicit salted-join operator in
-                                skew.py for the pathological case)
+6. join results back to spans   media_ref left join; dup-ref hot keys
+                                are split by AQE skew join when the
+                                results side is too big to broadcast
 7. reassemble                   groupBy(doc_id) + array_sort on
                                 struct(offset, ...) — offset-first field
                                 order makes array_sort the ORDER BY
@@ -115,7 +114,6 @@ def extract_spans(
     decoder: str = "greedy",
     keep_empty: bool = False,
     allowlist: str | None = None,
-    results_join: str = "auto",
 ) -> DataFrame:
     """Flat extracted spans: media text filled in, text spans untouched.
     Output columns: doc_id, offset, kind, text, media_ref.
@@ -126,39 +124,18 @@ def extract_spans(
     the span derivation twice and doubled the data volume. The join key
     is nulled for text spans so they never shuffle-collide on the ''
     hot key; at test scale AQE broadcasts the results side and the
-    spans never shuffle at all.
-
-    ``results_join`` selects the join-back strategy for the at-scale
-    case where the per-ref OCR results stop being broadcastable:
-
-    - ``"auto"`` (default): plain left join — Catalyst/AQE picks
-      broadcast at test scale, sort-merge/shuffled-hash (plus AQE skew
-      splitting) when the results side is big. Exercised under
-      ``spark.sql.autoBroadcastJoinThreshold=-1`` by
-      tests/test_pipeline_spark.py::test_flagship_join_parity_*.
-    - ``"salted"``: explicit salt fan-out via operators/skew.salted_join
-      for the pathological tail where single media_refs are hot beyond
-      what AQE's skew splitting should handle (one ref referenced by
-      millions of spans) — the hot key's rows land on n_salts reducers.
-      Same output contract (parity-tested against "auto").
+    spans never shuffle at all. When the per-ref results stop being
+    broadcastable the join takes a sort-merge/shuffled-hash shape, and
+    AQE's skew join splits the partitions of hot media_refs — both
+    exercised under ``spark.sql.autoBroadcastJoinThreshold=-1`` by
+    tests/test_pipeline_spark.py::test_flagship_join_parity_*.
     """
     spans = explode_spans(docs, keep_empty=keep_empty)
     results = ocr_media_refs(spans, media, decoder=decoder, allowlist=allowlist).select(
         F.col("media_ref").alias("r_ref"), F.col("text").alias("ocr_text")
     )
     join_key = F.when(F.col("kind") == "media", F.col("media_ref"))
-    if results_join == "salted":
-        from .skew import salted_join
-
-        spans_k = spans.withColumn("_jk", join_key)
-        results_k = results.select(
-            F.col("r_ref").alias("_jk"), "ocr_text"
-        )
-        joined = salted_join(spans_k, results_k, "_jk", how="left").drop("_jk")
-    elif results_join == "auto":
-        joined = spans.join(results, join_key == F.col("r_ref"), "left")
-    else:
-        raise ValueError(f"unknown results_join strategy: {results_join!r}")
+    joined = spans.join(results, join_key == F.col("r_ref"), "left")
     return joined.select(
         "doc_id",
         "offset",
@@ -192,7 +169,6 @@ def extract_documents(
     media: DataFrame,
     decoder: str = "greedy",
     allowlist: str | None = None,
-    results_join: str = "auto",
 ) -> DataFrame:
     """Full pipeline: nested in, nested out — every media span's text
     replaced by its recognized string, order restored by offset.
@@ -201,14 +177,7 @@ def extract_documents(
     reassembly agg folds into an empty array) — no doc_id spine join,
     one scan of the documents table total."""
     return reassemble(
-        extract_spans(
-            docs,
-            media,
-            decoder=decoder,
-            keep_empty=True,
-            allowlist=allowlist,
-            results_join=results_join,
-        )
+        extract_spans(docs, media, decoder=decoder, keep_empty=True, allowlist=allowlist)
     )
 
 

@@ -1,4 +1,4 @@
-"""CLI smoke, JSONL source, image feature/resize kernels."""
+"""CLI smoke, JSONL source, image feature kernel."""
 
 import pytest
 
@@ -15,14 +15,6 @@ def test_image_features_kernel(spark):
     ).toPandas()
     assert (feats.width > 0).all() and (feats.height > 0).all()
     assert (feats.ink_ratio_milli >= 0).all()
-
-
-def test_image_resizer_kernel(spark):
-    media = tables.media_table(spark, SF).limit(20)
-    resized = media.mapInPandas(
-        udfs.make_image_resizer(64), schema=udfs.RESIZE_SCHEMA
-    ).toPandas()
-    assert (resized[["width", "height"]].max(axis=1) <= 64).all()
 
 
 def test_cli_smoke(spark, tmp_path):

@@ -29,7 +29,6 @@ KERNELS = {
     "dims": (udfs.dims_batches, udfs.DIMS_RESULT_SCHEMA),
     "channels": (udfs.channels_batches, udfs.CHANNELS_RESULT_SCHEMA),
     "image_features": (udfs.image_features, udfs.IMAGE_META_SCHEMA),
-    "resize": (udfs.make_image_resizer(64), udfs.RESIZE_SCHEMA),
 }
 
 

@@ -10,8 +10,8 @@ from easyocr_spark.ocr.reader import StandInReader, four_point_transform
 from easyocr_spark.ocr.recognition import (
     adjust_contrast_grey,
     contrast_grey,
-    recognize_crop,
-    recognize_two_pass,
+    get_text,
+    recognize_crops,
 )
 
 READER = StandInReader()
@@ -56,9 +56,9 @@ def test_tiny_image_filtered_by_min_size():
 
 def test_low_contrast_takes_second_pass():
     img = render.render_text([["HELLO"]], scale=2, low_contrast=True)
-    text1, conf1 = recognize_crop(img, adjust=False)
+    text1, conf1 = recognize_crops([img], adjust=False)[0]
     assert conf1 < 0.1  # pass 1 fails on low contrast
-    text2, conf2 = recognize_two_pass(img)
+    text2, conf2 = get_text([img])[0]
     assert text2 == "HELLO" and conf2 > 0.5
 
 
@@ -121,11 +121,26 @@ def test_word_count_matches_detection():
         assert len(h) + len(f) == n_words
 
 
+def connected_components(mask):
+    # the detector's run-graph labeling as a pixel label image:
+    # ``_label_runs`` over the mask's row runs, painted back as +label at
+    # each run start and -label at its end, then one cumulative sum;
+    # labels in raster order of each component's first pixel
+    h, w = mask.shape
+    starts, ends = detection._row_runs(mask)
+    comp, n, _ = detection._label_runs(starts, ends, w + 1)
+    flat = np.zeros(h * (w + 1), dtype=np.int32)
+    flat[starts] = comp
+    flat[ends] = -comp
+    labels = np.cumsum(flat, dtype=np.int32).reshape(h, w + 1)[:, :w]
+    return labels, n
+
+
 def test_connected_components_labels():
     mask = np.zeros((6, 10), dtype=bool)
     mask[1:3, 1:4] = True  # component 1
     mask[4:6, 6:9] = True  # component 2
-    labels, n = detection.connected_components(mask)
+    labels, n = connected_components(mask)
     assert n == 2
     assert labels[1, 1] != labels[4, 7]
     assert (labels[1:3, 1:4] == labels[1, 1]).all()
@@ -137,7 +152,7 @@ def test_connected_components_u_shape():
     mask[0:5, 1] = True
     mask[0:5, 5] = True
     mask[4, 1:6] = True
-    labels, n = detection.connected_components(mask)
+    labels, n = connected_components(mask)
     assert n == 1
 
 
@@ -192,13 +207,13 @@ def test_connected_components_match_flood_fill():
         for p in (0.2, 0.45, 0.6):
             masks.append(rng.random((h, w)) < p)
     for mask in masks:
-        labels, n = detection.connected_components(mask)
+        labels, n = connected_components(mask)
         expected, n_expected = _flood_fill_labels(mask)
         assert n == n_expected, mask.astype(int)
         assert labels.dtype == np.int32
         np.testing.assert_array_equal(labels, expected)
-    assert detection.connected_components(diagonal)[1] == 3
-    assert detection.connected_components(u_shape)[1] == 1
+    assert connected_components(diagonal)[1] == 3
+    assert connected_components(u_shape)[1] == 1
 
 
 @pytest.mark.parametrize("mask", [_serpentine(50, 40), _serpentine(50, 40).T])
@@ -266,7 +281,7 @@ def test_half_res_min_matches_block_reshape_min(shape):
     assert got.dtype == np.uint8
     np.testing.assert_array_equal(got, expected)
     lo, hi = int(gray.min()), int(gray.max())
-    region, _ = detection.compute_score_maps(gray)
+    region, _ = detection._score_maps(gray, hi, 1.0 / max(hi - lo, 1))
     np.testing.assert_array_equal(
         region, (hi - expected.astype(np.float32)) * (1.0 / max(hi - lo, 1))
     )

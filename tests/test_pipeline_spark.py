@@ -1,12 +1,10 @@
 """Spark-side span-pipeline tests (FIXTURES.md §1 edge classes)."""
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from easyocr_spark.fixtures import corpus
 from easyocr_spark.operators import pipeline
-from easyocr_spark.operators.skew import salted_join
 from easyocr_spark.sources import tables
 
 SF = "/root/testdata/sf0.001"
@@ -88,17 +86,6 @@ def test_reassembled_preserves_doc_count(docs, media):
     assert out.select("doc_id").distinct().count() == docs.count()
 
 
-def test_salted_join_equals_plain_join(spark):
-    big = spark.createDataFrame(
-        pd.DataFrame({"k": ["a"] * 50 + ["b"] * 3, "v": range(53)})
-    )
-    small = spark.createDataFrame(pd.DataFrame({"k": ["a", "b"], "w": [1, 2]}))
-    plain = big.join(small, "k").select("k", "v", "w")
-    salted = salted_join(big, small, "k", n_salts=4).select("k", "v", "w")
-    assert plain.exceptAll(salted).count() == 0
-    assert salted.exceptAll(plain).count() == 0
-
-
 def test_ocr_dedup_runs_each_ref_once(docs, media, spark):
     spans = pipeline.explode_spans(docs)
     results = pipeline.ocr_media_refs(spans, media)
@@ -109,15 +96,55 @@ def test_ocr_dedup_runs_each_ref_once(docs, media, spark):
     assert results.select("media_ref").distinct().count() == n_refs
 
 
-def _doc_strings(df):
+def _doc_json(df):
     """Canonical per-doc string: doc_id + offset-ordered span tuples —
     nested-array-safe equality across plan shapes."""
-    return sorted(
-        df.select(
-            "doc_id",
-            F.to_json(F.col("spans")).alias("j"),
-        ).collect()
+    return df.select("doc_id", F.to_json(F.col("spans")).alias("j"))
+
+
+def _doc_strings(df):
+    return sorted(_doc_json(df).collect())
+
+
+def _hot_ref_docs(docs, n_docs=100, per_doc=20):
+    """The media spans of every doc, plus ``n_docs`` docs that each cite
+    one ref ``per_doc`` times: one hot key on the spans side of the
+    join-back. Text spans are left out: their null join keys would form
+    a heavy partition of their own."""
+    media_only = docs.withColumn(
+        "spans", F.filter("spans", lambda s: s["kind"] == "media")
     )
+    hot_ref = (
+        pipeline.explode_spans(docs).filter(F.col("kind") == "media")
+        .agg(F.min("media_ref")).first()[0]
+    )
+    span = lambda i: F.struct(
+        F.lit("media").alias("kind"), F.lit("").alias("text"),
+        F.lit(hot_ref).alias("media_ref"), i.alias("offset"),
+    )
+    hot = docs.sparkSession.range(n_docs).select(
+        F.concat(F.lit("hot_"), F.col("id").cast("string")).alias("doc_id"),
+        F.transform(F.sequence(F.lit(0), F.lit(per_doc - 1)), span)
+        .cast(docs.schema["spans"].dataType).alias("spans"),
+    )
+    return media_only, media_only.unionByName(hot)
+
+
+# AQE skew-join thresholds scaled down to test size: a partition of the
+# join-back is split when it exceeds 3x the median and 4 KB
+SKEW_CONF = {
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "4k",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "3",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4k",
+}
+
+
+def _collect_join_back(df):
+    """``df``'s sorted rows and the join-back node (the left outer join)
+    of its final adaptive plan, from one run."""
+    rows = sorted(df.collect())
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return rows, next(line for line in plan.splitlines() if "LeftOuter" in line)
 
 
 def _dup_content_input(media):
@@ -146,12 +173,16 @@ def _ocr_rows(spans, media, num_partitions=None):
     )
 
 
-def test_flagship_join_parity_broadcast_vs_shuffle_vs_salted(docs, media, spark):
+def test_flagship_join_parity_broadcast_vs_shuffle(docs, media, spark):
     """The 100-TB join path, exercised end-to-end: with broadcast
     disabled (autoBroadcastJoinThreshold=-1) the OCR results join-back
-    and the media join take their at-scale shuffle shapes, and the
-    explicit salted fallback (operators/skew.salted_join) must all
+    and the media join take their at-scale shuffle shapes and must
     produce the exact documents the broadcast plan does.
+
+    With one media_ref hot, AQE's skew join splits the hot partition of
+    the join-back (the final plan reads ``skew=true``; the same input
+    without the hot docs does not), and the documents still equal the
+    broadcast run's.
 
     On an input where one image sits under several refs, the per-ref
     OCR rows must not depend on layout either: broadcast vs shuffle and
@@ -162,7 +193,10 @@ def test_flagship_join_parity_broadcast_vs_shuffle_vs_salted(docs, media, spark)
     n_content = dup_media.select("content", "lang").distinct().count()
     assert dup_media.select("content").distinct().count() < n_content < dup_media.count()
     ocr_base = _ocr_rows(dup_spans, dup_media)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    cool_docs, hot_docs = _hot_ref_docs(docs)
+    hot_base = _doc_strings(pipeline.extract_documents(hot_docs, media))
+    confs = ["spark.sql.autoBroadcastJoinThreshold", *SKEW_CONF]
+    old = {k: spark.conf.get(k) for k in confs}
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         forced_df = pipeline.extract_documents(docs, media)
@@ -170,16 +204,23 @@ def test_flagship_join_parity_broadcast_vs_shuffle_vs_salted(docs, media, spark)
         assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan), plan
         assert "BroadcastHashJoin" not in plan, plan
         forced = _doc_strings(forced_df)
-        salted_df = pipeline.extract_documents(docs, media, results_join="salted")
-        salted_plan = salted_df._jdf.queryExecution().executedPlan().toString()
-        assert "_salt" in salted_plan, salted_plan
-        salted = _doc_strings(salted_df)
         ocr_forced = _ocr_rows(dup_spans, dup_media)
+        for k, v in SKEW_CONF.items():
+            spark.conf.set(k, v)
+        _, cool_join = _collect_join_back(
+            _doc_json(pipeline.extract_documents(cool_docs, media))
+        )
+        hot_skewed, hot_join = _collect_join_back(
+            _doc_json(pipeline.extract_documents(hot_docs, media))
+        )
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        for k, v in old.items():
+            spark.conf.set(k, v)
     assert forced == base
-    assert salted == base
     assert ocr_forced == ocr_base
+    assert "skew=true" not in cool_join, cool_join
+    assert "skew=true" in hot_join, hot_join
+    assert hot_skewed == hot_base
     for n in (1, 7):
         assert _ocr_rows(dup_spans, dup_media, n) == ocr_base, n
     by_ref = {r[0]: r[1:] for r in ocr_base}
