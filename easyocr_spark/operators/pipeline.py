@@ -2,6 +2,13 @@
 
 Plan shape (SURVEY.md §1.3), all declarative until the single Arrow UDF:
 
+0. repartition(doc_id)          ONE hash shuffle of the nested documents
+                                (``extract_documents`` only): it replaces
+                                the scan's round-robin spread
+                                (CollapseRepartition) and is shared by
+                                both branches below (ReuseExchange), and
+                                its doc_id partitioning is the one the
+                                reassembly needs
 1. posexplode(spans)            narrow; keeps both array position and
                                 the logical offset (arrays are stored
                                 out of offset order by design)
@@ -26,12 +33,17 @@ Plan shape (SURVEY.md §1.3), all declarative until the single Arrow UDF:
                                 work independent of upstream layout
                                 (axis-A skew: a doc with 10k media spans
                                 contributes 10k refs spread by hash)
-6. join results back to spans   media_ref left join; dup-ref hot keys
-                                are split by AQE skew join when the
-                                results side is too big to broadcast
+6. join results back to spans   media_ref left join; a broadcast of the
+                                per-ref results keeps the spans in their
+                                doc_id partitions (step 0). A shuffled
+                                join re-partitions the spans on
+                                media_ref, and AQE's skew join splits
+                                dup-ref hot keys
 7. reassemble                   groupBy(doc_id) + array_sort on
                                 struct(offset, ...) — offset-first field
-                                order makes array_sort the ORDER BY
+                                order makes array_sort the ORDER BY. No
+                                Exchange after a broadcast join-back:
+                                the spans are still doc_id-partitioned
 """
 
 from __future__ import annotations
@@ -123,8 +135,9 @@ def extract_spans(
     media spans. The earlier split-into-two-branches + union recomputed
     the span derivation twice and doubled the data volume. The join key
     is nulled for text spans so they never shuffle-collide on the ''
-    hot key; at test scale AQE broadcasts the results side and the
-    spans never shuffle at all. When the per-ref results stop being
+    hot key. When AQE broadcasts the results side (every test scale),
+    the join-back adds no shuffle: the spans keep whatever partitioning
+    ``docs`` arrives with. When the per-ref results stop being
     broadcastable the join takes a sort-merge/shuffled-hash shape, and
     AQE's skew join splits the partitions of hot media_refs — both
     exercised under ``spark.sql.autoBroadcastJoinThreshold=-1`` by
@@ -174,10 +187,31 @@ def extract_documents(
     replaced by its recognized string, order restored by offset.
     Documents with empty span arrays are preserved in-band by
     posexplode_outer (empty array -> one null marker row that the
-    reassembly agg folds into an empty array) — no doc_id spine join,
-    one scan of the documents table total."""
+    reassembly agg folds into an empty array) — no doc_id spine join.
+
+    The documents are hash-partitioned on doc_id (into
+    ``spark.sql.shuffle.partitions`` parts) before the explode. That
+    one Exchange does three jobs: it replaces a round-robin spread of
+    the scan (CollapseRepartition), both the distinct-ref branch and
+    the join-back read it (ReuseExchange: both keep doc_id), and after
+    a broadcast join-back the reassembly's groupBy(doc_id) needs no
+    shuffle of its own. The count is explicit: a column-only
+    repartition lets AQE coalesce it, which narrowed the explode.
+
+    Trade-off: with a broadcast join-back (the results side is one row
+    per distinct ref) the plan has as many shuffles as before and moves
+    less data, since the nested documents are smaller than their
+    exploded spans. With a shuffled join-back, on an input too large to
+    be spread, the doc_id shuffle is one more document-size shuffle."""
+    n = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return reassemble(
-        extract_spans(docs, media, decoder=decoder, keep_empty=True, allowlist=allowlist)
+        extract_spans(
+            docs.repartition(n, "doc_id"),
+            media,
+            decoder=decoder,
+            keep_empty=True,
+            allowlist=allowlist,
+        )
     )
 
 

@@ -139,6 +139,38 @@ SKEW_CONF = {
 }
 
 
+# session settings the flagship's documents must not depend on, beside
+# the forced shuffle join
+LAYOUTS = [
+    ("spark.sql.shuffle.partitions", "1"),
+    ("spark.sql.shuffle.partitions", "7"),
+    ("spark.sql.adaptive.enabled", "false"),
+]
+
+
+def _final_paths(df):
+    """Root-to-leaf paths of ``df``'s final adaptive plan (run ``df``
+    first), one ``simpleString`` per node; query stages and codegen
+    wrappers are stepped through."""
+    paths, stack = [], [(df._jdf.queryExecution().executedPlan(), ())]
+    while stack:
+        p, path = stack.pop()
+        name = p.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append((p.finalPhysicalPlan(), path))
+            continue
+        if name.endswith("QueryStage"):
+            stack.append((p.plan(), path))
+            continue
+        if not name.startswith(("WholeStageCodegen", "InputAdapter", "ColumnarToRow")):
+            path = (*path, p.simpleString(25))
+        children = p.children()
+        if children.size() == 0:
+            paths.append(path)
+        stack.extend((children.apply(i), path) for i in range(children.size()))
+    return paths
+
+
 def _collect_join_back(df):
     """``df``'s sorted rows and the join-back node (the left outer join)
     of its final adaptive plan, from one run."""
@@ -187,7 +219,11 @@ def test_flagship_join_parity_broadcast_vs_shuffle(docs, media, spark):
     On an input where one image sits under several refs, the per-ref
     OCR rows must not depend on layout either: broadcast vs shuffle and
     1 vs 7 content partitions give the same rows, and each same-lang
-    copy gets the rows of the ref it copies."""
+    copy gets the rows of the ref it copies.
+
+    The reassembly groups the doc_id partitions ``extract_documents``
+    makes, ``spark.sql.shuffle.partitions`` of them, so the documents
+    must not depend on that count or on AQE either."""
     base = _doc_strings(pipeline.extract_documents(docs, media))
     dup_spans, dup_media = _dup_content_input(media)
     n_content = dup_media.select("content", "lang").distinct().count()
@@ -223,12 +259,51 @@ def test_flagship_join_parity_broadcast_vs_shuffle(docs, media, spark):
     assert hot_skewed == hot_base
     for n in (1, 7):
         assert _ocr_rows(dup_spans, dup_media, n) == ocr_base, n
+    for k, v in LAYOUTS:
+        old = spark.conf.get(k)
+        try:
+            spark.conf.set(k, v)
+            layout = _doc_strings(pipeline.extract_documents(docs, media))
+        finally:
+            spark.conf.set(k, old)
+        assert layout == base, (k, v)
     by_ref = {r[0]: r[1:] for r in ocr_base}
     assert len(by_ref) == dup_media.count()
     copies = [ref for ref in by_ref if ref.endswith("_copy")]
     assert len(copies) == 12
     for ref in copies:
         assert by_ref[ref] == by_ref[ref[: -len("_copy")]], ref
+
+
+def test_flagship_shuffles_documents_once_on_doc_id(docs, media, spark, tmp_path):
+    """On nested documents read through ``tables.read_table`` (a scan
+    spread round-robin), the flagship's final plan moves the documents
+    once: the doc_id repartition replaces the spread, the distinct-ref
+    branch reuses that Exchange, and the reassembly aggregates the
+    broadcast join-back's output with no Exchange in between."""
+    tables.interleaved_documents(spark, SF).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    nested = tables.read_table(spark, str(tmp_path), "documents")
+    assert "RoundRobinPartitioning" in nested._jdf.queryExecution().executedPlan().toString()
+    out = _doc_json(pipeline.extract_documents(nested, media))
+    assert sorted(out.collect()) == _doc_strings(pipeline.extract_documents(docs, media))
+    paths = _final_paths(out)
+    scans = [p for p in paths if p[-1].startswith("FileScan parquet [doc_id")]
+    assert len(scans) == 1, scans
+    scan = scans[0]
+    shuffles = [n for n in scan if n.startswith("Exchange ")]
+    assert len(shuffles) == 1, scan
+    assert shuffles[0].startswith("Exchange hashpartitioning(doc_id"), scan
+    reused = [p[-1] for p in paths if p[-1].startswith("ReusedExchange")]
+    assert any(r.endswith(shuffles[0]) for r in reused), reused
+    join = next(
+        i for i, n in enumerate(scan)
+        if n.startswith("BroadcastHashJoin") and "LeftOuter" in n
+    )
+    above = scan[:join]
+    assert any(n.startswith("ObjectHashAggregate") for n in above), scan
+    assert not any("Exchange" in n or "ShuffleRead" in n for n in above), scan
 
 
 def test_strip_boilerplate_drops_cross_doc_chrome(spark):
