@@ -11,8 +11,11 @@ Stage-for-stage mirror of the reference pipeline semantics
                   (reference easyocr/recognition.py)
   ctc.py        — CTC greedy/beam decode + custom_mean confidence
                   (reference easyocr/utils.py:327-384, recognition.py:13-14)
-  reader.py     — Reader-style facade: detect / recognize / readtext
-                  (reference easyocr/easyocr.py:311-474)
+  reader.py     — the Reader facade both backends share: detect /
+                  recognize / readtext (reference
+                  easyocr/easyocr.py:311-579); StandInReader plugs the
+                  numpy stages in, backends/torch_reader.TorchReader
+                  the real CRAFT + CRNN models
 
 The neural forward passes are replaced by deterministic template
 arithmetic (sandbox has no torch); every post-processing contract the

@@ -1,21 +1,33 @@
 """Pluggable OCR backends.
 
-The engine ships two interchangeable backends behind the Reader plug
-points (ocr/reader.py detect strategy, the ocr/udfs.get_reader executor
-singleton):
+The engine ships two interchangeable backends behind one Reader
+facade (ocr/reader.Reader) and one executor singleton
+(ocr/udfs.get_reader). A backend is a Reader subclass that supplies the
+detector's boxes for a batch of grays, the crop of a free quad and one
+recognition call over a list of crops (the stand-in scores them in one
+matmul; the torch nets still run one forward per crop); grouping, crops,
+the contrast retry, rotation, free-merge, paragraphs and the RTL rule
+are shared.
 
-- ``standin`` (default): the deterministic numpy detector/recognizer —
-  the only executable path in this sandbox (no torch) and the one the
-  DuckDB oracles verify pixel-for-pixel.
-- ``torch``: the reference's real pretrained models — CRAFT detection
-  (reference easyocr/detection.py:74-90, easyocr/craft.py:30-80) and
-  gen2 CRNN recognition (reference easyocr/recognition.py:153-184,
-  easyocr/model/vgg_model.py:4-35) — activated only when ``import
-  torch`` succeeds AND the md5-pinned weight files are present
-  (reference easyocr/config.py:11-27 pins them). On a cluster the .pth
-  files ship via ``spark-submit --files`` and land in the working dir
-  of every executor; ocr/udfs.get_reader then loads them once per
-  (decoder, allowlist, lang) config in each Python worker process.
+- ``standin`` (default): the deterministic numpy detector/recognizer
+  (ocr/reader.StandInReader) — the only executable path without torch
+  and the one the DuckDB oracles verify pixel-for-pixel.
+- ``torch`` (torch_reader.TorchReader): the reference's real
+  pretrained models — CRAFT detection (reference
+  easyocr/detection.py:74-90, easyocr/craft.py:30-80) and the gen2 VGG
+  or gen1 ResNet CRNN recognizers (reference
+  easyocr/recognition.py:153-184, easyocr/model/vgg_model.py:4-35,
+  model/model.py:4-35) — activated only when ``import torch`` succeeds
+  AND the md5-pinned weight files are present (reference
+  easyocr/config.py:11-27 pins them). On a cluster the .pth files ship
+  via ``spark-submit --files`` and land in the working dir of every
+  executor; ocr/udfs.get_reader then loads them once per (decoder,
+  allowlist, lang) config in each Python worker process. The media
+  table's lang tags route through ``reader.LANG_CODES``: ``arabic``
+  reads with the gen1 arabic model (``arabic.pth`` must be present, or
+  the reader fails when it is built, naming the file); ``latin`` and
+  ``chinese`` read with english gen2 — this tree has no torch CJK
+  model or charset.
 
 Selection: ``EASYOCR_SPARK_BACKEND=torch`` env var (read once per
 worker) or an explicit ``backend=`` argument. Missing torch or missing
@@ -92,6 +104,25 @@ def maybe_quantize(model, quantize: bool):
         torch.quantization.quantize_dynamic(model, dtype=torch.qint8, inplace=True)
     except Exception:
         pass
+    return model
+
+
+def load_weights(model, path: str, remap_key, quantize: bool = False):
+    """Load the checkpoint at ``path`` into ``model``: every key goes
+    through the model module's ``remap_key`` (an unknown key is a
+    KeyError), the load is strict, then optional quantization and eval
+    mode. A missing file fails here, naming it."""
+    import torch
+
+    state = {}
+    for ck, v in torch.load(path, map_location="cpu").items():
+        mk = remap_key(ck)
+        if mk is None:
+            raise KeyError(f"unexpected checkpoint key: {ck}")
+        state[mk] = v
+    model.load_state_dict(state, strict=True)
+    maybe_quantize(model, quantize)
+    model.eval()
     return model
 
 

@@ -138,14 +138,17 @@ def build_model():
     return CraftNet()
 
 
-def _conv_entry(p: dict, prefix: str, c_out: int, c_in: int, k: int,
-                bias: bool = True) -> None:
+def conv_entry(p: dict, prefix: str, c_out: int, c_in: int, k: int,
+               bias: bool = True) -> None:
+    """A k x k Conv2d's parameter shapes, added to ``p`` (the
+    expected_params of every torch backend use it)."""
     p[f"{prefix}.weight"] = (c_out, c_in, k, k)
     if bias:
         p[f"{prefix}.bias"] = (c_out,)
 
 
-def _bn_entry(p: dict, prefix: str, ch: int) -> None:
+def bn_entry(p: dict, prefix: str, ch: int) -> None:
+    """A BatchNorm2d's parameter and buffer shapes, added to ``p``."""
     p[f"{prefix}.weight"] = (ch,)
     p[f"{prefix}.bias"] = (ch,)
     p[f"{prefix}.running_mean"] = (ch,)
@@ -176,24 +179,24 @@ def expected_params() -> dict[str, tuple[int, ...]]:
             kind, ci, co = flat[idx]
             pre = f"stages.{si}.{idx - a}"
             if kind == "conv":
-                _conv_entry(p, pre, co, ci, 3)
+                conv_entry(p, pre, co, ci, 3)
             elif kind == "bn":
-                _bn_entry(p, pre, co)
-    _conv_entry(p, "neck.1", 1024, 512, 3)
-    _conv_entry(p, "neck.2", 1024, 1024, 1)
+                bn_entry(p, pre, co)
+    conv_entry(p, "neck.1", 1024, 512, 3)
+    conv_entry(p, "neck.2", 1024, 1024, 1)
     for i, (cin, cmid, cout) in enumerate(
         [(1024, 512, 256), (512, 256, 128), (256, 128, 64), (128, 64, 32)],
         start=1,
     ):
-        _conv_entry(p, f"up{i}.block.0", cmid, cin + cmid, 1)
-        _bn_entry(p, f"up{i}.block.1", cmid)
-        _conv_entry(p, f"up{i}.block.3", cout, cmid, 3)
-        _bn_entry(p, f"up{i}.block.4", cout)
+        conv_entry(p, f"up{i}.block.0", cmid, cin + cmid, 1)
+        bn_entry(p, f"up{i}.block.1", cmid)
+        conv_entry(p, f"up{i}.block.3", cout, cmid, 3)
+        bn_entry(p, f"up{i}.block.4", cout)
     for idx, (ci, co, k) in zip(
         (0, 2, 4, 6, 8),
         [(32, 32, 3), (32, 32, 3), (32, 16, 3), (16, 16, 1), (16, 2, 1)],
     ):
-        _conv_entry(p, f"head.{idx}", co, ci, k)
+        conv_entry(p, f"head.{idx}", co, ci, k)
     return p
 
 
@@ -220,24 +223,6 @@ def remap_key(ckpt_key: str) -> str | None:
     return None
 
 
-def load_weights(model, path: str, quantize: bool = False):
-    import torch
-
-    from . import maybe_quantize
-
-    ckpt = torch.load(path, map_location="cpu")
-    state = {}
-    for ck, v in ckpt.items():
-        mk = remap_key(ck)
-        if mk is None:
-            raise KeyError(f"unexpected checkpoint key: {ck}")
-        state[mk] = v
-    model.load_state_dict(state, strict=True)
-    maybe_quantize(model, quantize)
-    model.eval()
-    return model
-
-
 def normalize_mean_variance(rgb: np.ndarray) -> np.ndarray:
     """float32 NHW3 in [0,255] -> ImageNet-normalized, like the
     reference's normalizeMeanVariance."""
@@ -252,10 +237,10 @@ class TorchCraftDetector:
 
     def __init__(self, weights_path: str | None = None, canvas_size: int = 2560,
                  mag_ratio: float = 1.0, quantize: bool = False):
-        from . import weights_dir
+        from . import load_weights, weights_dir
 
         path = weights_path or os.path.join(weights_dir(), "craft_mlt_25k.pth")
-        self.model = load_weights(build_model(), path, quantize=quantize)
+        self.model = load_weights(build_model(), path, remap_key, quantize)
         self.canvas_size = canvas_size
         self.mag_ratio = mag_ratio
 

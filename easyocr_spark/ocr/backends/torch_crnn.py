@@ -10,20 +10,26 @@ time axis), adaptive-avg-pool squeeze, two stacked bidirectional LSTMs
 checkpoint's names by remap_key — independent module code, not a
 mirror.
 
-The forward's output feeds the engine's EXISTING numpy CTC stack
-(ocr/ctc.py greedy/beam/wordbeam + custom_mean confidence), so decoder
-behavior, allow/blocklist masking, and the two-pass contrast retry in
-ocr/recognition.py are shared between backends — only the [T, C]
-probability producer differs.
+The recognizer pieces both generations share live here too: the
+BiLSTM sequence block and CTC head (``sequence_head``), its parameter
+shapes, the checkpoint-key tail (``remap_recognizer_key``) and
+``TorchRecognizer``, recognition of a list of crops by either net
+(one forward per crop). Its [T, C] output feeds the engine's numpy CTC stack (ocr/ctc.py
+greedy/beam + custom_mean confidence) and allow/blocklist masking; the
+contrast retry is the shared one in ocr/recognition.get_text.
 
-UNTESTED IN THIS SANDBOX: torch is absent here; tests importorskip.
+Without torch, tests/test_torch_backend.py runs the real builder,
+forward and loader under the numpy shim (``np_torch.installed()``) on
+seeded or synthetic weights; the tests that need torch importorskip.
 """
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
+
+from ..ctc import ctc_beam_search, custom_mean, decode_greedy, greedy_collapse
+from ..recognition import apply_ignore
+from .torch_craft import bn_entry, conv_entry
 
 # english_g2 network params (reference easyocr/config.py:145-160)
 INPUT_CHANNEL = 1
@@ -70,10 +76,12 @@ GEN2_MODELS = {
 }
 
 
-def build_model(num_class: int = len(EN_G2_CHARSET) + 1):
+def sequence_head(n_in: int, hidden: int, num_class: int):
+    """(seq, head) modules both recognizer generations end in: two
+    stacked bidirectional LSTMs, each with a linear projection back to
+    ``hidden`` (reference easyocr/model/modules.py BidirectionalLSTM),
+    then the linear CTC head over ``num_class`` classes."""
     import torch.nn as nn
-
-    c = [OUTPUT_CHANNEL // 8, OUTPUT_CHANNEL // 4, OUTPUT_CHANNEL // 2, OUTPUT_CHANNEL]
 
     class BiLSTM(nn.Module):
         def __init__(self, n_in: int, n_hidden: int, n_out: int):
@@ -84,6 +92,48 @@ def build_model(num_class: int = len(EN_G2_CHARSET) + 1):
         def forward(self, x):
             y, _ = self.rnn(x)
             return self.proj(y)
+
+    seq = nn.Sequential(BiLSTM(n_in, hidden, hidden), BiLSTM(hidden, hidden, hidden))
+    return seq, nn.Linear(hidden, num_class)
+
+
+def sequence_head_params(p: dict, n_in: int, hidden: int, num_class: int) -> None:
+    """``sequence_head``'s parameter shapes, added to ``p``."""
+    for i, n in enumerate((n_in, hidden)):
+        for suffix in ("", "_reverse"):
+            p[f"seq.{i}.rnn.weight_ih_l0{suffix}"] = (4 * hidden, n)
+            p[f"seq.{i}.rnn.weight_hh_l0{suffix}"] = (4 * hidden, hidden)
+            p[f"seq.{i}.rnn.bias_ih_l0{suffix}"] = (4 * hidden,)
+            p[f"seq.{i}.rnn.bias_hh_l0{suffix}"] = (4 * hidden,)
+        p[f"seq.{i}.proj.weight"] = (hidden, 2 * hidden)
+        p[f"seq.{i}.proj.bias"] = (hidden,)
+    p["head.weight"] = (num_class, hidden)
+    p["head.bias"] = (num_class,)
+
+
+def remap_recognizer_key(ckpt_key: str, features) -> str | None:
+    """A recognizer checkpoint key (either generation) -> module key:
+    drops the DataParallel ``module.`` prefix, maps the sequence and
+    head keys ``sequence_head`` names, and hands the tail of a
+    ``FeatureExtraction.ConvNet.`` key to ``features``. None for keys
+    the module does not carry."""
+    k = ckpt_key.removeprefix("module.")
+    if k.startswith("FeatureExtraction.ConvNet."):
+        return features(k[len("FeatureExtraction.ConvNet."):])
+    if k.startswith("SequenceModeling."):
+        rest = k[len("SequenceModeling."):]  # '<i>.rnn.*' or '<i>.linear.*'
+        i, sub = rest.split(".", 1)
+        sub = sub.replace("linear.", "proj.", 1) if sub.startswith("linear.") else sub
+        return f"seq.{i}.{sub}"
+    if k.startswith("Prediction."):
+        return "head." + k[len("Prediction."):]
+    return None
+
+
+def build_model(num_class: int = len(EN_G2_CHARSET) + 1):
+    import torch.nn as nn
+
+    c = [OUTPUT_CHANNEL // 8, OUTPUT_CHANNEL // 4, OUTPUT_CHANNEL // 2, OUTPUT_CHANNEL]
 
     class CrnnNet(nn.Module):
         def __init__(self):
@@ -104,11 +154,7 @@ def build_model(num_class: int = len(EN_G2_CHARSET) + 1):
                 nn.Conv2d(c[3], c[3], 2, 1, 0), nn.ReLU(True),
             )
             self.pool = nn.AdaptiveAvgPool2d((None, 1))
-            self.seq = nn.Sequential(
-                BiLSTM(OUTPUT_CHANNEL, HIDDEN_SIZE, HIDDEN_SIZE),
-                BiLSTM(HIDDEN_SIZE, HIDDEN_SIZE, HIDDEN_SIZE),
-            )
-            self.head = nn.Linear(HIDDEN_SIZE, num_class)
+            self.seq, self.head = sequence_head(OUTPUT_CHANNEL, HIDDEN_SIZE, num_class)
 
         def forward(self, x):
             v = self.features(x)  # [N, C, h', T]
@@ -122,65 +168,24 @@ def expected_params(num_class: int = len(EN_G2_CHARSET) + 1) -> dict[str, tuple[
     """Name -> shape of every parameter/buffer of build_model()'s
     module, derived WITHOUT torch from the same layer spec the builder
     uses — see torch_craft.expected_params for the test contract."""
-    from .torch_craft import _bn_entry, _conv_entry
-
     c = [OUTPUT_CHANNEL // 8, OUTPUT_CHANNEL // 4, OUTPUT_CHANNEL // 2, OUTPUT_CHANNEL]
     p: dict[str, tuple[int, ...]] = {}
-    _conv_entry(p, "features.0", c[0], INPUT_CHANNEL, 3)
-    _conv_entry(p, "features.3", c[1], c[0], 3)
-    _conv_entry(p, "features.6", c[2], c[1], 3)
-    _conv_entry(p, "features.8", c[2], c[2], 3)
-    _conv_entry(p, "features.11", c[3], c[2], 3, bias=False)
-    _bn_entry(p, "features.12", c[3])
-    _conv_entry(p, "features.14", c[3], c[3], 3, bias=False)
-    _bn_entry(p, "features.15", c[3])
-    _conv_entry(p, "features.18", c[3], c[3], 2)
-    for i, n_in in enumerate((OUTPUT_CHANNEL, HIDDEN_SIZE)):
-        for suffix in ("", "_reverse"):
-            p[f"seq.{i}.rnn.weight_ih_l0{suffix}"] = (4 * HIDDEN_SIZE, n_in)
-            p[f"seq.{i}.rnn.weight_hh_l0{suffix}"] = (4 * HIDDEN_SIZE, HIDDEN_SIZE)
-            p[f"seq.{i}.rnn.bias_ih_l0{suffix}"] = (4 * HIDDEN_SIZE,)
-            p[f"seq.{i}.rnn.bias_hh_l0{suffix}"] = (4 * HIDDEN_SIZE,)
-        p[f"seq.{i}.proj.weight"] = (HIDDEN_SIZE, 2 * HIDDEN_SIZE)
-        p[f"seq.{i}.proj.bias"] = (HIDDEN_SIZE,)
-    p["head.weight"] = (num_class, HIDDEN_SIZE)
-    p["head.bias"] = (num_class,)
+    conv_entry(p, "features.0", c[0], INPUT_CHANNEL, 3)
+    conv_entry(p, "features.3", c[1], c[0], 3)
+    conv_entry(p, "features.6", c[2], c[1], 3)
+    conv_entry(p, "features.8", c[2], c[2], 3)
+    conv_entry(p, "features.11", c[3], c[2], 3, bias=False)
+    bn_entry(p, "features.12", c[3])
+    conv_entry(p, "features.14", c[3], c[3], 3, bias=False)
+    bn_entry(p, "features.15", c[3])
+    conv_entry(p, "features.18", c[3], c[3], 2)
+    sequence_head_params(p, OUTPUT_CHANNEL, HIDDEN_SIZE, num_class)
     return p
 
 
 def remap_key(ckpt_key: str) -> str | None:
-    """english_g2.pth key -> this module's key."""
-    k = ckpt_key
-    if k.startswith("module."):
-        k = k[len("module."):]
-    if k.startswith("FeatureExtraction.ConvNet."):
-        return "features." + k[len("FeatureExtraction.ConvNet."):]
-    if k.startswith("SequenceModeling."):
-        rest = k[len("SequenceModeling."):]  # '<i>.rnn.*' or '<i>.linear.*'
-        i, sub = rest.split(".", 1)
-        sub = sub.replace("linear.", "proj.", 1) if sub.startswith("linear.") else sub
-        return f"seq.{i}.{sub}"
-    if k.startswith("Prediction."):
-        return "head." + k[len("Prediction."):]
-    return None
-
-
-def load_weights(model, path: str, quantize: bool = False):
-    import torch
-
-    from . import maybe_quantize
-
-    ckpt = torch.load(path, map_location="cpu")
-    state = {}
-    for ck, v in ckpt.items():
-        mk = remap_key(ck)
-        if mk is None:
-            raise KeyError(f"unexpected checkpoint key: {ck}")
-        state[mk] = v
-    model.load_state_dict(state, strict=True)
-    maybe_quantize(model, quantize)
-    model.eval()
-    return model
+    """english_g2.pth / cyrillic_g2.pth key -> this module's key."""
+    return remap_recognizer_key(ckpt_key, lambda rest: "features." + rest)
 
 
 def normalize_pad(crop: np.ndarray, target_h: int = IMG_H,
@@ -200,45 +205,37 @@ def normalize_pad(crop: np.ndarray, target_h: int = IMG_H,
     return x
 
 
-class TorchCrnnRecognizer:
-    """recognize_probs(crop) -> [T, C] softmax matrix with blank at
-    index 0 — the same contract the stand-in's recognition._frames
-    produces, so ocr/ctc.py decoders apply unchanged."""
+class TorchRecognizer:
+    """Recognition of a list of crops by a loaded recognizer ``net``
+    (either generation). The crops are not padded into one tensor: per
+    crop, one ``net`` forward gives a [T, C] softmax matrix with the
+    CTC blank at index 0 — the contract of the stand-in's
+    recognition._frames — and the engine's numpy CTC
+    (ocr/ctc.py) decodes it over ``charset``. wordbeamsearch reads
+    greedy here: the torch models carry no word dictionary."""
 
-    def __init__(self, weights_path: str | None = None, quantize: bool = False,
-                 model: str = "english"):
-        from . import weights_dir
-
-        filename, charset = GEN2_MODELS[model]
-        path = weights_path or os.path.join(weights_dir(), filename)
-        self.model = load_weights(
-            build_model(len(charset) + 1), path, quantize=quantize
-        )
+    def __init__(self, net, charset: str):
+        self.net = net
         self.charset = charset
 
-    def recognize_probs(self, crop: np.ndarray) -> np.ndarray:
+    def probs(self, crop: np.ndarray) -> np.ndarray:
         import torch
 
         x = normalize_pad(crop)[None, None]  # [1, 1, H, W]
         with torch.no_grad():
-            logits = self.model(torch.from_numpy(x))[0]  # [T, C]
-            probs = torch.softmax(logits, dim=1).numpy()
-        return probs
+            logits = self.net(torch.from_numpy(x))[0]  # [T, C]
+            return torch.softmax(logits, dim=1).numpy()
 
-    def recognize(self, crop: np.ndarray, decoder: str = "greedy",
-                  ignore: np.ndarray | None = None) -> tuple[str, float]:
-        from ..ctc import (
-            ctc_beam_search,
-            custom_mean,
-            decode_greedy,
-            greedy_collapse,
-        )
-        from ..recognition import _apply_ignore
-
-        probs = _apply_ignore(self.recognize_probs(crop), ignore)
-        if decoder == "beamsearch":
-            text, _ = ctc_beam_search(probs, self.charset)
-        else:
-            text, _ = decode_greedy(probs, self.charset)
-        _, confs = greedy_collapse(probs)
-        return text, custom_mean(confs) if confs.size else 0.0
+    def recognize(
+        self, crops: list[np.ndarray], decoder: str = "greedy", ignore: np.ndarray | None = None
+    ) -> list[tuple[str, float]]:
+        out = []
+        for crop in crops:
+            probs = apply_ignore(self.probs(crop), ignore)
+            if decoder == "beamsearch":
+                text, _ = ctc_beam_search(probs, self.charset)
+            else:
+                text, _ = decode_greedy(probs, self.charset)
+            _, confs = greedy_collapse(probs)
+            out.append((text, custom_mean(confs) if confs.size else 0.0))
+        return out

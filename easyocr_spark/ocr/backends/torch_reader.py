@@ -1,32 +1,30 @@
-"""Torch-backed Reader facade — same interface as StandInReader.
+"""Torch-backed Reader: the real CRAFT detector and CRNN recognizers
+behind ocr/reader.py's shared ``Reader`` facade.
 
-detect/recognize/readtext/readtext_text mirror ocr/reader.py so
-the ocr/udfs.py kernels (every one built on image_kernel, every reader
-fetched through get_reader) work with either backend unchanged: the ONLY
-differences are the score-map producer (real CRAFT) and the [T, C]
-probability producer (real CRNN). Grouping, min-size filtering,
-four-point warping, paragraph assembly, CTC decoding, and RTL routing
-are the engine's shared numpy implementations.
+``TorchReader`` supplies only what differs from the stand-in: the
+model routing (lang codes -> gen1 or gen2 recognizer, reference
+easyocr/easyocr.py:106-168), the detector's boxes for a batch of grays,
+and one recognition call over a list of crops (one net forward per
+crop). It keeps the facade's default free-quad crop, the reference's
+``four_point_transform``.
+Grouping, min-size filtering, crops, the contrast retry, rotation,
+free-merge, paragraphs and the RTL rule are the facade's.
 
-UNTESTED IN THIS SANDBOX (no torch); structure tests importorskip.
+Without torch, tests/test_torch_backend.py runs it under the numpy
+shim (``np_torch.installed()``) on synthetic checkpoints; real-weight
+numerics need torch and the released .pth files.
 """
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 
-from ..grouping import group_text_box, min_size_filter
-from ..paragraph import get_paragraph
-from ..reader import MIN_SIZE, four_point_transform, merge_to_free, text_projection
-from ..recognition import (
-    ADJUST_CONTRAST,
-    CONTRAST_THS,
-    adjust_contrast_grey,
-    build_ignore_mask,
-    contrast_grey,
-)
+from ..reader import Reader, lang_codes
+from ..recognition import build_ignore_mask
+from . import load_weights, torch_crnn, torch_resnet, weights_dir
 from .torch_craft import TorchCraftDetector
-from .torch_crnn import TorchCrnnRecognizer
 
 # (lang codes, gen1 model key) in the reference auto-router's EXACT
 # priority order (easyocr/easyocr.py:111-168 elif chain: th ... ta,
@@ -58,7 +56,11 @@ CYRILLIC_LANGS = (
 )
 
 
-class TorchReader:
+class TorchReader(Reader):
+    """lang_list holds reference lang codes or media-table tags
+    (``reader.LANG_CODES`` maps the tags). This tree has no torch CJK
+    model or charset, so ``chinese`` reads with english gen2."""
+
     def __init__(
         self,
         lang_list: list[str] | None = None,
@@ -73,7 +75,7 @@ class TorchReader:
         # (easyocr/detection.py:74-83, recognition.py:168-179) — OFF by
         # default here because it shifts numerics; see
         # backends.maybe_quantize for the parity-pinning note
-        self.lang_list = lang_list or ["en"]
+        super().__init__(lang_list or ["en"])
         self.decoder = decoder
         self.detector = TorchCraftDetector(craft_weights, quantize=quantize)
         # per-script model routing, mirroring the reference's
@@ -83,84 +85,26 @@ class TorchReader:
         # the reference elif-chain order), cyrillic to the gen2 VGG
         # with the cyrillic_g2 charset, everything else to english/latin
         # gen2
+        codes = lang_codes(self.lang_list)
         gen1_lang = next(
-            (
-                lang
-                for codes, lang in GEN1_LANG_ROUTES
-                if any(code in self.lang_list for code in codes)
-            ),
+            (lang for langs, lang in GEN1_LANG_ROUTES if any(c in codes for c in langs)),
             None,
         )
         if gen1_lang is not None:
-            from .torch_resnet import TorchGen1Recognizer
-
-            self.recognizer = TorchGen1Recognizer(
-                gen1_lang, crnn_weights, quantize=quantize
-            )
-        elif any(code in self.lang_list for code in CYRILLIC_LANGS):
-            self.recognizer = TorchCrnnRecognizer(
-                crnn_weights, quantize=quantize, model="cyrillic"
-            )
+            family, (filename, charset) = torch_resnet, torch_resnet.GEN1_MODELS[gen1_lang]
         else:
-            self.recognizer = TorchCrnnRecognizer(crnn_weights, quantize=quantize)
+            gen2 = "cyrillic" if any(c in codes for c in CYRILLIC_LANGS) else "english"
+            family, (filename, charset) = torch_crnn, torch_crnn.GEN2_MODELS[gen2]
+        path = crnn_weights or os.path.join(weights_dir(), filename)
+        net = load_weights(family.build_model(len(charset) + 1), path, family.remap_key, quantize)
+        self.recognizer = torch_crnn.TorchRecognizer(net, charset)
         # allow/blocklist -> ignore mask over the model charset
-        self.ignore = build_ignore_mask(allowlist, blocklist, self.recognizer.charset)
+        self.ignore = build_ignore_mask(allowlist, blocklist, charset)
 
-    def detect(self, gray: np.ndarray, min_size: int = MIN_SIZE):
-        boxes = self.detector.detect(gray)
-        horizontal, free = group_text_box(boxes)
-        return min_size_filter(horizontal, free, min_size)
+    def boxes(self, grays: list[np.ndarray], optimal_num_chars: int | None) -> list:
+        if optimal_num_chars is not None:
+            raise ValueError("the torch detector has no optimal_num_chars")
+        return [self.detector.detect(gray) for gray in grays]
 
-    def _decode_crop(self, crop: np.ndarray) -> tuple[str, float]:
-        text, conf = self.recognizer.recognize(crop, self.decoder, self.ignore)
-        if conf < CONTRAST_THS:
-            c, _, _ = contrast_grey(crop)
-            if c < ADJUST_CONTRAST:
-                t2, c2 = self.recognizer.recognize(
-                    adjust_contrast_grey(crop, ADJUST_CONTRAST),
-                    self.decoder,
-                    self.ignore,
-                )
-                if c2 > conf:
-                    return t2, c2
-        return text, conf
-
-    def recognize(self, gray, horizontal_list, free_list, paragraph=False,
-                  free_merge=False):
-        h, w = gray.shape
-        results = []
-        for x0, x1, y0, y1 in horizontal_list:
-            crop = gray[max(0, y0): min(h, y1), max(0, x0): min(w, x1)]
-            if crop.size == 0:
-                continue
-            text, conf = self._decode_crop(crop)
-            results.append(([[x0, y0], [x1, y0], [x1, y1], [x0, y1]], text, conf))
-        for quad in free_list:
-            crop = four_point_transform(gray, np.asarray(quad))
-            text, conf = self._decode_crop(crop)
-            results.append(([list(p) for p in quad], text, conf))
-        if free_merge:
-            results = merge_to_free(results, len(free_list))
-        if paragraph:
-            mode = "rtl" if "ar" in self.lang_list else "ltr"
-            return get_paragraph(results, mode=mode)
-        return results
-
-    def readtext(self, gray: np.ndarray, paragraph: bool = False,
-                 free_merge: bool = False):
-        horizontal, free = self.detect(gray)
-        return self.recognize(gray, horizontal, free, paragraph=paragraph,
-                              free_merge=free_merge)
-
-    # the batch entry points the ocr/udfs.py kernels call; the torch
-    # path runs image by image
-    def detect_batched(self, grays: list[np.ndarray], min_size: int = MIN_SIZE):
-        return [self.detect(g, min_size) for g in grays]
-
-    def readtext_batched(self, grays: list[np.ndarray], paragraph: bool = False,
-                         free_merge: bool = False):
-        return [self.readtext(g, paragraph=paragraph, free_merge=free_merge)
-                for g in grays]
-
-    def readtext_text(self, gray: np.ndarray, rtl: bool = False) -> str:
-        return text_projection(self.readtext(gray, free_merge=True), rtl)[0]
+    def recognize_pass(self, crops: list[np.ndarray]) -> list[tuple[str, float]]:
+        return self.recognizer.recognize(crops, self.decoder, self.ignore)

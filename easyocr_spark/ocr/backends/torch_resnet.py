@@ -7,25 +7,27 @@ released .pth files + md5; architecture reference
 easyocr/model/model.py:4-35 with ResNet_FeatureExtractor from
 model/modules.py:126-264: a FAN-style ResNet with BasicBlock counts
 [1, 2, 5, 3], inter-stage smoothing convs and a 2-conv tail, followed
-by the same two stacked BiLSTMs and linear CTC head as gen2 but at
-width 512 (input_channel 1 / output_channel 512 / hidden_size 512,
-reference easyocr/easyocr.py:218-222)).
+by the same two stacked BiLSTMs and linear CTC head as gen2
+(torch_crnn.sequence_head) but at width 512 (input_channel 1 /
+output_channel 512 / hidden_size 512, reference
+easyocr/easyocr.py:218-222)).
 
 Like the other torch backends this is independent module code plus an
 explicit checkpoint-key translation layer (remap_key); the recorded
 public checkpoint layout lives in manifests.gen1_checkpoint_manifest
 and the remap is proven against it torch-free (tests/
-test_torch_backend.py). The forward feeds the engine's numpy CTC stack
-(ocr/ctc.py) exactly like TorchCrnnRecognizer.
+test_torch_backend.py). A loaded gen1 net recognizes through
+torch_crnn.TorchRecognizer, like the gen2 ones.
 
-UNTESTED IN THIS SANDBOX: torch is absent here; tests importorskip.
+Without torch, the real builder and forward run under the numpy shim
+(``np_torch.installed()``) in tests/test_torch_backend.py; the tests
+that need torch importorskip.
 """
 
 from __future__ import annotations
 
-import os
-
-import numpy as np
+from .torch_craft import bn_entry, conv_entry
+from .torch_crnn import remap_recognizer_key, sequence_head, sequence_head_params
 
 # gen1 network params (reference easyocr/easyocr.py:218-222)
 INPUT_CHANNEL = 1
@@ -154,16 +156,6 @@ def build_model(num_class: int):
         mods += [Residual(c_out, c_out) for _ in range(blocks - 1)]
         return nn.Sequential(*mods)
 
-    class BiLSTM(nn.Module):
-        def __init__(self, n_in: int, n_hidden: int, n_out: int):
-            super().__init__()
-            self.rnn = nn.LSTM(n_in, n_hidden, bidirectional=True, batch_first=True)
-            self.proj = nn.Linear(n_hidden * 2, n_out)
-
-        def forward(self, x):
-            y, _ = self.rnn(x)
-            return self.proj(y)
-
     class Gen1Net(nn.Module):
         def __init__(self):
             super().__init__()
@@ -193,11 +185,7 @@ def build_model(num_class: int):
             )
             self.relu = nn.ReLU(inplace=True)
             self.pool = nn.AdaptiveAvgPool2d((None, 1))
-            self.seq = nn.Sequential(
-                BiLSTM(OUTPUT_CHANNEL, HIDDEN_SIZE, HIDDEN_SIZE),
-                BiLSTM(HIDDEN_SIZE, HIDDEN_SIZE, HIDDEN_SIZE),
-            )
-            self.head = nn.Linear(HIDDEN_SIZE, num_class)
+            self.seq, self.head = sequence_head(OUTPUT_CHANNEL, HIDDEN_SIZE, num_class)
 
         def forward(self, x):
             v = self.stem(x)
@@ -215,43 +203,32 @@ def expected_params(num_class: int) -> dict[str, tuple[int, ...]]:
     """Name -> shape of every parameter/buffer of build_model()'s
     module, derived WITHOUT torch from the same stage specs — see
     torch_craft.expected_params for the test contract."""
-    from .torch_craft import _bn_entry, _conv_entry
-
     p: dict[str, tuple[int, ...]] = {}
-    _conv_entry(p, "stem.0", _STEM_CH[0], INPUT_CHANNEL, 3, bias=False)
-    _bn_entry(p, "stem.1", _STEM_CH[0])
-    _conv_entry(p, "stem.3", _STEM_CH[1], _STEM_CH[0], 3, bias=False)
-    _bn_entry(p, "stem.4", _STEM_CH[1])
+    conv_entry(p, "stem.0", _STEM_CH[0], INPUT_CHANNEL, 3, bias=False)
+    bn_entry(p, "stem.1", _STEM_CH[0])
+    conv_entry(p, "stem.3", _STEM_CH[1], _STEM_CH[0], 3, bias=False)
+    bn_entry(p, "stem.4", _STEM_CH[1])
     c_in = _STEM_CH[1]
     for s, (c_out, blocks) in enumerate(zip(_STAGE_CH, _STAGE_BLOCKS), start=1):
         for b in range(blocks):
             ci = c_in if b == 0 else c_out
             pre = f"res{s}.{b}"
-            _conv_entry(p, f"{pre}.a", c_out, ci, 3, bias=False)
-            _bn_entry(p, f"{pre}.abn", c_out)
-            _conv_entry(p, f"{pre}.b", c_out, c_out, 3, bias=False)
-            _bn_entry(p, f"{pre}.bbn", c_out)
+            conv_entry(p, f"{pre}.a", c_out, ci, 3, bias=False)
+            bn_entry(p, f"{pre}.abn", c_out)
+            conv_entry(p, f"{pre}.b", c_out, c_out, 3, bias=False)
+            bn_entry(p, f"{pre}.bbn", c_out)
             if ci != c_out:
-                _conv_entry(p, f"{pre}.short.0", c_out, ci, 1, bias=False)
-                _bn_entry(p, f"{pre}.short.1", c_out)
+                conv_entry(p, f"{pre}.short.0", c_out, ci, 1, bias=False)
+                bn_entry(p, f"{pre}.short.1", c_out)
         if s <= 3:
-            _conv_entry(p, f"smooth{s}.0", c_out, c_out, 3, bias=False)
-            _bn_entry(p, f"smooth{s}.1", c_out)
+            conv_entry(p, f"smooth{s}.0", c_out, c_out, 3, bias=False)
+            bn_entry(p, f"smooth{s}.1", c_out)
         c_in = c_out
-    _conv_entry(p, "tail.0", _STAGE_CH[3], _STAGE_CH[3], 2, bias=False)
-    _bn_entry(p, "tail.1", _STAGE_CH[3])
-    _conv_entry(p, "tail.3", _STAGE_CH[3], _STAGE_CH[3], 2, bias=False)
-    _bn_entry(p, "tail.4", _STAGE_CH[3])
-    for i, n_in in enumerate((OUTPUT_CHANNEL, HIDDEN_SIZE)):
-        for suffix in ("", "_reverse"):
-            p[f"seq.{i}.rnn.weight_ih_l0{suffix}"] = (4 * HIDDEN_SIZE, n_in)
-            p[f"seq.{i}.rnn.weight_hh_l0{suffix}"] = (4 * HIDDEN_SIZE, HIDDEN_SIZE)
-            p[f"seq.{i}.rnn.bias_ih_l0{suffix}"] = (4 * HIDDEN_SIZE,)
-            p[f"seq.{i}.rnn.bias_hh_l0{suffix}"] = (4 * HIDDEN_SIZE,)
-        p[f"seq.{i}.proj.weight"] = (HIDDEN_SIZE, 2 * HIDDEN_SIZE)
-        p[f"seq.{i}.proj.bias"] = (HIDDEN_SIZE,)
-    p["head.weight"] = (num_class, HIDDEN_SIZE)
-    p["head.bias"] = (num_class,)
+    conv_entry(p, "tail.0", _STAGE_CH[3], _STAGE_CH[3], 2, bias=False)
+    bn_entry(p, "tail.1", _STAGE_CH[3])
+    conv_entry(p, "tail.3", _STAGE_CH[3], _STAGE_CH[3], 2, bias=False)
+    bn_entry(p, "tail.4", _STAGE_CH[3])
+    sequence_head_params(p, OUTPUT_CHANNEL, HIDDEN_SIZE, num_class)
     return p
 
 
@@ -270,93 +247,23 @@ _BLOCK_RENAMES = {
 }
 
 
+def _remap_features(rest: str) -> str | None:
+    """The ResNet feature extractor's key tail -> module key."""
+    if rest.startswith("layer"):
+        stage, blk, sub = rest.split(".", 2)
+        inner, param = sub.rsplit(".", 1)
+        mapped = _BLOCK_RENAMES.get(inner)
+        if mapped is None:
+            return None
+        return f"res{stage[len('layer'):]}.{blk}.{mapped}.{param}"
+    name, param = rest.split(".", 1)
+    mapped = _RESNET_RENAMES.get(name)
+    if mapped is None:
+        return None
+    return f"{mapped}.{param}"
+
+
 def remap_key(ckpt_key: str) -> str | None:
     """Translate a gen1 checkpoint (e.g. thai.pth) state_dict key to
     this module's naming. Returns None for keys we don't carry."""
-    k = ckpt_key
-    if k.startswith("module."):
-        k = k[len("module."):]
-    if k.startswith("FeatureExtraction.ConvNet."):
-        rest = k[len("FeatureExtraction.ConvNet."):]
-        if rest.startswith("layer"):
-            stage, blk, sub = rest.split(".", 2)
-            inner, param = sub.rsplit(".", 1)
-            mapped = _BLOCK_RENAMES.get(inner)
-            if mapped is None:
-                return None
-            return f"res{stage[len('layer'):]}.{blk}.{mapped}.{param}"
-        name, param = rest.split(".", 1)
-        mapped = _RESNET_RENAMES.get(name)
-        if mapped is None:
-            return None
-        return f"{mapped}.{param}"
-    if k.startswith("SequenceModeling."):
-        rest = k[len("SequenceModeling."):]
-        i, sub = rest.split(".", 1)
-        sub = sub.replace("linear.", "proj.", 1) if sub.startswith("linear.") else sub
-        return f"seq.{i}.{sub}"
-    if k.startswith("Prediction."):
-        return "head." + k[len("Prediction."):]
-    return None
-
-
-def load_weights(model, path: str, quantize: bool = False):
-    import torch
-
-    from . import maybe_quantize
-
-    ckpt = torch.load(path, map_location="cpu")
-    state = {}
-    for ck, v in ckpt.items():
-        mk = remap_key(ck)
-        if mk is None:
-            raise KeyError(f"unexpected checkpoint key: {ck}")
-        state[mk] = v
-    model.load_state_dict(state, strict=True)
-    maybe_quantize(model, quantize)
-    model.eval()
-    return model
-
-
-class TorchGen1Recognizer:
-    """recognize_probs(crop) -> [T, C] softmax matrix with blank at
-    index 0 — same contract as TorchCrnnRecognizer, so the numpy CTC
-    decoders and masking in ocr/recognition.py apply unchanged."""
-
-    def __init__(self, lang: str, weights_path: str | None = None,
-                 quantize: bool = False):
-        from . import weights_dir
-
-        filename, charset = GEN1_MODELS[lang]
-        path = weights_path or os.path.join(weights_dir(), filename)
-        self.model = load_weights(build_model(len(charset) + 1), path,
-                                  quantize=quantize)
-        self.charset = charset
-
-    def recognize_probs(self, crop: np.ndarray) -> np.ndarray:
-        import torch
-
-        from .torch_crnn import normalize_pad
-
-        x = normalize_pad(crop)[None, None]  # [1, 1, H, W]
-        with torch.no_grad():
-            logits = self.model(torch.from_numpy(x))[0]  # [T, C]
-            return torch.softmax(logits, dim=1).numpy()
-
-    def recognize(self, crop: np.ndarray, decoder: str = "greedy",
-                  ignore: np.ndarray | None = None) -> tuple[str, float]:
-        from ..ctc import (
-            ctc_beam_search,
-            custom_mean,
-            decode_greedy,
-            greedy_collapse,
-        )
-        from ..recognition import _apply_ignore
-
-        probs = _apply_ignore(self.recognize_probs(crop), ignore)
-        if decoder == "beamsearch":
-            text, _ = ctc_beam_search(probs, self.charset)
-        else:
-            text, _ = decode_greedy(probs, self.charset)
-        _, confs = greedy_collapse(probs)
-        return text, custom_mean(confs) if confs.size else 0.0
+    return remap_recognizer_key(ckpt_key, _remap_features)

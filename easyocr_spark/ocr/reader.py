@@ -1,6 +1,10 @@
-"""Reader-style facade: detect / recognize / readtext.
+"""The Reader facade of both backends: detect / recognize / readtext.
 
-API mirror of the reference's Reader (reference easyocr/easyocr.py):
+API mirror of the reference's Reader (reference easyocr/easyocr.py).
+``Reader`` holds everything the backends share; a backend subclass
+supplies the detector's boxes, the free-quad crop and one recognition
+pass (``StandInReader`` here, backends/torch_reader.TorchReader for the
+real models):
 
 - ``detect(gray)`` -> (horizontal_list, free_list)   (:311-351)
 - ``recognize(gray, horizontal_list, free_list)`` -> [(box, text, conf)]
@@ -9,15 +13,16 @@ API mirror of the reference's Reader (reference easyocr/easyocr.py):
   switch, allowlist/blocklist masking, rotation TTA.
 - ``readtext(gray)`` = detect ∘ recognize             (:440-474)
 - ``detect_batched`` / ``recognize_batched`` / ``readtext_batched``
-  (:538-579): the same over a list of images — one detector canvas pass
-  (``detection.detect_batched``) and one recognizer pass
-  (``recognition.get_text``) over every crop of the batch. The
+  (:538-579): the same over a list of images — one detector pass
+  (the backend's ``boxes``) and one recognizer pass
+  (``recognition.get_text`` over the backend's ``recognize_pass``) over
+  every crop of the batch. The
   per-image methods are these with a batch of one.
 - ``text_projection`` — the projection our span pipeline uses: non-empty
   texts joined by single spaces in reading order, plus their min
   confidence; ``readtext_text`` is its text.
 
-The detect stage is the CRAFT-style score-map detector
+The stand-in's detect stage is the CRAFT-style score-map detector
 (``ocr/detection.py``); the reference's DBNet alternative
 (easyocr/easyocr.py:235-268) is not mirrored. Rotation TTA mirrors
 make_rotated_img_list + set_result_with_confidence
@@ -39,7 +44,7 @@ import numpy as np
 from . import detection
 from .grouping import group_text_box, min_size_filter
 from .paragraph import get_paragraph
-from .recognition import build_ignore_mask, get_text
+from .recognition import build_ignore_mask, get_text, recognize_crops
 
 MIN_SIZE = 10
 
@@ -151,34 +156,42 @@ def deshear_crop(gray: np.ndarray, quad: np.ndarray) -> np.ndarray:
     return out
 
 
-class StandInReader:
-    """Deterministic Reader; constructor args mirror the reference's
-    decision-tree outputs (language list -> model/charset routing,
-    reference easyocr/easyocr.py:106-167). lang_list routes between the
-    two stand-in script atlases (latin vs cjk — routing is load-bearing:
-    decoding cjk-rendered media with the latin model fails) and flips
-    arabic output to RTL."""
+# media-table lang tags (fixtures/corpus.LANGS) -> the reference's lang
+# codes; a code, or a tag with no code here, passes through
+LANG_CODES = {"latin": "en", "arabic": "ar"}
 
-    def __init__(
-        self,
-        lang_list: list[str] | None = None,
-        decoder: str = "greedy",
-        allowlist: str | None = None,
-        blocklist: str | None = None,
-    ):
-        self.lang_list = lang_list or ["latin"]
-        # Chinese models force the greedy decoder (reference
-        # easyocr/easyocr.py:371: model_lang chinese_* overrides the
-        # requested decoder) — beam variants are latin-model paths
-        if "chinese" in self.lang_list:
-            decoder = "greedy"
-        self.decoder = decoder
-        self.ignore = build_ignore_mask(allowlist, blocklist)
-        # language -> recognition model routing (the reference's
-        # decision tree maps lang_list to a gen1/gen2 model + charset,
-        # easyocr/easyocr.py:106-167 + config.py:53+; the stand-in has
-        # two template atlases standing in for two script models)
-        self.recog_model = "cjk" if "chinese" in self.lang_list else "latin"
+
+def lang_codes(lang_list: list[str]) -> list[str]:
+    return [LANG_CODES.get(lang, lang) for lang in lang_list]
+
+
+class Reader:
+    """The Reader facade of every backend (reference
+    easyocr/easyocr.py:311-579): grouping, the min-size filter, crops,
+    the two-pass contrast retry, rotation TTA, free-merge, paragraphs
+    and their one RTL rule (Arabic reads right to left). A backend
+    supplies only what differs:
+
+    - ``boxes(grays, optimal_num_chars)``: the detector's boxes per
+      image, for a batch of grays;
+    - ``crop_free(gray, quad)``: the crop of a free quad, by default the
+      reference's ``four_point_transform``;
+    - ``recognize_pass(crops)``: (text, conf) per crop, one recognition
+      pass over the list, which ``recognition.get_text`` runs once plus
+      once more for its contrast retries."""
+
+    def __init__(self, lang_list: list[str]):
+        self.lang_list = lang_list
+        self.rtl = "ar" in lang_codes(lang_list)
+
+    def boxes(self, grays: list[np.ndarray], optimal_num_chars: int | None) -> list:
+        raise NotImplementedError
+
+    def crop_free(self, gray: np.ndarray, quad: np.ndarray) -> np.ndarray:
+        return four_point_transform(gray, quad)
+
+    def recognize_pass(self, crops: list[np.ndarray]) -> list[tuple[str, float]]:
+        raise NotImplementedError
 
     def detect_batched(
         self,
@@ -186,10 +199,10 @@ class StandInReader:
         min_size: int = MIN_SIZE,
         optimal_num_chars: int | None = None,
     ) -> list[tuple[list[list[int]], list[list[list[float]]]]]:
-        """Per image (horizontal_list, free_list); the craft detector
-        runs once over the whole batch."""
+        """Per image (horizontal_list, free_list); the detector runs
+        once over the whole batch."""
         out = []
-        for boxes in detection.detect_batched(grays, optimal_num_chars=optimal_num_chars):
+        for boxes in self.boxes(grays, optimal_num_chars):
             # with a char-count target the detector's priority order is
             # the answer — grouping must not re-sort it (reference
             # easyocr/easyocr.py:342: sort_output = optimal_num_chars is None)
@@ -212,10 +225,9 @@ class StandInReader:
     ) -> list[tuple[str, float]]:
         """Two-pass recognition of every crop, then each listed rotation
         of every crop; a rotation wins where its confidence is higher."""
-        kwargs = {"decoder": self.decoder, "ignore": self.ignore, "model": self.recog_model}
-        best = get_text(crops, **kwargs)
+        best = get_text(crops, self.recognize_pass)
         for rot in rotation_info or []:
-            rotated = get_text([np.rot90(c, k=rot // 90) for c in crops], **kwargs)
+            rotated = get_text([np.rot90(c, k=rot // 90) for c in crops], self.recognize_pass)
             best = [r if r[1] > b[1] else b for b, r in zip(best, rotated)]
         return best
 
@@ -244,16 +256,12 @@ class StandInReader:
                 crops.append(crop)
                 boxes.append((i, [[x0, y0], [x1, y0], [x1, y1], [x0, y1]]))
             for quad in free_list:
-                q = np.asarray(quad)
-                if detection.vertical_edged(q):
-                    crops.append(deshear_crop(gray, q))
-                else:
-                    crops.append(four_point_transform(gray, q))
+                crops.append(self.crop_free(gray, np.asarray(quad)))
                 boxes.append((i, [list(p) for p in quad]))
         results: list[list] = [[] for _ in grays]
         for (i, box), (text, conf) in zip(boxes, self._decode_crops(crops, rotation_info)):
             results[i].append((box, text, conf))
-        mode = "rtl" if "arabic" in self.lang_list else "ltr"
+        mode = "rtl" if self.rtl else "ltr"
         for i, (_, free_list) in enumerate(detections):
             if free_merge:
                 results[i] = merge_to_free(results[i], len(free_list))
@@ -298,10 +306,55 @@ class StandInReader:
     ) -> list:
         return self.readtext_batched([gray], rotation_info, paragraph, free_merge)[0]
 
-    def readtext_text(self, gray: np.ndarray, rtl: bool = False) -> str:
+    def readtext_text(self, gray: np.ndarray, rtl: bool | None = None) -> str:
         """Reading-order span text: ``text_projection`` of the
-        free-merged readtext results."""
+        free-merged readtext results, right to left where ``rtl`` (by
+        default the reader's own RTL rule)."""
+        rtl = self.rtl if rtl is None else rtl
         return text_projection(self.readtext(gray, free_merge=True), rtl)[0]
+
+
+class StandInReader(Reader):
+    """Deterministic Reader; constructor args mirror the reference's
+    decision-tree outputs (language list -> model/charset routing,
+    reference easyocr/easyocr.py:106-167). lang_list routes between the
+    two stand-in script atlases (latin vs cjk — routing is load-bearing:
+    decoding cjk-rendered media with the latin model fails); arabic
+    reads RTL by the facade's rule."""
+
+    def __init__(
+        self,
+        lang_list: list[str] | None = None,
+        decoder: str = "greedy",
+        allowlist: str | None = None,
+        blocklist: str | None = None,
+    ):
+        super().__init__(lang_list or ["latin"])
+        # Chinese models force the greedy decoder (reference
+        # easyocr/easyocr.py:371: model_lang chinese_* overrides the
+        # requested decoder) — beam variants are latin-model paths
+        if "chinese" in self.lang_list:
+            decoder = "greedy"
+        self.decoder = decoder
+        self.ignore = build_ignore_mask(allowlist, blocklist)
+        # language -> recognition model routing (the reference's
+        # decision tree maps lang_list to a gen1/gen2 model + charset,
+        # easyocr/easyocr.py:106-167 + config.py:53+; the stand-in has
+        # two template atlases standing in for two script models)
+        self.recog_model = "cjk" if "chinese" in self.lang_list else "latin"
+
+    def boxes(self, grays: list[np.ndarray], optimal_num_chars: int | None) -> list:
+        return detection.detect_batched(grays, optimal_num_chars=optimal_num_chars)
+
+    def crop_free(self, gray: np.ndarray, quad: np.ndarray) -> np.ndarray:
+        """The exact unshear for vertical-edged quads, the warp for the
+        rest."""
+        if detection.vertical_edged(quad):
+            return deshear_crop(gray, quad)
+        return four_point_transform(gray, quad)
+
+    def recognize_pass(self, crops: list[np.ndarray]) -> list[tuple[str, float]]:
+        return recognize_crops(crops, self.decoder, self.ignore, self.recog_model)
 
 
 def text_projection(results: list, rtl: bool = False) -> tuple[str, float]:

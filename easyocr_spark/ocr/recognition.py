@@ -35,6 +35,7 @@ crops from group_text_box's width_ths merging).
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
 
 import numpy as np
 
@@ -169,7 +170,9 @@ def build_ignore_mask(
     return mask
 
 
-def _apply_ignore(probs: np.ndarray, ignore: np.ndarray | None) -> np.ndarray:
+def apply_ignore(probs: np.ndarray, ignore: np.ndarray | None) -> np.ndarray:
+    """[T, C] probabilities with the ignored columns zeroed and each row
+    renormalised (rows left all-zero stay zero)."""
     if ignore is None or probs.size == 0:
         return probs
     out = probs.copy()
@@ -264,7 +267,6 @@ def _glyph_windows(crops: list[np.ndarray]) -> tuple[np.ndarray, ...]:
 
 def recognize_crops(
     crops: list[np.ndarray],
-    adjust: bool = False,
     decoder: str = "greedy",
     ignore: np.ndarray | None = None,
     model: str = "latin",
@@ -276,13 +278,11 @@ def recognize_crops(
     collapses across a chunk boundary, and a chunk's first frame is
     kept exactly when it is not blank. Beam decoders still run per
     chunk; the confidence always comes from the greedy path."""
-    if adjust:
-        crops = [adjust_contrast_grey(c, ADJUST_CONTRAST) for c in crops]
     out = [("", 0.0)] * len(crops)
     windows, owner, word = _glyph_windows(crops)
     if not len(owner):
         return out
-    probs = _apply_ignore(_frames(windows.astype(np.float32), model), ignore)
+    probs = apply_ignore(_frames(windows.astype(np.float32), model), ignore)
     at, labels, confs = greedy_path(probs)
     chars = [CHARSET[k - 1] for k in labels.tolist()]
     # frame bounds of every word chunk (3 frames per segment) and the
@@ -313,19 +313,26 @@ def recognize_crops(
 
 def get_text(
     crops: list[np.ndarray],
-    decoder: str = "greedy",
+    one_pass: Callable[[list[np.ndarray]], list[tuple[str, float]]],
     contrast_ths: float = CONTRAST_THS,
-    ignore: np.ndarray | None = None,
-    model: str = "latin",
 ) -> list[tuple[str, float]]:
     """get_text's two-pass orchestration over a batch of crops
-    (reference easyocr/recognition.py:186-233): retry every
-    low-confidence crop with contrast adjustment, all retries in one
-    second ``recognize_crops`` pass, and keep the better result."""
-    out = recognize_crops(crops, False, decoder, ignore, model)
-    retry = [i for i, (_, conf) in enumerate(out) if conf < contrast_ths]
+    (reference easyocr/recognition.py:186-233), for any backend's
+    ``one_pass`` (crops -> (text, conf) each): retry every
+    low-confidence crop contrast-adjusted, all retries in one second
+    ``one_pass`` call, and keep the better result. A crop already at
+    the target contrast comes back unchanged from
+    ``adjust_contrast_grey``; its retry could not win, so it is not
+    run."""
+    out = one_pass(crops)
+    adjusted = {
+        i: adjust_contrast_grey(crops[i], ADJUST_CONTRAST)
+        for i, (_, conf) in enumerate(out)
+        if conf < contrast_ths
+    }
+    retry = [i for i, adj in adjusted.items() if adj is not crops[i]]
     if retry:
-        again = recognize_crops([crops[i] for i in retry], True, decoder, ignore, model)
+        again = one_pass([adjusted[i] for i in retry])
         for i, (text, conf) in zip(retry, again):
             if conf > out[i][1]:
                 out[i] = text, conf

@@ -6,8 +6,8 @@ UDFs ONLY, zero per-row Python at the Spark boundary. One Arrow batch of
 decode -> detect -> group -> crop -> recognize -> order -> concat
 pipeline runs a batch at a time (the reference's readtext_batched unit
 of work, easyocr/easyocr.py:538-579): the batch's new images of one
-lang go through one detector canvas pass and one recognizer pass
-(``StandInReader.readtext_batched``); one Arrow batch of typed rows
+lang go through one detector pass and one recognizer pass
+(``reader.Reader.readtext_batched``); one Arrow batch of typed rows
 comes back.
 
 Every kernel here is built by ``batch_kernel``, the one harness that
@@ -85,7 +85,9 @@ def get_reader(
     per worker process: the torch path loads the real CRAFT/CRNN
     weights (ocr/backends/) when torch + .pth files are present, and
     falls back to the deterministic stand-in loudly otherwise — the
-    sandbox default and the path the oracles verify."""
+    default and the path the oracles verify. Both readers are the one
+    ``reader.Reader`` facade; ``lang`` is the media table's tag, which
+    the torch reader maps to a reference lang code."""
     key = (decoder, allowlist, lang)
     if key not in _READERS:
         from .backends import make_torch_reader, resolve_backend
@@ -170,8 +172,8 @@ def make_ocr_batches(decoder: str, allowlist: str | None = None) -> Kernel:
     and optional allowlist-masked recognition (reference
     easyocr/easyocr.py:363-368: allowlist -> ignore set pushed into the
     softmax columns). The lang column routes the recognition model and
-    RTL post-processing (Arabic word order within lines — the
-    reference's bidi reordering, easyocr/easyocr.py:414-418). Text and
+    RTL post-processing (``reader.rtl``: Arabic word order within lines
+    — the reference's bidi reordering, easyocr/easyocr.py:414-418). Text and
     conf are ``reader.text_projection`` of the free-merged results, the
     projection ``readtext_text`` returns; each lang's new images of a
     batch go through one ``readtext_batched`` call."""
@@ -179,7 +181,7 @@ def make_ocr_batches(decoder: str, allowlist: str | None = None) -> Kernel:
     def ocr(images: list[np.ndarray], lang: str) -> list[list[tuple]]:
         reader = get_reader(decoder, allowlist, lang)
         return [
-            [(*text_projection(results, rtl=lang == "arabic"), len(results))]
+            [(*text_projection(results, reader.rtl), len(results))]
             for results in reader.readtext_batched(images, free_merge=True)
         ]
 

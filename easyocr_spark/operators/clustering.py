@@ -387,7 +387,7 @@ def semantic_dedup_pairs(
 
     Output: (cluster, id_a, id_b, cos_micro, drop_id), id_a < id_b,
     cos_micro >= micro."""
-    from easyocr_spark.operators.similarity import _norm2, cos_micro_pre
+    from easyocr_spark.operators.similarity import cos_micro_pre, norm2
 
     assigned = kmeans_clusters(embeddings, k, iters)
     sides = embeddings.join(assigned, "vec_id").select(
@@ -395,7 +395,7 @@ def semantic_dedup_pairs(
         "cluster",
         "dist2",
         "embedding",
-        _norm2(F.col("embedding")).alias("n2"),
+        norm2(F.col("embedding")).alias("n2"),
     )
     a = sides.select(
         F.col("cluster"),

@@ -101,7 +101,7 @@ def duckdb_exact_sql(table_sql: str) -> str:
 def shingle_sets(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     """(doc_id, shingle) distinct word n-grams of lower(text).
 
-    Round-6 shape (the _pos_grams kernel precedent, guide §4.2):
+    Round-6 shape (the pos_grams kernel precedent, guide §4.2):
     tokenization stays JVM-side (split + lower — identical token
     boundaries), and ONE vectorized Arrow kernel builds each document's
     DISTINCT shingle set (``" ".join`` == the former
@@ -544,7 +544,7 @@ def duckdb_components_sql(table_sql: str) -> str:
 
 
 # ---------------------------------------------------------------- SimHash
-def _poly_hash(chars_col, base: int):
+def poly_hash(chars_col, base: int):
     return F.aggregate(
         chars_col, F.lit(0).cast("long"), lambda acc, c: (acc * base + c) % HASH_MOD
     )
@@ -890,13 +890,13 @@ def duckdb_simhash128_pairs_sql(table_sql: str, max_hamming: int = HAM_MAX) -> s
 SUBSTR_N = 10  # token-window width for exact substring dedup
 
 
-def _pos_grams(docs: DataFrame, n: int) -> DataFrame:
+def pos_grams(docs: DataFrame, n: int) -> DataFrame:
     """(doc_id, pos, g1, g2): every n-token window's position and its
     62-bit integer gram key — two independent 31-bit double polynomial
     folds (token chars once with bases 131/137, then the n token-hash
     longs with bases 139/149). Shared by positional substring dedup and
     benchmark decontamination; the DuckDB twins reproduce the folds
-    bit-for-bit (_duck_tok_fold/_duck_win_fold).
+    bit-for-bit (duck_tok_fold/duck_win_fold).
 
     Round-6 shape: tokenization stays in the JVM (split + lower, so
     token boundaries are bit-identical to the former all-Catalyst
@@ -998,17 +998,17 @@ def duplicate_spans(docs: DataFrame, n: int = SUBSTR_N) -> DataFrame:
     materialized eagerly and the gram cache released before return."""
     from pyspark import StorageLevel
 
-    pos_grams = _pos_grams(docs, n).persist(StorageLevel.MEMORY_AND_DISK)
+    grams = pos_grams(docs, n).persist(StorageLevel.MEMORY_AND_DISK)
     shared = (
-        pos_grams.groupBy("g1", "g2")
+        grams.groupBy("g1", "g2")
         .agg(F.countDistinct("doc_id").alias("n_docs"))
         .filter(F.col("n_docs") >= 2)
         .select("g1", "g2")
     )
-    hits = pos_grams.join(shared, ["g1", "g2"]).select("doc_id", "pos")
+    hits = grams.join(shared, ["g1", "g2"]).select("doc_id", "pos")
     spans = _windows_to_spans(hits, n).persist(StorageLevel.MEMORY_AND_DISK)
     spans.count()
-    pos_grams.unpersist()
+    grams.unpersist()
     return spans
 
 
@@ -1038,9 +1038,9 @@ def _windows_to_spans(hits: DataFrame, n: int) -> DataFrame:
     ).select("doc_id", "span_start", "span_end_excl", "n_windows")
 
 
-def _duck_tok_fold(base: int) -> str:
+def duck_tok_fold(base: int) -> str:
     """Per-token 31-bit polynomial char fold over a `toks` array —
-    DuckDB twin of _poly_hash over the char-code arrays."""
+    DuckDB twin of poly_hash over the char-code arrays."""
     return (
         "list_transform(toks, t -> list_reduce(list_prepend(0::BIGINT, "
         "list_transform(range(1, length(t)+1), "
@@ -1049,7 +1049,7 @@ def _duck_tok_fold(base: int) -> str:
     )
 
 
-def _duck_win_fold(hs: str, base: int, n: int) -> str:
+def duck_win_fold(hs: str, base: int, n: int) -> str:
     """n-token window fold over a token-hash array, at offset `i`."""
     return (
         "list_reduce(list_prepend(0::BIGINT, "
@@ -1059,8 +1059,8 @@ def _duck_win_fold(hs: str, base: int, n: int) -> str:
 
 
 def duckdb_duplicate_spans_sql(table_sql: str, n: int = SUBSTR_N) -> str:
-    tok_fold = lambda base: _duck_tok_fold(base)  # noqa: E731
-    win_fold = lambda hs, base: _duck_win_fold(hs, base, n)  # noqa: E731
+    tok_fold = lambda base: duck_tok_fold(base)  # noqa: E731
+    win_fold = lambda hs, base: duck_win_fold(hs, base, n)  # noqa: E731
     return f"""
     WITH toks AS (
       SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS toks
@@ -1124,7 +1124,7 @@ def decontaminate(
     every training doc with at least one gram, zero-hit docs included
     so the contamination rate is computable downstream.
 
-    Plan: ONE gram materialization (the shared _pos_grams integer
+    Plan: ONE gram materialization (the shared pos_grams integer
     double-poly keys) deduplicated to (doc, gram) and persisted (owned
     cache, released after the result materializes); the eval gram set
     and the train grams both derive from it; contamination is a
@@ -1142,7 +1142,7 @@ def decontaminate(
     from pyspark import StorageLevel
 
     grams = (
-        _pos_grams(docs, n)
+        pos_grams(docs, n)
         .select("doc_id", "g1", "g2")
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1185,14 +1185,14 @@ def duckdb_decontaminate_sql(
     ),
     hs AS (
       SELECT doc_id,
-             {_duck_tok_fold(HASH_BASE_1)} AS h1,
-             {_duck_tok_fold(HASH_BASE_2)} AS h2
+             {duck_tok_fold(HASH_BASE_1)} AS h1,
+             {duck_tok_fold(HASH_BASE_2)} AS h2
       FROM toks
     ),
     grams AS (
       SELECT DISTINCT doc_id,
-             {_duck_win_fold('h1', HASH_BASE_3, n)} AS g1,
-             {_duck_win_fold('h2', HASH_BASE_4, n)} AS g2
+             {duck_win_fold('h1', HASH_BASE_3, n)} AS g1,
+             {duck_win_fold('h2', HASH_BASE_4, n)} AS g2
       FROM hs, UNNEST(range(0, greatest(len(h1) - {n} + 1, 0))) AS t(i)
     ),
     ev AS (
@@ -1228,7 +1228,7 @@ def decontaminate_spans(
     (doc_id, span_start, span_end_excl, n_windows), training docs with
     at least one leaked window only.
 
-    Plan: ONE positional gram materialization (the shared _pos_grams
+    Plan: ONE positional gram materialization (the shared pos_grams
     integer double-poly keys — positions kept, unlike decontaminate's
     distinct (doc, gram) table, because positions ARE the output),
     persisted once and consumed by both sides (owned cache, released
@@ -1242,7 +1242,7 @@ def decontaminate_spans(
     CALLER owns unpersisting it."""
     from pyspark import StorageLevel
 
-    grams = _pos_grams(docs, n).persist(StorageLevel.MEMORY_AND_DISK)
+    grams = pos_grams(docs, n).persist(StorageLevel.MEMORY_AND_DISK)
     is_eval = (F.col("doc_id") % eval_mod) == eval_res
     ev = grams.filter(is_eval).select("g1", "g2").distinct()
     hits = (
@@ -1304,14 +1304,14 @@ def duckdb_decontaminate_spans_sql(
     ),
     hs AS (
       SELECT doc_id,
-             {_duck_tok_fold(HASH_BASE_1)} AS h1,
-             {_duck_tok_fold(HASH_BASE_2)} AS h2
+             {duck_tok_fold(HASH_BASE_1)} AS h1,
+             {duck_tok_fold(HASH_BASE_2)} AS h2
       FROM toks
     ),
     grams AS (
       SELECT doc_id, CAST(i AS BIGINT) AS pos,
-             {_duck_win_fold('h1', HASH_BASE_3, n)} AS g1,
-             {_duck_win_fold('h2', HASH_BASE_4, n)} AS g2
+             {duck_win_fold('h1', HASH_BASE_3, n)} AS g1,
+             {duck_win_fold('h2', HASH_BASE_4, n)} AS g2
       FROM hs, UNNEST(range(0, greatest(len(h1) - {n} + 1, 0))) AS t(i)
     ),
     ev AS (
@@ -2073,7 +2073,7 @@ def cdc_chunks(docs: DataFrame, w: int = CDC_W, divisor: int = CDC_DIVISOR) -> D
     variant here never needs it. Expected chunk length = divisor chars.
 
     Narrow zero-shuffle plan, round-6 shape: ONE vectorized Arrow
-    kernel per partition (the _pos_grams/winnowing pattern, guide
+    kernel per partition (the pos_grams/winnowing pattern, guide
     §4.2) — the former all-Catalyst formulation evaluated the w-wide
     slice fold as interpreted HOF lambdas, O(w·n) lambda steps plus an
     array allocation per position, and measured 5-9s single-task at
@@ -2211,7 +2211,7 @@ def ngram_novelty(docs: DataFrame, n: int = NOVELTY_N) -> DataFrame:
     family should have caught; high novelty = genuinely fresh content
     (or noise — pair with quality_score).
 
-    Plan: the shared _pos_grams 62-bit integer keys deduplicated to
+    Plan: the shared pos_grams 62-bit integer keys deduplicated to
     (doc, gram) and persisted once (owned cache, decontaminate
     contract); gram df in one map-side-combining shuffle; novel grams
     (df = 1) flow back over a gram-keyed LEFT-SEMI join — never a doc
@@ -2225,7 +2225,7 @@ def ngram_novelty(docs: DataFrame, n: int = NOVELTY_N) -> DataFrame:
     from pyspark import StorageLevel
 
     grams = (
-        _pos_grams(docs, n)
+        pos_grams(docs, n)
         .select("doc_id", "g1", "g2")
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -2272,14 +2272,14 @@ def duckdb_ngram_novelty_sql(table_sql: str, n: int = NOVELTY_N) -> str:
     ),
     hs AS (
       SELECT doc_id,
-             {_duck_tok_fold(HASH_BASE_1)} AS h1,
-             {_duck_tok_fold(HASH_BASE_2)} AS h2
+             {duck_tok_fold(HASH_BASE_1)} AS h1,
+             {duck_tok_fold(HASH_BASE_2)} AS h2
       FROM toks
     ),
     grams AS (
       SELECT DISTINCT doc_id,
-             {_duck_win_fold('h1', HASH_BASE_3, n)} AS g1,
-             {_duck_win_fold('h2', HASH_BASE_4, n)} AS g2
+             {duck_win_fold('h1', HASH_BASE_3, n)} AS g1,
+             {duck_win_fold('h2', HASH_BASE_4, n)} AS g2
       FROM hs, UNNEST(range(0, greatest(len(h1) - {n} + 1, 0))) AS t(i)
     ),
     novel_keys AS (

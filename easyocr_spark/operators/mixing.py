@@ -30,7 +30,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import HASH_BASE_1, HASH_BASE_3, HASH_MOD, _duck_tok_fold
+from .dedup import HASH_BASE_1, HASH_BASE_3, HASH_MOD, duck_tok_fold
 
 PPM = 1_000_000
 
@@ -135,7 +135,7 @@ def dsir_importance(
         F.split(F.lower("text"), r"\s+").alias("toks"),
     )
 
-    # Round-6 shape (the _pos_grams precedent, guide §4.2): JVM keeps
+    # Round-6 shape (the pos_grams precedent, guide §4.2): JVM keeps
     # tokenization (identical token boundaries), ONE vectorized Arrow
     # kernel replaces the interpreted per-char/per-token HOF chain —
     # same exact int64 fold arithmetic (token hash (acc*131+c) % MOD in
@@ -254,7 +254,7 @@ def duckdb_dsir_sql(
       FROM ({table_sql})
     ),
     hs AS (
-      SELECT doc_id, is_target, {_duck_tok_fold(HASH_BASE_1)} AS h1
+      SELECT doc_id, is_target, {duck_tok_fold(HASH_BASE_1)} AS h1
       FROM toks
     ),
     feats AS (

@@ -108,12 +108,12 @@ def shard_leakage(docs: DataFrame, n: int | None = None) -> DataFrame:
     split column. Linear in total gram count at any corpus size."""
     from pyspark import StorageLevel
 
-    from easyocr_spark.operators.dedup import SUBSTR_N, _pos_grams
+    from easyocr_spark.operators.dedup import SUBSTR_N, pos_grams
 
     n = SUBSTR_N if n is None else n
     splits = train_split_shards(docs).select("doc_id", "split")
     g = (
-        _pos_grams(docs, n)
+        pos_grams(docs, n)
         .select("doc_id", "g1", "g2")
         .distinct()
         .join(splits, "doc_id")
@@ -169,8 +169,8 @@ def duckdb_shard_leakage_sql(table_sql: str, n: int | None = None) -> str:
         HASH_BASE_3,
         HASH_BASE_4,
         SUBSTR_N,
-        _duck_tok_fold,
-        _duck_win_fold,
+        duck_tok_fold,
+        duck_win_fold,
     )
 
     n = SUBSTR_N if n is None else n
@@ -182,14 +182,14 @@ def duckdb_shard_leakage_sql(table_sql: str, n: int | None = None) -> str:
     ),
     hs AS (
       SELECT doc_id,
-             {_duck_tok_fold(HASH_BASE_1)} AS h1,
-             {_duck_tok_fold(HASH_BASE_2)} AS h2
+             {duck_tok_fold(HASH_BASE_1)} AS h1,
+             {duck_tok_fold(HASH_BASE_2)} AS h2
       FROM toks
     ),
     grams AS (
       SELECT DISTINCT doc_id,
-             {_duck_win_fold('h1', HASH_BASE_3, n)} AS g1,
-             {_duck_win_fold('h2', HASH_BASE_4, n)} AS g2
+             {duck_win_fold('h1', HASH_BASE_3, n)} AS g1,
+             {duck_win_fold('h2', HASH_BASE_4, n)} AS g2
       FROM hs, UNNEST(range(0, greatest(len(h1) - {n} + 1, 0))) AS t(i)
     ),
     splits AS (

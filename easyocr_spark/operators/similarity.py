@@ -42,7 +42,7 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-def _norm2(a: Column) -> Column:
+def norm2(a: Column) -> Column:
     return F.aggregate(
         F.transform(a, lambda x: x.cast("double") * x.cast("double")),
         F.lit(0.0),
@@ -66,12 +66,12 @@ def _scored_pairs(embeddings: DataFrame) -> DataFrame:
     queries = embeddings.filter(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
-        _norm2(F.col("embedding")).alias("q_n2"),
+        norm2(F.col("embedding")).alias("q_n2"),
     )
     corpus = embeddings.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("n_emb"),
-        _norm2(F.col("embedding")).alias("n_n2"),
+        norm2(F.col("embedding")).alias("n_n2"),
     )
     return (
         F.broadcast(queries)
@@ -160,7 +160,7 @@ def _with_bucket_n2(embeddings: DataFrame) -> DataFrame:
     O(N_PLANES·DIM) lambda steps per row. The kernel accumulates
     SEQUENTIALLY OVER DIMS and vectorized across rows, so every
     per-row accumulator performs the identical IEEE double adds in the
-    identical order as a left fold over the dims (``_norm2`` on the
+    identical order as a left fold over the dims (``norm2`` on the
     JVM side, ``duck_plane_dot`` in the oracle) — bucket and n2 are
     bit-identical to those folds. The weight formula keeps the fixed
     DIM=64 indexing of the oracle (w[j,d] = ((j·64 + d)·PLANE_MULT) %
@@ -366,7 +366,7 @@ def ivf_topk(
     assigned = ranked.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("n_emb"),
-        _norm2(F.col("embedding")).alias("n_n2"),
+        norm2(F.col("embedding")).alias("n_n2"),
         "cent_id",
     )
     probes = (
@@ -374,7 +374,7 @@ def ivf_topk(
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
-            _norm2(F.col("embedding")).alias("q_n2"),
+            norm2(F.col("embedding")).alias("q_n2"),
             F.explode("probe_cents").alias("cent_id"),
         )
     )
@@ -734,7 +734,7 @@ def pq_topk(
     corpus = coded.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("n_emb"),
-        _norm2(F.col("embedding")).alias("n_n2"),
+        norm2(F.col("embedding")).alias("n_n2"),
         "codes",
     )
     # driver-built ADC lookup tables for the bounded probe set: flat
@@ -765,7 +765,7 @@ def pq_topk(
         [(vid, emb[0], lut) for vid, emb, lut in lut_rows],
         schema="query_id long, q_emb array<float>, lut array<double>",
     ).select(
-        "query_id", "q_emb", _norm2(F.col("q_emb")).alias("q_n2"), "lut"
+        "query_id", "q_emb", norm2(F.col("q_emb")).alias("q_n2"), "lut"
     )
     adc = F.aggregate(
         F.transform(
@@ -965,13 +965,13 @@ def hard_negatives(embeddings: DataFrame, k: int = HN_K) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("q_label"),
         F.col("embedding").alias("q_emb"),
-        _norm2(F.col("embedding")).alias("q_n2"),
+        norm2(F.col("embedding")).alias("q_n2"),
     )
     corpus = embeddings.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("label").alias("n_label"),
         F.col("embedding").alias("n_emb"),
-        _norm2(F.col("embedding")).alias("n_n2"),
+        norm2(F.col("embedding")).alias("n_n2"),
     )
     scored = (
         F.broadcast(anchors)

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import HASH_MOD, _poly_hash
+from .dedup import HASH_MOD, poly_hash
 from .text_analysis import tokens_col
 
 # ------------------------------------------------------------ Count-Min
@@ -104,7 +104,7 @@ def countmin_heavy_hitters(
                 *[
                     F.struct(
                         F.lit(j).alias("row_j"),
-                        (_poly_hash(F.col("cs"), CMS_BASES[j]) % w).alias(
+                        (poly_hash(F.col("cs"), CMS_BASES[j]) % w).alias(
                             "col"
                         ),
                     )

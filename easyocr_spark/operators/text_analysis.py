@@ -750,7 +750,7 @@ def lm_cross_entropy(docs: DataFrame) -> DataFrame:
     with at least one bigram."""
     import math
 
-    # Round-6 shape (the _pos_grams kernel precedent, guide §4.2 +
+    # Round-6 shape (the pos_grams kernel precedent, guide §4.2 +
     # §2.3): the (doc, bigram, cnt) tf table is computed INSIDE one
     # vectorized Arrow kernel — lowercasing stays JVM-side (identical
     # case folding), the kernel reads code points (== ascii() on

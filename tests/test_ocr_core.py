@@ -42,6 +42,8 @@ def test_rtl_reverses_words_within_lines():
     # per-line reversal, not global: multi-word lines change order
     if any(len(line) > 1 for line in spec["lines"]):
         assert ltr != rtl
+    # an arabic-routed reader applies its RTL rule, the OCR kernel's, by default
+    assert StandInReader(lang_list=["arabic"]).readtext_text(img) == rtl
 
 
 def test_tiny_image_filtered_by_min_size():
@@ -56,10 +58,24 @@ def test_tiny_image_filtered_by_min_size():
 
 def test_low_contrast_takes_second_pass():
     img = render.render_text([["HELLO"]], scale=2, low_contrast=True)
-    text1, conf1 = recognize_crops([img], adjust=False)[0]
+    text1, conf1 = recognize_crops([img])[0]
     assert conf1 < 0.1  # pass 1 fails on low contrast
-    text2, conf2 = get_text([img])[0]
+    text2, conf2 = get_text([img], recognize_crops)[0]
     assert text2 == "HELLO" and conf2 > 0.5
+
+
+def test_retry_skips_crops_the_contrast_adjustment_leaves_unchanged():
+    low = render.render_text([["HELLO"]], scale=2, low_contrast=True)
+    sharp = render.render_text([["HELLO"]], scale=2)
+    passes = []
+
+    def one_pass(crops):  # every crop fails, so every crop is retry-eligible
+        passes.append(crops)
+        return [("", 0.0)] * len(crops)
+
+    get_text([sharp, low], one_pass)
+    assert len(passes) == 2 and len(passes[1]) == 1
+    assert passes[1][0].shape == low.shape and not np.array_equal(passes[1][0], low)
 
 
 @pytest.mark.parametrize("model", ["latin", "cjk"])

@@ -1,12 +1,14 @@
-"""Guard: every top-level def or class under ``easyocr_spark/`` is reached
-from code outside ``tests/``.
+"""Guards: every top-level def or class under ``easyocr_spark/`` is reached
+from code outside ``tests/``, and no package module imports another's
+private (underscore) names.
 
 Static and driver-only: each module is parsed with ``ast``, and a name
 counts as reached when some non-test ``.py`` file of the repo uses it as
 an identifier (a name, an attribute or an import) outside the name's own
 definition. A def that only tests call is a surface no query, bench or
 CLI path reaches: wire it, delete it, or list it in ``ALLOWED`` with the
-reason it stays.
+reason it stays. A private name another module needs is shared: make it
+public where it is defined.
 """
 
 from __future__ import annotations
@@ -105,6 +107,31 @@ def unreached() -> list[str]:
         for module, name, self_use in defs
         if used[name] == self_use
     ]
+
+
+def private_imports() -> list[str]:
+    """``module:line: from X import _name`` for each import statement,
+    at any depth of a package module, that takes an underscore name from
+    another package module. Only the imported name counts: an alias such
+    as ``import re as _re`` is the importer's own."""
+    out = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        module = path.relative_to(PACKAGE).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.ImportFrom):
+                continue
+            source = node.module or ""
+            if not (node.level or source == PACKAGE.name or source.startswith(PACKAGE.name + ".")):
+                continue
+            private = [a.name for a in node.names if a.name.startswith("_")]
+            if private:
+                out.append(f"{module}:{node.lineno}: from {'.' * node.level}{source} import {', '.join(private)}")
+    return out
+
+
+def test_no_private_imports_across_package_modules():
+    found = private_imports()
+    assert not found, "private names imported from another package module:\n" + "\n".join(found)
 
 
 def test_every_package_def_is_reached():

@@ -359,33 +359,43 @@ def test_numpy_forward_executes_graph_definitions():
         )
 
 
+def _fake_ckpt(manifest, rng, dtype=np.float64):
+    """A synthetic checkpoint of ``manifest``'s keys and shapes: random
+    positive values (they keep BN running_var valid), int64 zeros for
+    the num_batches_tracked buffers."""
+    return {
+        k: (
+            np.zeros(shape, dtype=np.int64)
+            if k.endswith("num_batches_tracked")
+            else rng.uniform(0.01, 0.1, shape).astype(dtype)
+        )
+        for k, shape in manifest.items()
+    }
+
+
+def _load_recognizer(family, path, charset):
+    from easyocr_spark.ocr.backends import load_weights
+
+    net = load_weights(family.build_model(len(charset) + 1), path, family.remap_key)
+    return torch_crnn.TorchRecognizer(net, charset)
+
+
 def test_synthetic_checkpoints_load_and_run(tmp_path):
     """The load path, executed: checkpoints synthesized FROM the
     recorded manifests (reference key names + shapes, random positive
     values) round-trip through the real load_weights — torch.load,
-    remap_key, strict load_state_dict — and the loaded detector/
-    recognizer classes run their actual score_maps/detect/recognize
-    code. This upgrades the torch backends from 'manifest-verified,
-    never executed' to 'loaded and executed with synthetic weights'
+    remap_key, strict load_state_dict — and the loaded detector and
+    recognizers run their actual score_maps/detect/recognize code.
+    This upgrades the torch backends from 'manifest-verified, never
+    executed' to 'loaded and executed with synthetic weights'
     (real-weight numerics remain env-blocked without torch)."""
-    from easyocr_spark.ocr.backends import manifests, np_torch, torch_resnet
+    from easyocr_spark.ocr.backends import load_weights, manifests, np_torch, torch_resnet
 
     rng = np.random.default_rng(11)
 
-    def fake_ckpt(manifest):
-        return {
-            k: (
-                np.zeros(shape, dtype=np.int64)
-                if k.endswith("num_batches_tracked")
-                # positive values keep BN running_var valid
-                else rng.uniform(0.01, 0.1, shape)
-            )
-            for k, shape in manifest.items()
-        }
-
     with np_torch.installed():
         craft_p = str(tmp_path / "craft_mlt_25k.pth")
-        np_torch.save(fake_ckpt(manifests.craft_checkpoint_manifest()), craft_p)
+        np_torch.save(_fake_ckpt(manifests.craft_checkpoint_manifest(), rng), craft_p)
         det = torch_craft.TorchCraftDetector(craft_p, canvas_size=64)
         gray = np.full((40, 60), 255, dtype=np.uint8)
         gray[10:20, 10:40] = 0
@@ -396,57 +406,51 @@ def test_synthetic_checkpoints_load_and_run(tmp_path):
 
         crnn_p = str(tmp_path / "english_g2.pth")
         np_torch.save(
-            fake_ckpt(manifests.english_g2_checkpoint_manifest()), crnn_p
+            _fake_ckpt(manifests.english_g2_checkpoint_manifest(), rng), crnn_p
         )
-        rec = torch_crnn.TorchCrnnRecognizer(crnn_p)
-        text, conf = rec.recognize(np.full((31, 80), 200, dtype=np.uint8))
+        rec = _load_recognizer(torch_crnn, crnn_p, torch_crnn.EN_G2_CHARSET)
+        [(text, conf)] = rec.recognize([np.full((31, 80), 200, dtype=np.uint8)])
         assert isinstance(text, str) and 0.0 <= conf <= 1.0
 
-        n = len(torch_resnet.GEN1_MODELS["thai"][1]) + 1
+        charset = torch_resnet.GEN1_MODELS["thai"][1]
         g1_p = str(tmp_path / "thai.pth")
-        np_torch.save(fake_ckpt(manifests.gen1_checkpoint_manifest(n)), g1_p)
-        grec = torch_resnet.TorchGen1Recognizer("thai", g1_p)
-        text2, conf2 = grec.recognize(np.full((31, 60), 200, dtype=np.uint8))
+        np_torch.save(
+            _fake_ckpt(manifests.gen1_checkpoint_manifest(len(charset) + 1), rng), g1_p
+        )
+        grec = _load_recognizer(torch_resnet, g1_p, charset)
+        [(text2, conf2)] = grec.recognize([np.full((31, 60), 200, dtype=np.uint8)])
         assert isinstance(text2, str) and 0.0 <= conf2 <= 1.0
 
         # a corrupted checkpoint (extra key) must fail loudly (CRNN —
         # the smallest graph — keeps this case cheap)
-        bad = fake_ckpt(manifests.english_g2_checkpoint_manifest())
+        bad = _fake_ckpt(manifests.english_g2_checkpoint_manifest(), rng)
         bad["module.rogue.weight"] = np.zeros((1,))
         bad_p = str(tmp_path / "bad.pth")
         np_torch.save(bad, bad_p)
         with pytest.raises(KeyError):
-            torch_crnn.load_weights(torch_crnn.build_model(), bad_p)
+            load_weights(torch_crnn.build_model(), bad_p, torch_crnn.remap_key)
 
 
 def test_torch_reader_end_to_end_under_shim(tmp_path):
-    """The full TorchReader COMPOSITION path executed with synthetic
-    weights: detect (CRAFT forward -> get_det_boxes -> group_text_box
-    -> min_size filter) -> crop -> recognize (CRNN forward -> contrast
-    retry gate -> CTC decode) -> allowlist masking -> paragraph mode —
-    plus the quantize hook (a no-op under the shim, but the
-    maybe_quantize code path runs). Random weights produce arbitrary
-    text, so the assertions are structural, not semantic."""
+    """The full TorchReader path executed with synthetic weights, through
+    the shared reader facade: detect (CRAFT forward -> get_det_boxes ->
+    group_text_box -> min_size filter) -> crop -> recognize (CRNN
+    forward -> contrast retry -> CTC decode) -> allowlist masking ->
+    free-merge and paragraph modes — plus the quantize hook (a no-op
+    under the shim, but the maybe_quantize code path runs). Random
+    weights produce arbitrary text, so the per-result assertions are
+    structural; the batch entry points must equal the per-image ones,
+    with one recognizer pass per batch plus one for the retries."""
     from easyocr_spark.ocr.backends import manifests, np_torch
 
     rng = np.random.default_rng(13)
 
-    def fake_ckpt(manifest):
-        return {
-            k: (
-                np.zeros(shape, dtype=np.int64)
-                if k.endswith("num_batches_tracked")
-                else rng.uniform(0.01, 0.1, shape)
-            )
-            for k, shape in manifest.items()
-        }
-
     with np_torch.installed():
         craft_p = str(tmp_path / "craft_mlt_25k.pth")
         crnn_p = str(tmp_path / "english_g2.pth")
-        np_torch.save(fake_ckpt(manifests.craft_checkpoint_manifest()), craft_p)
+        np_torch.save(_fake_ckpt(manifests.craft_checkpoint_manifest(), rng), craft_p)
         np_torch.save(
-            fake_ckpt(manifests.english_g2_checkpoint_manifest()), crnn_p
+            _fake_ckpt(manifests.english_g2_checkpoint_manifest(), rng), crnn_p
         )
         from easyocr_spark.ocr.backends.torch_reader import TorchReader
 
@@ -457,10 +461,14 @@ def test_torch_reader_end_to_end_under_shim(tmp_path):
             crnn_weights=crnn_p,
             quantize=True,  # exercises maybe_quantize (no-op here)
         )
-        # small low-res "page" with two dark blobs on white
-        gray = np.full((48, 96), 255, dtype=np.uint8)
-        gray[8:20, 8:40] = 0
-        gray[28:40, 50:88] = 0
+        # small low-res "pages" with dark blobs on white
+        grays = []
+        for k in range(3):
+            gray = np.full((48, 96), 255, dtype=np.uint8)
+            gray[8:20, 8 + 4 * k : 40] = 0
+            gray[28:40, 50 : 88 - 6 * k] = 96 + 40 * k
+            grays.append(gray)
+        gray = grays[0]
         results = reader.readtext(gray)
         assert isinstance(results, list)
         for box, text, conf in results:
@@ -469,12 +477,54 @@ def test_torch_reader_end_to_end_under_shim(tmp_path):
             # allowlist masking held: only permitted chars survive
             assert all(ch in "ABC0123456789 " for ch in text)
             assert 0.0 <= conf <= 1.0
-        # paragraph mode + flat-text variants execute the same pipeline
-        assert isinstance(reader.readtext(gray, paragraph=True), list)
         assert isinstance(reader.readtext_text(gray), str)
-        # the batch entry points the image kernels call
-        assert reader.readtext_batched([gray]) == [results]
-        assert reader.detect_batched([gray]) == [reader.detect(gray)]
+        # the batch entry points the image kernels call equal the
+        # per-image ones, in every output mode, with at most two
+        # recognizer passes per batch (first pass, contrast retry)
+        assert reader.detect_batched(grays) == [reader.detect(g) for g in grays]
+        passes = []
+        one_pass = reader.recognize_pass
+        reader.recognize_pass = lambda crops: passes.append(len(crops)) or one_pass(crops)
+        for mode in ({}, {"free_merge": True}, {"paragraph": True}):
+            del passes[:]
+            batched = reader.readtext_batched(grays, **mode)
+            assert len(passes) <= 2
+            if not mode:  # one result per crop: the first pass saw them all
+                assert passes[0] == sum(map(len, batched)) >= len(grays)
+            assert batched == [reader.readtext(g, **mode) for g in grays]
+        with pytest.raises(ValueError):
+            reader.detect(gray, optimal_num_chars=2)
+
+
+def test_torch_reader_routes_media_lang_tags(tmp_path, monkeypatch):
+    """get_reader passes the media table's lang tag ("arabic") as
+    lang_list: the torch reader must route it to the gen1 arabic model
+    and read right to left, and fail at construction, naming the file,
+    when that model's weights are absent."""
+    from easyocr_spark.ocr.backends import manifests, np_torch, torch_resnet
+
+    rng = np.random.default_rng(17)
+    monkeypatch.setenv("EASYOCR_SPARK_WEIGHTS_DIR", str(tmp_path))
+    charset = torch_resnet.GEN1_MODELS["arabic"][1]
+    with np_torch.installed():
+        from easyocr_spark.ocr.backends.torch_reader import TorchReader
+
+        for name, manifest in (
+            ("craft_mlt_25k.pth", manifests.craft_checkpoint_manifest()),
+            ("english_g2.pth", manifests.english_g2_checkpoint_manifest()),
+        ):
+            np_torch.save(_fake_ckpt(manifest, rng, np.float32), str(tmp_path / name))
+        with pytest.raises(FileNotFoundError, match="arabic.pth"):
+            TorchReader(lang_list=["arabic"])
+        latin = TorchReader(lang_list=["latin"])
+        assert latin.recognizer.charset == torch_crnn.EN_G2_CHARSET and not latin.rtl
+        np_torch.save(
+            _fake_ckpt(manifests.gen1_checkpoint_manifest(len(charset) + 1), rng, np.float32),
+            str(tmp_path / "arabic.pth"),
+        )
+        reader = TorchReader(lang_list=["arabic"])
+        assert reader.recognizer.charset == charset
+        assert reader.rtl
 
 
 def test_normalize_pad_shape_and_range():
@@ -523,7 +573,7 @@ def test_craft_loads_reference_shaped_state_dict():
 
     with tempfile.NamedTemporaryFile(suffix=".pth") as f:
         torch.save(ref_state, f.name)
-        torch_craft.load_weights(torch_craft.build_model(), f.name)
+        backends.load_weights(torch_craft.build_model(), f.name, torch_craft.remap_key)
 
 
 def _reference_keys_for(mk: str) -> list[str]:
